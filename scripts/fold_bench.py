@@ -28,7 +28,9 @@ def load_run(path):
             d = json.loads(line)
         except json.JSONDecodeError:
             continue
-        if "queries" in d:
+        # Bench prints a per-family subtotal line (fam_* keys) after the
+        # per-query line; folding it would add fam_* keys as queries
+        if "queries" in d and not all(k.startswith("fam_") for k in d["queries"]):
             best = d
     assert best, f"{path}: no bench line with queries"
     return best

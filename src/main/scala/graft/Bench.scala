@@ -147,8 +147,9 @@ object Bench {
     // The driver captures only the ~2.9 KB TAIL of sbt stdout: with 100
     // queries the per-query line above starts before the window and its
     // leading `{"metric":...` is cut → BENCH_r01/r02 recorded
-    // parsed:null. This short (<100 B) total-only line is the FINAL
-    // stdout line, so it always fits the tail intact and parses.
+    // parsed:null. This short (<100 B) total-only line is the
+    // second-to-last stdout line, so it always fits the tail intact
+    // and parses; the fam_* subtotal line below is the final one.
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir"}""")
     // r19 measurement-channel fix (no timing change): the 410-key
     // per-query line above is ~10 KB, so the driver's ~2.9 KB tail

@@ -56,6 +56,14 @@ import java.util.zip.{Deflater, DeflaterOutputStream, InflaterInputStream}
   * dim_1 (min,max) only — dims 2+ degrade to full-range) and v1
   * ("GRFTGDX1": no acronym table; one deflate stream per symbol with
   * the text pool inside, no block index). The writer always emits v3.
+  *
+  * Record decode runs on one [[ByteCursor]] per stream: a reusable,
+  * unsynchronized `byte[]` window that refills in bulk from the current
+  * record source and parses bytes, varints, IEEE doubles and value skips
+  * straight out of the array. The source is the v1 section stream
+  * (inflated or raw), or, for v2/v3, each matching block's own inflater
+  * or length-bounded raw stream, so all three versions share the one
+  * decode path. A read past the source's end throws `EOFException`.
   */
 object GdxCodec {
 
@@ -84,10 +92,17 @@ object GdxCodec {
     */
   val DefaultBlockSize = 4096
 
+  /** Largest symbol arity a header may declare (GMS_MAX_INDEX_DIM). */
+  val MaxDim = 20
+
+  /** Bytes the record cursor pulls from its source per refill. */
+  private[gdx] val CursorWindow = 1 << 15
+
   /** Total records decoded across all record streams in this JVM —
     * observability hook for the block-skip contract (GdxSourceSpec
     * asserts a pushed dim_1 slice decodes a strict subset). A LongAdder
-    * so concurrent partition readers never contend.
+    * so concurrent partition readers never contend; each stream adds
+    * its count once per block and on close, not once per record.
     */
   private[graft] val decodedRecords = new java.util.concurrent.atomic.LongAdder
 
@@ -124,6 +139,88 @@ object GdxCodec {
     if (shift == 28 && (b & 0x78) != 0)
       throw new java.io.IOException("gdx: malformed varint (value overflows Int)")
     result | ((b & 0x7f) << shift)
+  }
+
+  /** The record decoder's input: a reusable, unsynchronized read window
+    * over the current source. `reset` points it at the next source
+    * (a v1 section stream, or one v2/v3 block) and drops any buffered
+    * bytes; reads then refill `window` bytes at a time with one bulk
+    * `read`, so a record costs array loads instead of one synchronized
+    * stream call per byte. `what` names the data in error messages.
+    */
+  private[gdx] final class ByteCursor(what: String, window: Int = CursorWindow) {
+    private val buf = new Array[Byte](window)
+    private var pos = 0
+    private var lim = 0
+    private var src: InputStream = null
+
+    def reset(in: InputStream): Unit = { src = in; pos = 0; lim = 0 }
+
+    /** Refill the window; false at the end of the source. */
+    private def refill(): Boolean = {
+      var n = 0
+      while (n == 0) n = src.read(buf, 0, buf.length)
+      if (n < 0) false else { pos = 0; lim = n; true }
+    }
+
+    private def fill(): Unit =
+      if (!refill()) throw new EOFException(s"gdx: truncated record data in $what")
+
+    def byte(): Byte = {
+      if (pos == lim) fill()
+      val b = buf(pos)
+      pos += 1
+      b
+    }
+
+    /** [[readVarInt]] on the window, with the same two guards. */
+    def varInt(): Int = {
+      var shift = 0
+      var result = 0
+      var b = byte()
+      while ((b & 0x80) != 0) {
+        result |= (b & 0x7f) << shift
+        shift += 7
+        if (shift > 28)
+          throw new java.io.IOException("gdx: malformed varint (>5 bytes)")
+        b = byte()
+      }
+      if (shift == 28 && (b & 0x78) != 0)
+        throw new java.io.IOException("gdx: malformed varint (value overflows Int)")
+      result | ((b & 0x7f) << shift)
+    }
+
+    /** Big-endian 8 bytes, the `DataOutputStream.writeDouble` layout. */
+    def long(): Long = {
+      var v = 0L
+      if (lim - pos >= 8) {
+        val end = pos + 8
+        while (pos < end) { v = (v << 8) | (buf(pos) & 0xff); pos += 1 }
+      } else {
+        var i = 0
+        while (i < 8) { v = (v << 8) | (byte() & 0xff); i += 1 }
+      }
+      v
+    }
+
+    def skip(n: Int): Unit = {
+      var left = n
+      while (left > 0) {
+        if (pos == lim) fill()
+        val k = math.min(left, lim - pos)
+        pos += k
+        left -= k
+      }
+    }
+
+    /** The window as a plain stream (-1 at the source's end), for the
+      * few fields parsed with `DataInputStream` (the v1 text pool).
+      */
+    def asStream: InputStream = new InputStream {
+      override def read(): Int =
+        if (pos < lim || refill()) { val b = buf(pos) & 0xff; pos += 1; b }
+        else -1
+    }
   }
 
   // ------------------------------------------------------------ publish
@@ -434,6 +531,11 @@ object GdxCodec {
         val expl = in.readUTF()
         val typ = in.readByte().toInt
         val dim = in.readByte().toInt
+        // a hostile dim would otherwise surface far away, as a
+        // NegativeArraySizeException in the record stream
+        if (dim < 0 || dim > MaxDim)
+          throw new java.io.IOException(
+            s"gdx: $path: symbol $name declares dim $dim, outside 0..$MaxDim")
         val userInfo = readVarInt(in)
         val domains = Seq.fill(dim)(in.readUTF())
         val nRec = readVarInt(in)
@@ -485,9 +587,18 @@ object GdxCodec {
     private val fin = new FileInputStream(path)
     /** Records this stream actually decoded (observability: block skip). */
     var decoded: Long = 0L
+    // the share of `decoded` already added to decodedRecords
+    private var published = 0L
+    // every record byte is read through this one cursor, for all versions
+    private val cursor = new ByteCursor(meta.name)
     // everything after the open can throw on a truncated/corrupt shard;
     // a constructor that throws leaves the caller no handle to close,
     // so the fd must be released HERE or task retries leak one each
+    //
+    // `base` is the section stream: for v2/v3 the buffered raw bytes
+    // that blocks are bounded (or skipped) on, for v1 the record source
+    // itself. v1 has no block index: `blocks` is empty and `remaining`
+    // covers the whole symbol.
     private val (base, texts, blocks) =
       try {
         var toSkip = meta.offset
@@ -522,29 +633,26 @@ object GdxCodec {
               BlockMeta(rc, mins, maxs, readVarInt(din))
             }
           }
-          (din, ts, bs)
+          (din: InputStream, ts, bs)
         } else {
           // v1: one deflate stream for the whole symbol, pool inside
-          val din = new DataInputStream(new BufferedInputStream(
-            if (compressed) new InflaterInputStream(bounded) else bounded, 1 << 16))
-          val ts = Vector.fill(readVarInt(din))(din.readUTF())
-          (din, ts, Vector(BlockMeta(meta.records,
-            Vector.fill(meta.dim)(0), Vector.fill(meta.dim)(Int.MaxValue), -1)))
+          val src = if (compressed) new InflaterInputStream(bounded) else bounded
+          cursor.reset(src)
+          val pool = new DataInputStream(cursor.asStream)
+          val ts = Vector.fill(readVarInt(pool))(pool.readUTF())
+          (src, ts, Vector.empty[BlockMeta])
         }
       } catch {
         case e: Throwable => fin.close(); throw e
       }
     private val prev = new Array[Int](meta.dim)
     private var blockIdx = 0
-    private var remaining = 0
-    // v1: the section-level stream IS the record stream; v2: per-block
-    private var in: DataInputStream = if (version >= 2) null else base
+    private var remaining = if (version >= 2) 0 else meta.records
     private var blockBound: BoundedInputStream = null
     // per-block inflaters are ended EXPLICITLY (closing the
     // InflaterInputStream would cascade-close the shared base stream);
     // without end() each block leaks native zlib memory until GC
     private var blockInflater: java.util.zip.Inflater = null
-    if (version < 2) remaining = meta.records
 
     private def blockMatches(b: BlockMeta): Boolean =
       dimAllowed.forall { case (d, allowed) =>
@@ -554,11 +662,17 @@ object GdxCodec {
           allowed.exists(k => k >= b.mins(d) && k <= b.maxs(d))
       }
 
-    /** Position `in` inside a block with records left; false when the
-      * section is exhausted. v2 only (v1 never calls: remaining covers
-      * the whole symbol).
+    private def publishDecoded(): Unit = if (decoded != published) {
+      decodedRecords.add(decoded - published)
+      published = decoded
+    }
+
+    /** Point the cursor at a block with records left; false when the
+      * section is exhausted. Called only with `remaining == 0`, so the
+      * previous block's count is published first.
       */
     private def ensureBlock(): Boolean = {
+      publishDecoded()
       while (remaining == 0 && blockIdx < blocks.length) {
         if (blockBound != null) {
           // drain to the block boundary: the inflater may finish without
@@ -578,16 +692,17 @@ object GdxCodec {
             toSkip -= s
           }
         } else {
+          // blockBound keeps the compressed boundary exact; the cursor
+          // reads the block's decoded bytes a window at a time. The
+          // inflater takes the whole blob (up to 64 KiB) per input fill,
+          // not the default 512 bytes.
           blockBound = new BoundedInputStream(base, b.len)
-          // the buffered layer sits on the UNCOMPRESSED side: varint/
-          // byte reads otherwise call Inflater.inflate once per byte
-          // (r14 probe: a large share of decode time). The compressed
-          // boundary stays exact — blockBound caps the inflater.
-          in = new DataInputStream(new BufferedInputStream(
+          cursor.reset(
             if (compressed) {
               blockInflater = new java.util.zip.Inflater()
-              new InflaterInputStream(blockBound, blockInflater)
-            } else blockBound, 1 << 15))
+              new InflaterInputStream(blockBound, blockInflater,
+                math.max(1, math.min(b.len, 1 << 16)))
+            } else blockBound)
           java.util.Arrays.fill(prev, 0) // delta resets per block
           remaining = b.recCount
         }
@@ -595,7 +710,7 @@ object GdxCodec {
       remaining > 0
     }
 
-    override def hasNext: Boolean = remaining > 0 || (version >= 2 && ensureBlock())
+    override def hasNext: Boolean = remaining > 0 || ensureBlock()
 
     /** Decode the next record into CALLER-OWNED arrays — the flyweight
       * path the columnar reader rides (r14): no per-record GdxRecord /
@@ -622,20 +737,23 @@ object GdxCodec {
       * calls before the next record.
       */
     def nextKeysInto(keys: Array[Int]): Int = {
-      if (version >= 2 && remaining == 0 && !ensureBlock())
+      if (remaining == 0 && !ensureBlock())
         throw new NoSuchElementException(s"gdx: past end of ${meta.name}")
-      val first = in.readByte().toInt
+      // firstChanged is 0..dim; anything else would index `prev` wild
+      val first = cursor.byte() & 0xff
+      if (first > meta.dim)
+        throw new java.io.IOException(
+          s"gdx: corrupt record in ${meta.name}: first changed dim $first > ${meta.dim}")
       var i = first
-      while (i < meta.dim) { prev(i) = readVarInt(in); i += 1 }
+      while (i < meta.dim) { prev(i) = cursor.varInt(); i += 1 }
       System.arraycopy(prev, 0, keys, 0, meta.dim)
       var t = 0
       meta.typ match {
-        case SymbolType.Set | SymbolType.Alias => t = readVarInt(in)
+        case SymbolType.Set | SymbolType.Alias => t = cursor.varInt()
         case _ => ()
       }
       remaining -= 1
       decoded += 1
-      decodedRecords.increment()
       t
     }
 
@@ -651,7 +769,7 @@ object GdxCodec {
       if (n == 0) { if (values.length > 0) values(0) = 0.0 }
       else {
         var f = 0
-        while (f < n) { values(f) = in.readDouble(); f += 1 }
+        while (f < n) { values(f) = java.lang.Double.longBitsToDouble(cursor.long()); f += 1 }
       }
     }
 
@@ -660,14 +778,7 @@ object GdxCodec {
       * record). Width comes from [[GdxCodec.valueByteWidth]] — shared
       * with [[readValuesInto]] by construction.
       */
-    def skipValues(): Unit = {
-      var left = GdxCodec.valueByteWidth(meta.typ)
-      while (left > 0) {
-        val s = in.skipBytes(left)
-        if (s <= 0) throw new EOFException(s"truncated record in ${meta.name}")
-        left -= s
-      }
-    }
+    def skipValues(): Unit = cursor.skip(GdxCodec.valueByteWidth(meta.typ))
 
     def textAt(t: Int): String = texts(t - 1)
 
@@ -687,6 +798,7 @@ object GdxCodec {
     }
 
     override def close(): Unit = {
+      publishDecoded()
       if (blockInflater != null) { blockInflater.end(); blockInflater = null }
       base.close()
       fin.close()

@@ -158,8 +158,8 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
     }.getOrElse(return shards)
     // Range pruning is exact only when default-locale lowercasing
     // coincides with Locale.ROOT lowercasing for every string: the
-    // decoder's uelIndex deliberately unions BOTH lowercases (see the
-    // GdxSymbolReader.uelIndex comment), while the manifest records
+    // decoder's label resolution deliberately unions BOTH lowercases
+    // (see GdxSymbolDecode.resolveLabels), while the manifest records
     // only ROOT-lowercased [lo, hi] — so under a divergent locale a
     // pushed label can match a shard whose ROOT-range excludes it
     // (tr: pushed dotless 'ıstanbul' vs stored "istanbul"), and
@@ -369,49 +369,17 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   val header = GdxCodec.readHeader(path)
   val meta = GdxTable.resolveSymbol(header, symbol, path)
 
-  // label filters → UEL index predicates, resolved once here. A label
-  // absent from this shard's UEL table matches nothing. Multiple pushed
-  // filters on the same dim (`=` + `IN`) intersect — matching
-  // prunedByManifest's semantics — rather than last-wins.
+  // label filters → UEL index predicates, resolved once here, in one
+  // pass over this shard's UEL table (see resolveLabels)
   private val dimFilters: Map[Int, Set[Int]] =
-    pushed.groupBy(_.dim).map { case (i, fs) =>
-      i -> fs.map(_.labels.flatMap(lookup)).reduce(_ intersect _)
-    }
-  // O(1) per pushed label: one lowercased index map per reader. Every
-  // case-duplicate index is kept: the codec does not forbid a UEL
-  // table carrying both 'Foo' and 'FOO' (only the builders dedup), and
-  // a first-occurrence-wins map would make the pushed filter match a
-  // SUBSET of the case-insensitive predicate — rows silently dropped
-  // that the residual re-check could never restore (it only sees rows
-  // the decoder emitted).
-  // ... and BOTH the Locale.ROOT and default-locale lowercases of each
-  // label are indexed when they differ (tr/az JVMs: dotted/dotless I):
-  // Spark's lower() takes the default-locale path for non-ASCII
-  // strings, so a ROOT-only index could make the pushed filter match a
-  // SUBSET of what the engine-evaluated predicate matches — the same
-  // silent row loss, via locale instead of case-duplicates. Indexing
-  // the union keeps the decoder a strict superset under any locale;
-  // the residual re-check stays exact.
-  private lazy val uelIndex: Map[String, Array[Int]] = {
-    val m = new scala.collection.mutable.HashMap[
-      String, scala.collection.mutable.ArrayBuffer[Int]]()
-    def add(k: String, i: Int): Unit =
-      m.getOrElseUpdate(k, new scala.collection.mutable.ArrayBuffer[Int]) += i
-    var i = 0
-    while (i < header.uels.length) {
-      val root = header.uels(i).toLowerCase(java.util.Locale.ROOT)
-      val dflt = header.uels(i).toLowerCase
-      add(root, i)
-      if (dflt != root) add(dflt, i)
-      i += 1
-    }
-    m.view.mapValues(_.toArray.distinct).toMap
-  }
-  private def lookup(label: String): Array[Int] = {
-    val root = uelIndex.getOrElse(label.toLowerCase(java.util.Locale.ROOT), Array.empty[Int])
-    val dl = label.toLowerCase
-    if (dl == label.toLowerCase(java.util.Locale.ROOT)) root
-    else (root ++ uelIndex.getOrElse(dl, Array.empty[Int])).distinct
+    GdxSymbolDecode.resolveLabels(header.uels, pushed)
+  // the same predicate on primitive arrays for the per-record residual:
+  // the filtered dim ordinals, and per ordinal a UEL-indexed admit table
+  private val filterDims: Array[Int] = dimFilters.keys.toArray
+  private val admits: Array[Array[Boolean]] = filterDims.map { d =>
+    val a = new Array[Boolean](header.uels.length)
+    dimFilters(d).foreach(a(_) = true)
+    a
   }
 
   // shard skip: a pushed label absent from this shard's UEL table can
@@ -425,7 +393,7 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   // per-dim index sets ride into the stream, where the block zone maps
   // skip non-matching blocks WITHOUT inflating them (dim_1
   // range-exactly on sorted layouts — a one-label slice decodes ~one
-  // block; dims 2+ parquet-stats-style on v3 files); `keep` below
+  // block; dims 2+ parquet-stats-style on v3 files); `keepKeys` below
   // still re-checks per record, so the skip is a pure superset pass.
   private val stream: GdxCodec.GdxRecordStream =
     if (shardCanMatch) GdxCodec.openRecordStream(path, header, meta, dimFilters)
@@ -444,51 +412,43 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   def mapValue(v: Double): Double =
     if (raw) v else SpecialValues.toDouble(v)
 
-  private def keep(r: GdxRecord): Boolean =
-    dimFilters.forall { case (i, allowed) => allowed.contains(r.keys(i)) }
-
   /** Next record passing the residual per-record filter; null at end. */
   def nextKept(): GdxRecord = {
     while (records.hasNext) {
       val r = records.next()
-      if (keep(r)) return r
+      if (keepKeys(r.keys)) return r
     }
     null
   }
 
   /** Flyweight twin of [[nextKept]] for the columnar reader: decodes
     * into caller-owned arrays (no per-record allocation), returning the
-    * 1-based text-pool index (0 = none) or -1 at stream end.
+    * 1-based text-pool index (0 = none) or -1 at stream end. Values
+    * materialize lazily (r15): keys decode first, and the value bytes
+    * of a record the residual filter kills are skipped, never
+    * assembled — on selective scans whose blocks still match the zone
+    * maps, that is most of the per-corpse decode cost.
     */
-  // LOCAL-MODE/PROBE-ONLY A/B escape hatch (ColProbe): read from
-  // sys.props at scan construction ON THE EXECUTOR, so a driver-set
-  // property does NOT propagate off local mode — by design. The lazy
-  // path is the production default everywhere; this knob exists only
-  // so a single-JVM probe can measure eager-vs-lazy on one host.
-  private val lazyValues =
-    sys.props.getOrElse("graft.gdx.lazyValues", "true").toBoolean
-
   def nextKeptInto(keys: Array[Int], values: Array[Double]): Int = {
     if (stream == null) return -1
     while (stream.hasNext) {
-      if (lazyValues) {
-        // lazy value materialization (r15): keys decode first; the value
-        // bytes of a record the residual filter kills are SKIPPED, never
-        // assembled — on selective scans whose blocks still match the
-        // zone maps, that is most of the per-corpse decode cost
-        val t = stream.nextKeysInto(keys)
-        if (keepKeys(keys)) { stream.readValuesInto(values); return t }
-        else stream.skipValues()
-      } else {
-        val t = stream.nextInto(keys, values)
-        if (keepKeys(keys)) return t
-      }
+      val t = stream.nextKeysInto(keys)
+      if (keepKeys(keys)) { stream.readValuesInto(values); return t }
+      else stream.skipValues()
     }
     -1
   }
 
-  private def keepKeys(keys: Array[Int]): Boolean =
-    dimFilters.forall { case (i, allowed) => allowed.contains(keys(i)) }
+  private def keepKeys(keys: Array[Int]): Boolean = {
+    var i = 0
+    while (i < filterDims.length) {
+      val k = keys(filterDims(i))
+      val a = admits(i)
+      if (k >= a.length || !a(k)) return false
+      i += 1
+    }
+    true
+  }
 
   def textOf(t: Int): String = stream.textAt(t)
 
@@ -500,6 +460,51 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   }
 
   def close(): Unit = if (stream != null) stream.close()
+}
+
+private[sources] object GdxSymbolDecode {
+
+  /** Pushed label filters → admissible UEL indices per dim, in ONE pass
+    * over the shard's UEL table (no per-task index of the whole table).
+    * A label absent from the table matches nothing. Multiple pushed
+    * filters on the same dim (`=` + `IN`) intersect — matching
+    * prunedByManifest's semantics — rather than last-wins.
+    *
+    * A UEL is admitted when either of its lowercases (Locale.ROOT and
+    * the default locale) equals either lowercase of a pushed label, so
+    * the match stays a SUPERSET of the engine-evaluated predicate:
+    *  - every case-duplicate is kept: the codec does not forbid a UEL
+    *    table carrying both 'Foo' and 'FOO' (only the builders dedup),
+    *    and a first-occurrence-wins match would drop rows the residual
+    *    re-check could never restore (it only sees rows the decoder
+    *    emitted);
+    *  - both lowercases matter on tr/az JVMs (dotted/dotless I): Spark's
+    *    lower() takes the default-locale path for non-ASCII strings, so
+    *    a ROOT-only match could lose rows the same way.
+    */
+  def resolveLabels(uels: IndexedSeq[String],
+      pushed: Seq[DimLabelFilter]): Map[Int, Set[Int]] = {
+    if (pushed.isEmpty) return Map.empty
+    // lowercase form → positions (in `pushed`) of the filters naming it
+    val wanted = scala.collection.mutable.HashMap.empty[String, List[Int]]
+    for ((f, fi) <- pushed.zipWithIndex; l <- f.labels) {
+      val root = l.toLowerCase(java.util.Locale.ROOT)
+      for (k <- Seq(root, l.toLowerCase).distinct)
+        wanted(k) = fi :: wanted.getOrElse(k, Nil)
+    }
+    val hits = Array.fill(pushed.length)(scala.collection.mutable.BitSet.empty)
+    var i = 0
+    while (i < uels.length) {
+      val root = uels(i).toLowerCase(java.util.Locale.ROOT)
+      wanted.get(root).foreach(_.foreach(hits(_) += i))
+      val dflt = uels(i).toLowerCase
+      if (dflt != root) wanted.get(dflt).foreach(_.foreach(hits(_) += i))
+      i += 1
+    }
+    pushed.indices.groupBy(pushed(_).dim).map { case (d, fis) =>
+      d -> fis.map(hits(_).toSet).reduce(_ intersect _)
+    }
+  }
 }
 
 class GdxSymbolReader(path: String, symbol: String, fullSchema: StructType,

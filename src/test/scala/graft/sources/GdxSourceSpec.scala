@@ -605,6 +605,45 @@ class GdxSourceSpec extends AnyFunSuite {
       s"both case-duplicates must survive the pushdown, got ${got.toSeq}")
   }
 
+  test("one-pass label resolution admits the same UEL indices as the whole-table map, under tr") {
+    // the whole-table index the resolver replaced: every UEL under both
+    // its ROOT and default-locale lowercase, probed with both lowercases
+    // of the label
+    def viaMap(uels: IndexedSeq[String], label: String): Set[Int] = {
+      val m = uels.indices.flatMap { i =>
+        Seq(uels(i).toLowerCase(java.util.Locale.ROOT), uels(i).toLowerCase).distinct.map(_ -> i)
+      }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+      Seq(label.toLowerCase(java.util.Locale.ROOT), label.toLowerCase)
+        .flatMap(m.getOrElse(_, Set.empty[Int])).toSet
+    }
+    val uels = Vector("Istanbul", "istanbul", "\u0130stanbul", "\u0131stanbul", "ISTANBUL",
+      "I", "i", "\u0130", "\u0131", "Foo", "FOO", "foo", "bar", "stra\u00dfe", "STRASSE")
+    val labels = Seq("istanbul", "\u0131stanbul", "i\u0307stanbul", "i", "\u0131", "I",
+      "foo", "FOO", "bar", "strasse", "stra\u00dfe", "missing")
+    val saved = java.util.Locale.getDefault
+    try {
+      for (loc <- Seq("tr", "az", "lt", "en").map(java.util.Locale.forLanguageTag)) {
+        java.util.Locale.setDefault(loc)
+        for (l <- labels) {
+          val pushed = l.toLowerCase(java.util.Locale.ROOT)
+          val got = GdxSymbolDecode.resolveLabels(uels, Seq(DimLabelFilter(0, Set(pushed))))
+          assert(got == Map(0 -> viaMap(uels, pushed)), s"label '$l' under $loc")
+        }
+        // IN unions its labels; two filters on one dim intersect; dims
+        // resolve independently
+        val in = Set("istanbul", "foo")
+        val got = GdxSymbolDecode.resolveLabels(uels, Seq(
+          DimLabelFilter(1, in), DimLabelFilter(1, Set("foo", "bar")), DimLabelFilter(0, Set("i"))))
+        assert(got == Map(
+          1 -> (in.flatMap(viaMap(uels, _)) intersect Set("foo", "bar").flatMap(viaMap(uels, _))),
+          0 -> viaMap(uels, "i")), s"under $loc")
+      }
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      assert(GdxSymbolDecode.resolveLabels(uels, Seq(DimLabelFilter(0, Set("\u0131stanbul"))))(0)
+        .contains(uels.indexOf("ISTANBUL")), "tr lowercases ISTANBUL to the dotless form")
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("defaultFill on a raw scan: EPS bound = explicit zero, never the type default") {
     val b = new GdxBuilder()
     // v1: lower stored as EPS — GAMS's marker for an EXPLICIT 0 bound
