@@ -1,8 +1,12 @@
 package graft.gdx
 
 import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, FileInputStream, FileOutputStream, InputStream}
+import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import java.util.zip.{Deflater, DeflaterOutputStream, InflaterInputStream}
+import java.util.zip.{Inflater, InflaterInputStream}
+
+import net.jpountz.lz4.LZ4Factory
+import net.jpountz.xxhash.{XXHash32, XXHashFactory}
 
 /** Binary codec for the graft GDX container.
   *
@@ -10,14 +14,14 @@ import java.util.zip.{Deflater, DeflaterOutputStream, InflaterInputStream}
   * GAMS-dev/gdx; SURVEY.md §1.1): per-symbol sparse coordinate lists
   * with delta-encoded keys (only the first-changed dimension onward is
   * rewritten per record), one global ordered UEL table, a file-level
-  * acronym table, special-value sentinels in-band, optional zlib
+  * acronym table, special-value sentinels in-band, optional LZ4
   * compression per data block. The byte layout is re-derived (no
   * GAMS-produced files exist in this environment — SURVEY.md §0) and
   * gated on round-trip property tests (GdxCodecSpec).
   *
-  * Layout (v3, magic "GRFTGDX3"):
+  * Layout (v4, magic "GRFTGDX4"):
   * {{{
-  * magic "GRFTGDX3" | producer UTF | compressed byte
+  * magic "GRFTGDX4" | producer UTF | codec byte (0 = none, 1 = LZ4)
   * uelCount varint  | uel UTF ×N
   * acrCount varint  | per acronym: index varint, name UTF, text UTF
   * symCount varint
@@ -32,8 +36,20 @@ import java.util.zip.{Deflater, DeflaterOutputStream, InflaterInputStream}
   * per block: recCount varint
   *          | per dim d: minKey_d varint, maxKey_d varint   (zone map)
   *          | blobLen varint
-  * block blobs back-to-back (each independently zlib-deflated when compressed=1)
+  * block blobs back-to-back
   * }}}
+  * With codec 0 a blob is the block's raw record bytes. With codec 1 it
+  * is
+  * {{{
+  * rawLen int32 (big-endian) | XXH32(raw bytes, seed 0) int32 | LZ4 block
+  * }}}
+  * and the reader checks rawLen against the block's record count (at
+  * most [[maxRecordBytes]] each) and [[MaxBlockRawBytes]] before it
+  * allocates anything, then decompresses the whole block with one call
+  * and checks the length and the checksum, so a damaged block fails as
+  * an `IOException` naming the file and the symbol instead of decoding
+  * to wrong records.
+  *
   * Inside a block, per record: firstChanged byte, then varint keys for
   * dims firstChanged..dim-1, then values (set: varint textIndex+1 or 0;
   * parameter: 1 double; var/equ: 5 doubles). Doubles are raw IEEE bits.
@@ -41,7 +57,7 @@ import java.util.zip.{Deflater, DeflaterOutputStream, InflaterInputStream}
   * independently decodable — that is what buys the sparse BLOCK INDEX:
   * each block carries a PER-DIMENSION (min,max) UEL-index ZONE MAP
   * (2·dim varints — still noise next to 4096 records), and a pushed
-  * label filter on ANY dimension skips whole blocks without inflating
+  * label filter on ANY dimension skips whole blocks without reading
   * them. dim_1 pruning is range-exact (writer paths emit sorted,
   * dim_1-clustered records, so a one-label slice decodes ~one block —
   * the sorted-first-dim range skip a 100 TB slice needs); dim_2+ zone
@@ -52,24 +68,36 @@ import java.util.zip.{Deflater, DeflaterOutputStream, InflaterInputStream}
   * plans one InputPartition per symbol and skips other sections via
   * dataLen without decompressing them.
   *
-  * Older files remain readable: v2 ("GRFTGDX2": block index carries
-  * dim_1 (min,max) only — dims 2+ degrade to full-range) and v1
-  * ("GRFTGDX1": no acronym table; one deflate stream per symbol with
-  * the text pool inside, no block index). The writer always emits v3.
+  * Older files remain readable; there the header byte is a compressed
+  * flag whose 1 means zlib deflate, read as [[CodecZlib]], which no
+  * writer emits. v3 ("GRFTGDX3") has the v4 layout with each
+  * compressed blob one deflate stream; v2 ("GRFTGDX2") also carries
+  * dim_1 (min,max) only in its block index, so dims 2+ degrade to full
+  * range; v1 ("GRFTGDX1") has no acronym table and one deflate stream
+  * per symbol with the text pool inside, no block index. The writer
+  * always emits v4.
   *
-  * Record decode runs on one [[ByteCursor]] per stream: a reusable,
-  * unsynchronized `byte[]` window that refills in bulk from the current
-  * record source and parses bytes, varints, IEEE doubles and value skips
-  * straight out of the array. The source is the v1 section stream
-  * (inflated or raw), or, for v2/v3, each matching block's own inflater
-  * or length-bounded raw stream, so all three versions share the one
-  * decode path. A read past the source's end throws `EOFException`.
+  * Record decode runs on one [[ByteCursor]] per stream, a reusable,
+  * unsynchronized cursor that parses bytes, varints, IEEE doubles and
+  * value skips straight out of an array. Each matching v2–v4 block is
+  * read whole with one bulk read; the cursor then reads a raw blob, or
+  * a decoded LZ4 block, in place, and refills its window from a zlib
+  * blob's inflater. For v1 it refills from the section stream. All four
+  * versions share the one record decode; a read past the data throws
+  * `EOFException`.
   */
 object GdxCodec {
 
   val Magic: Array[Byte] = "GRFTGDX1".getBytes(StandardCharsets.US_ASCII)
   val Magic2: Array[Byte] = "GRFTGDX2".getBytes(StandardCharsets.US_ASCII)
   val Magic3: Array[Byte] = "GRFTGDX3".getBytes(StandardCharsets.US_ASCII)
+  val Magic4: Array[Byte] = "GRFTGDX4".getBytes(StandardCharsets.US_ASCII)
+
+  /** Block codec ids: the v4 header byte. */
+  val CodecNone = 0
+  val CodecLz4 = 1
+  /** A v1–v3 header's compressed flag: zlib deflate, read-only. */
+  val CodecZlib = -1
 
   /** Byte width of one record's VALUE field(s) on the wire, per symbol
     * type: sets/aliases carry none (their text index lives with the
@@ -85,7 +113,7 @@ object GdxCodec {
     case _ => 40
   }
 
-  /** Records per data block (v2). Small enough that a block inflates in
+  /** Records per data block (v2). Small enough that a block decodes in
     * L2-cache-sized chunks and a one-label slice decodes ~one block;
     * large enough that the per-block index (4 varints) is noise
     * (<0.1% of encoded size at typical ~20-60 B/record).
@@ -94,6 +122,26 @@ object GdxCodec {
 
   /** Largest symbol arity a header may declare (GMS_MAX_INDEX_DIM). */
   val MaxDim = 20
+
+  /** Widest encoding of one record: the firstChanged byte, `dim` varint
+    * keys of at most 5 bytes, and at most 40 value bytes.
+    */
+  def maxRecordBytes(dim: Int): Long = 1L + 5L * dim + 40
+
+  /** Cap on one block's raw bytes. The writer cuts a block before it
+    * would pass this, whatever its `blockSize`; a reader rejects an LZ4
+    * block that claims more. 4096 records of the widest kind take 564 KiB.
+    */
+  val MaxBlockRawBytes: Int = 1 << 24
+
+  /** LZ4 block codec. The JNI build wraps liblz4's bounds-checked
+    * `LZ4_decompress_safe`; without it, the pure-Java build whose every
+    * access is JVM bounds-checked (not the `sun.misc.Unsafe` one).
+    */
+  private lazy val lz4: LZ4Factory =
+    try LZ4Factory.nativeInstance() catch { case _: Throwable => LZ4Factory.safeInstance() }
+  private lazy val xxh32: XXHash32 = XXHashFactory.fastestInstance().hash32()
+  private val ChecksumSeed = 0
 
   /** Bytes the record cursor pulls from its source per refill. */
   private[gdx] val CursorWindow = 1 << 15
@@ -141,23 +189,34 @@ object GdxCodec {
     result | ((b & 0x7f) << shift)
   }
 
-  /** The record decoder's input: a reusable, unsynchronized read window
-    * over the current source. `reset` points it at the next source
-    * (a v1 section stream, or one v2/v3 block) and drops any buffered
-    * bytes; reads then refill `window` bytes at a time with one bulk
-    * `read`, so a record costs array loads instead of one synchronized
-    * stream call per byte. `what` names the data in error messages.
+  /** The record decoder's input: a reusable, unsynchronized cursor
+    * over an array. `reset(bytes, len)` points it at a whole block
+    * already in memory; `reset(in)` at a stream (a v1 section, or one
+    * zlib block's inflater) that it refills `window` bytes at a time
+    * with one bulk `read`. Either way a record costs array loads
+    * instead of one synchronized stream call per byte. `what` names the
+    * data in error messages.
     */
   private[gdx] final class ByteCursor(what: String, window: Int = CursorWindow) {
-    private val buf = new Array[Byte](window)
+    // allocated on the first stream source: LZ4 and raw blocks never need it
+    private var windowBuf: Array[Byte] = null
+    private var buf: Array[Byte] = null
     private var pos = 0
     private var lim = 0
     private var src: InputStream = null
 
-    def reset(in: InputStream): Unit = { src = in; pos = 0; lim = 0 }
+    def reset(in: InputStream): Unit = {
+      if (windowBuf == null) windowBuf = new Array[Byte](window)
+      buf = windowBuf; src = in; pos = 0; lim = 0
+    }
+
+    /** Read `bytes(0 until len)` in place; the end of them is the end of the data. */
+    def reset(bytes: Array[Byte], len: Int): Unit = {
+      buf = bytes; src = null; pos = 0; lim = len
+    }
 
     /** Refill the window; false at the end of the source. */
-    private def refill(): Boolean = {
+    private def refill(): Boolean = src != null && {
       var n = 0
       while (n == 0) n = src.read(buf, 0, buf.length)
       if (n < 0) false else { pos = 0; lim = n; true }
@@ -290,14 +349,12 @@ object GdxCodec {
     var fullyWritten = false
     val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(tmp), 1 << 16))
     try {
-      out.write(Magic3)
-      out.writeUTF(container.producer)
-      out.writeBoolean(compress)
-      writeVarInt(out, container.uels.size)
-      container.uels.foreach(out.writeUTF)
-      writeAcronyms(out, container.acronyms)
-      writeVarInt(out, container.symbols.size)
-      container.symbols.foreach { sym => writeSymbol(out, sym, compress, blockSize) }
+      writeFile(out, container.producer, compress, container.uels, container.acronyms,
+          container.symbols) { sym =>
+        val sorted = sortRecords(sym.records)
+        val blob = encodeRecords(sym, sorted, compress, blockSize)
+        Section(sorted.size, blob.length, _.write(blob))
+      }
       out.close()
       fullyWritten = true
       publishAtomically(tmp, new java.io.File(path))
@@ -312,29 +369,41 @@ object GdxCodec {
     }
   }
 
-  private[gdx] def writeAcronyms(out: DataOutputStream, acrs: Seq[GdxAcronym]): Unit = {
-    writeVarInt(out, acrs.size)
-    acrs.foreach { a =>
-      writeVarInt(out, a.index)
-      out.writeUTF(a.name)
-      out.writeUTF(a.text)
-    }
-  }
+  /** One symbol's data section as [[writeFile]] takes it: its record
+    * count, its length in bytes, and how to write it.
+    */
+  private[gdx] final case class Section(records: Int, dataLen: Int, writeTo: java.io.OutputStream => Unit)
 
-  private def writeSymbol(out: DataOutputStream, sym: GdxSymbol, compress: Boolean,
-      blockSize: Int): Unit = {
-    out.writeUTF(sym.name)
-    out.writeUTF(sym.explText)
-    out.writeByte(sym.typ)
-    out.writeByte(sym.dim)
-    writeVarInt(out, sym.userInfo)
-    val doms = if (sym.domains.size == sym.dim) sym.domains else Seq.fill(sym.dim)("*")
-    doms.foreach(out.writeUTF)
-    val sorted = sortRecords(sym.records)
-    writeVarInt(out, sorted.size)
-    val blob = encodeRecords(sym, sorted, compress, blockSize)
-    writeVarInt(out, blob.length)
-    out.write(blob)
+  /** Serialize a whole file: magic, producer, codec byte, UEL table,
+    * acronym table, then per symbol its catalog entry and
+    * `section(symbol)`. The eager writer and the streaming shard
+    * encoder both write through here, so the format version and the
+    * codec byte are set in this one place.
+    */
+  private[gdx] def writeFile(out: DataOutputStream, producer: String, compress: Boolean,
+      uels: collection.Seq[String], acronyms: Seq[GdxAcronym], symbols: Seq[GdxSymbol])(
+      section: GdxSymbol => Section): Unit = {
+    out.write(Magic4)
+    out.writeUTF(producer)
+    out.writeByte(if (compress) CodecLz4 else CodecNone)
+    writeVarInt(out, uels.size)
+    uels.foreach(out.writeUTF)
+    writeVarInt(out, acronyms.size)
+    acronyms.foreach { a => writeVarInt(out, a.index); out.writeUTF(a.name); out.writeUTF(a.text) }
+    writeVarInt(out, symbols.size)
+    symbols.foreach { sym =>
+      out.writeUTF(sym.name)
+      out.writeUTF(sym.explText)
+      out.writeByte(sym.typ)
+      out.writeByte(sym.dim)
+      writeVarInt(out, sym.userInfo)
+      val doms = if (sym.domains.size == sym.dim) sym.domains else Seq.fill(sym.dim)("*")
+      doms.foreach(out.writeUTF)
+      val s = section(sym)
+      writeVarInt(out, s.records)
+      writeVarInt(out, s.dataLen)
+      s.writeTo(out)
+    }
   }
 
   /** Record order is WRITER-DEPENDENT: GdxBuilder (this path) emits
@@ -354,27 +423,32 @@ object GdxCodec {
 
   /** One block's index entry: record count, per-dimension UEL-index
     * zone map (mins(d)..maxs(d) — v2 files carry dim_1 only, the rest
-    * degrade to full range), and the (possibly deflated) blob length
+    * degrade to full range), and the (possibly compressed) blob length
     * in bytes.
     */
   private[gdx] final case class BlockMeta(recCount: Int, mins: Vector[Int],
       maxs: Vector[Int], len: Int)
 
   /** Shared per-record block encoder: delta-encodes records into
-    * independently-deflated fixed-record-count blocks, tracking each
-    * block's first-dim key range. ONE implementation for the eager
-    * writer and the streaming shard encoder, so the two paths stay
-    * byte-identical for identically-ordered input (GdxStreamEncoderSpec
-    * pins this). The caller owns the text pool (pool ids arrive here
-    * pre-resolved) and writes the section header; this class only emits
-    * block blobs to `sink` and returns their index.
+    * independently decodable fixed-record-count blocks (LZ4-compressed
+    * when `compress`), tracking each block's per-dim key range. ONE
+    * implementation for the eager writer and the streaming shard
+    * encoder, so the two paths stay byte-identical for
+    * identically-ordered input (GdxStreamEncoderSpec pins this). The
+    * caller owns the text pool (pool ids arrive here pre-resolved) and
+    * writes the section header; this class only emits block blobs to
+    * `sink` and returns their index. One raw buffer and one blob buffer
+    * serve every block.
     */
   private[gdx] final class BlockWriter(typ: Int, dim: Int, compress: Boolean,
       blockSize: Int, sink: java.io.OutputStream) {
     require(blockSize > 0, s"gdx: blockSize must be positive, got $blockSize")
     private val metas = Vector.newBuilder[BlockMeta]
-    private val curBuf = new ByteArrayOutputStream()
-    private val cur = new DataOutputStream(curBuf)
+    private val cur = new RawBlock
+    private lazy val compressor = lz4.fastCompressor()
+    private var blob = new Array[Byte](0)
+    // a block is cut early once one more record could pass the raw cap
+    private val cutAt = MaxBlockRawBytes - maxRecordBytes(dim)
     private var prev: Array[Int] = null
     private var count = 0
     // per-dim zone map of the in-flight block
@@ -391,18 +465,18 @@ object GdxCodec {
           while (i < dim && prev(i) == keys(i)) i += 1
           i
         }
-      cur.writeByte(first)
+      cur.byte(first)
       var i = first
-      while (i < dim) { writeVarInt(cur, keys(i)); i += 1 }
+      while (i < dim) { cur.varInt(keys(i)); i += 1 }
       typ match {
         case SymbolType.Set | SymbolType.Alias =>
-          writeVarInt(cur, textCode)
+          cur.varInt(textCode)
         case SymbolType.Parameter =>
-          cur.writeDouble(if (values.nonEmpty) values(0) else 0.0)
+          cur.double(if (values.nonEmpty) values(0) else 0.0)
         case _ =>
           var f = 0
           while (f < 5) {
-            cur.writeDouble(if (f < values.length) values(f) else 0.0); f += 1
+            cur.double(if (f < values.length) values(f) else 0.0); f += 1
           }
       }
       prev = keys
@@ -413,32 +487,27 @@ object GdxCodec {
         d += 1
       }
       count += 1
-      if (count == blockSize) flushBlock()
+      if (count == blockSize || cur.size > cutAt) flushBlock()
     }
 
     private def flushBlock(): Unit = if (count > 0) {
-      cur.flush()
-      val rawBytes = curBuf.toByteArray
-      val outBytes =
+      val raw = cur.bytes
+      val rawLen = cur.size
+      val blobLen =
         if (compress) {
-          val bos = new ByteArrayOutputStream(rawBytes.length / 2 + 16)
-          // end() explicitly: DeflaterOutputStream.close() does NOT end
-          // a caller-supplied Deflater, and per-block native zlib
-          // buffers would otherwise live until finalization — the
-          // writer-side twin of the reader's per-block inflater.end()
-          val defl = new Deflater(Deflater.BEST_SPEED)
-          try {
-            val ds = new DeflaterOutputStream(bos, defl)
-            ds.write(rawBytes)
-            ds.close()
-          } finally defl.end()
-          bos.toByteArray
-        } else rawBytes
-      sink.write(outBytes)
+          val need = 8 + compressor.maxCompressedLength(rawLen)
+          blob = atLeast(blob, need)
+          ByteBuffer.wrap(blob).putInt(rawLen).putInt(xxh32.hash(raw, 0, rawLen, ChecksumSeed))
+          val n = 8 + compressor.compress(raw, 0, rawLen, blob, 8, need - 8)
+          sink.write(blob, 0, n)
+          n
+        } else {
+          sink.write(raw, 0, rawLen)
+          rawLen
+        }
       metas += BlockMeta(count,
-        Vector.tabulate(dim)(minD(_)), Vector.tabulate(dim)(maxD(_)),
-        outBytes.length)
-      curBuf.reset()
+        Vector.tabulate(dim)(minD(_)), Vector.tabulate(dim)(maxD(_)), blobLen)
+      cur.size = 0
       // delta reset: every block decodes independently (the skip contract)
       prev = null
       count = 0
@@ -450,8 +519,46 @@ object GdxCodec {
     def finish(): Vector[BlockMeta] = { flushBlock(); metas.result() }
   }
 
-  /** Serialize a v3 data-section header (text pool + block index with
-    * per-dim zone maps).
+  /** `a`, or a new array with room for `n` bytes plus an eighth: block
+    * sizes wander by a few bytes, which should not cost a reallocation
+    * each.
+    */
+  private def atLeast(a: Array[Byte], n: Int): Array[Byte] =
+    if (a.length >= n) a else new Array[Byte](math.min(n + (n >> 3).toLong, Int.MaxValue - 8L).toInt)
+
+  /** The in-flight block's raw record bytes: a growable array written
+    * in the [[writeVarInt]] and `DataOutputStream.writeDouble` layouts,
+    * without a synchronized stream call per field, and read in place.
+    */
+  private final class RawBlock {
+    var bytes = new Array[Byte](1 << 12)
+    var size = 0
+
+    private def room(n: Int): Unit =
+      if (size + n > bytes.length)
+        bytes = java.util.Arrays.copyOf(bytes, math.max(size + n, bytes.length * 2))
+
+    def byte(b: Int): Unit = { room(1); bytes(size) = b.toByte; size += 1 }
+
+    def varInt(value: Int): Unit = {
+      require(value >= 0, s"varint must be non-negative: $value")
+      room(5)
+      var v = value
+      while ((v & ~0x7f) != 0) { bytes(size) = ((v & 0x7f) | 0x80).toByte; size += 1; v >>>= 7 }
+      bytes(size) = v.toByte
+      size += 1
+    }
+
+    def double(d: Double): Unit = {
+      room(8)
+      val v = java.lang.Double.doubleToLongBits(d)
+      var shift = 56
+      while (shift >= 0) { bytes(size) = (v >>> shift).toByte; size += 1; shift -= 8 }
+    }
+  }
+
+  /** Serialize a v3/v4 data-section header (text pool + block index
+    * with per-dim zone maps).
     */
   private[gdx] def writeSectionHeader(d: DataOutputStream,
       texts: Iterable[String], metas: Seq[BlockMeta]): Unit = {
@@ -498,9 +605,13 @@ object GdxCodec {
   final case class SymbolMeta(name: String, typ: Int, dim: Int, explText: String,
       userInfo: Int, domains: Seq[String], records: Int, offset: Long, dataLen: Int)
 
-  final case class Header(producer: String, compressed: Boolean,
+  /** `codec` is the block codec: the v4 header byte as stored (a
+    * record stream rejects an unknown one), or for v1–v3 [[CodecZlib]]
+    * or [[CodecNone]] from the compressed flag.
+    */
+  final case class Header(producer: String, codec: Int,
       uels: IndexedSeq[String], metas: Vector[SymbolMeta],
-      version: Int = 2, acronyms: Vector[GdxAcronym] = Vector.empty)
+      version: Int, acronyms: Vector[GdxAcronym])
 
   /** Read header, UEL table, acronym table and symbol metas; data blobs
     * are skipped (cheap catalog read — mirrors
@@ -513,12 +624,16 @@ object GdxCodec {
       val magic = new Array[Byte](Magic.length)
       in.readFully(magic)
       val version =
-        if (magic.sameElements(Magic3)) 3
+        if (magic.sameElements(Magic4)) 4
+        else if (magic.sameElements(Magic3)) 3
         else if (magic.sameElements(Magic2)) 2
         else if (magic.sameElements(Magic)) 1
         else throw new IllegalArgumentException(s"not a graft GDX file: $path")
       val producer = in.readUTF()
-      val compressed = in.readBoolean()
+      val codec =
+        if (version >= 4) in.readUnsignedByte()
+        else if (in.readBoolean()) CodecZlib
+        else CodecNone
       val nUels = readVarInt(in)
       val uels = Vector.fill(nUels)(in.readUTF())
       val acronyms =
@@ -549,7 +664,7 @@ object GdxCodec {
         }
         SymbolMeta(name, typ, dim, expl, userInfo, domains, nRec, offset, dataLen)
       }
-      Header(producer, compressed, uels, metas, version, acronyms)
+      Header(producer, codec, uels, metas, version, acronyms)
     } finally in.close()
   }
 
@@ -562,26 +677,53 @@ object GdxCodec {
   }
 
   /** STREAMING decode of one symbol's records: seeks to the section and
-    * inflates/decodes record-by-record — the DSv2 `PartitionReader`
-    * pulls from this, so per-task read memory is O(1 record + UEL
-    * table + block index) regardless of shard size (the eager Vector
-    * form would make task memory proportional to shard records).
+    * decodes record-by-record, one block in memory at a time — the DSv2
+    * `PartitionReader` pulls from this, so per-task read memory is
+    * O(1 block + UEL table + block index) regardless of shard size (the
+    * eager Vector form would make task memory proportional to shard
+    * records).
     *
     * `dimAllowed`: admissible UEL indices per dimension (0-based) from
     * pushed label filters. Blocks whose zone map excludes every allowed
-    * index on ANY filtered dimension are SKIPPED WITHOUT INFLATING —
+    * index on ANY filtered dimension are SKIPPED WITHOUT READING THEM —
     * dim_1 range-exactly (writer paths emit dim_1-clustered records, so
     * a one-label slice decodes ~one block out of records/4096), dims 2+
-    * via the v3 per-dim zone map (parquet-stats-style pruning). A
+    * via the v3/v4 per-dim zone map (parquet-stats-style pruning). A
     * SUPERSET pass: the per-record filter (reader `keep`) still applies.
     * v2 files prune on dim_1 only; v1 files decode fully (no index) —
     * the filter stays correct via the reader's per-record check.
     */
   def openRecordStream(path: String, header: Header, meta: SymbolMeta,
       dimAllowed: Map[Int, Set[Int]] = Map.empty): GdxRecordStream =
-    new GdxRecordStream(path, header.compressed, header.version, meta, dimAllowed)
+    new GdxRecordStream(path, header.codec, header.version, meta, dimAllowed)
 
-  final class GdxRecordStream private[GdxCodec] (path: String, compressed: Boolean,
+  /** Read a v2–v4 section header: the text pool and the block index.
+    * v2 carries dim_1 (min,max) only; dims 2+ degrade to full range.
+    */
+  private[gdx] def readSectionHeader(din: DataInputStream, dim: Int,
+      version: Int): (Vector[String], Vector[BlockMeta]) = {
+    val ts = Vector.fill(readVarInt(din))(din.readUTF())
+    val bs = Vector.fill(readVarInt(din)) {
+      val rc = readVarInt(din)
+      if (version >= 3) {
+        val mins = new Array[Int](dim)
+        val maxs = new Array[Int](dim)
+        var i = 0
+        while (i < dim) {
+          mins(i) = readVarInt(din); maxs(i) = readVarInt(din); i += 1
+        }
+        BlockMeta(rc, mins.toVector, maxs.toVector, readVarInt(din))
+      } else {
+        val (lo, hi) = (readVarInt(din), readVarInt(din))
+        val mins = Vector.tabulate(dim)(i => if (i == 0) lo else 0)
+        val maxs = Vector.tabulate(dim)(i => if (i == 0) hi else Int.MaxValue)
+        BlockMeta(rc, mins, maxs, readVarInt(din))
+      }
+    }
+    (ts, bs)
+  }
+
+  final class GdxRecordStream private[GdxCodec] (path: String, codec: Int,
       version: Int, meta: SymbolMeta, dimAllowed: Map[Int, Set[Int]])
       extends Iterator[GdxRecord] with java.io.Closeable {
     private val fin = new FileInputStream(path)
@@ -591,16 +733,24 @@ object GdxCodec {
     private var published = 0L
     // every record byte is read through this one cursor, for all versions
     private val cursor = new ByteCursor(meta.name)
+
+    private def malformed(why: String, cause: Throwable = null): java.io.IOException =
+      new java.io.IOException(s"gdx: $path: symbol ${meta.name}: $why", cause)
+
     // everything after the open can throw on a truncated/corrupt shard;
     // a constructor that throws leaves the caller no handle to close,
     // so the fd must be released HERE or task retries leak one each
     //
-    // `base` is the section stream: for v2/v3 the buffered raw bytes
-    // that blocks are bounded (or skipped) on, for v1 the record source
+    // `base` is the section stream: for v2–v4 the buffered raw bytes
+    // that blocks are read (or skipped) from, for v1 the record source
     // itself. v1 has no block index: `blocks` is empty and `remaining`
-    // covers the whole symbol.
-    private val (base, texts, blocks) =
+    // covers the whole symbol. `blobBytes` is what the section holds
+    // after its header, on disk, which every block length is checked
+    // against before anything is allocated for it.
+    private val (base, texts, blocks, blobBytes) =
       try {
+        if (codec != CodecNone && codec != CodecLz4 && codec != CodecZlib)
+          throw malformed(s"unknown block codec $codec")
         var toSkip = meta.offset
         while (toSkip > 0) {
           val s = fin.skip(toSkip)
@@ -609,38 +759,20 @@ object GdxCodec {
         }
         val bounded = new BoundedInputStream(fin, meta.dataLen)
         if (version >= 2) {
-          // v2/v3: uncompressed section header (text pool + block
-          // index), then independently-deflated block blobs
-          val din = new DataInputStream(new BufferedInputStream(bounded, 1 << 16))
-          val ts = Vector.fill(readVarInt(din))(din.readUTF())
-          val bs = Vector.fill(readVarInt(din)) {
-            val rc = readVarInt(din)
-            if (version >= 3) {
-              // per-dim zone map
-              val mins = new Array[Int](meta.dim)
-              val maxs = new Array[Int](meta.dim)
-              var i = 0
-              while (i < meta.dim) {
-                mins(i) = readVarInt(din); maxs(i) = readVarInt(din); i += 1
-              }
-              BlockMeta(rc, mins.toVector, maxs.toVector, readVarInt(din))
-            } else {
-              // v2 carries dim_1 only; dims 2+ degrade to full range
-              val (lo, hi) = (readVarInt(din), readVarInt(din))
-              val mins = Vector.tabulate(meta.dim)(i => if (i == 0) lo else 0)
-              val maxs = Vector.tabulate(meta.dim)(i =>
-                if (i == 0) hi else Int.MaxValue)
-              BlockMeta(rc, mins, maxs, readVarInt(din))
-            }
-          }
-          (din: InputStream, ts, bs)
+          // uncompressed section header (text pool + block index), then
+          // independently decodable block blobs
+          val counted = new CountingInputStream(new BufferedInputStream(bounded, 1 << 16))
+          val din = new DataInputStream(counted)
+          val (ts, bs) = readSectionHeader(din, meta.dim, version)
+          val onDisk = math.min(meta.dataLen.toLong, fin.getChannel.size() - meta.offset)
+          (din, ts, bs, onDisk - counted.count)
         } else {
           // v1: one deflate stream for the whole symbol, pool inside
-          val src = if (compressed) new InflaterInputStream(bounded) else bounded
+          val src = if (codec == CodecZlib) new InflaterInputStream(bounded) else bounded
           cursor.reset(src)
           val pool = new DataInputStream(cursor.asStream)
           val ts = Vector.fill(readVarInt(pool))(pool.readUTF())
-          (src, ts, Vector.empty[BlockMeta])
+          (new DataInputStream(src), ts, Vector.empty[BlockMeta], 0L)
         }
       } catch {
         case e: Throwable => fin.close(); throw e
@@ -648,11 +780,12 @@ object GdxCodec {
     private val prev = new Array[Int](meta.dim)
     private var blockIdx = 0
     private var remaining = if (version >= 2) 0 else meta.records
-    private var blockBound: BoundedInputStream = null
-    // per-block inflaters are ended EXPLICITLY (closing the
-    // InflaterInputStream would cascade-close the shared base stream);
-    // without end() each block leaks native zlib memory until GC
-    private var blockInflater: java.util.zip.Inflater = null
+    private var blobLeft = blobBytes
+    // reused across blocks: the blob as read, and an LZ4 block decoded
+    private var blob = new Array[Byte](0)
+    private var raw = new Array[Byte](0)
+    // one inflater for every zlib block, ended on close
+    private var inflater: Inflater = null
 
     private def blockMatches(b: BlockMeta): Boolean =
       dimAllowed.forall { case (d, allowed) =>
@@ -674,40 +807,57 @@ object GdxCodec {
     private def ensureBlock(): Boolean = {
       publishDecoded()
       while (remaining == 0 && blockIdx < blocks.length) {
-        if (blockBound != null) {
-          // drain to the block boundary: the inflater may finish without
-          // consuming trailing buffered bytes of its bound
-          var r = blockBound.skip(Long.MaxValue)
-          while (r > 0) r = blockBound.skip(Long.MaxValue)
-          blockBound = null
-        }
-        if (blockInflater != null) { blockInflater.end(); blockInflater = null }
         val b = blocks(blockIdx)
         blockIdx += 1
+        if (b.len > blobLeft)
+          throw malformed(s"block of ${b.len} bytes overruns the $blobLeft bytes left in its section")
+        blobLeft -= b.len
         if (!blockMatches(b)) {
           var toSkip = b.len.toLong
           while (toSkip > 0) {
             val s = base.skip(toSkip)
-            if (s <= 0) throw new EOFException(s"truncated block in ${meta.name}")
+            if (s <= 0) throw new EOFException(s"gdx: $path: truncated block in ${meta.name}")
             toSkip -= s
           }
         } else {
-          // blockBound keeps the compressed boundary exact; the cursor
-          // reads the block's decoded bytes a window at a time. The
-          // inflater takes the whole blob (up to 64 KiB) per input fill,
-          // not the default 512 bytes.
-          blockBound = new BoundedInputStream(base, b.len)
-          cursor.reset(
-            if (compressed) {
-              blockInflater = new java.util.zip.Inflater()
-              new InflaterInputStream(blockBound, blockInflater,
-                math.max(1, math.min(b.len, 1 << 16)))
-            } else blockBound)
+          if (codec == CodecLz4 && b.len < 8)
+            throw malformed(s"LZ4 block of ${b.len} bytes, under its 8-byte head")
+          blob = atLeast(blob, b.len)
+          try base.readFully(blob, 0, b.len)
+          catch { case e: EOFException => throw malformed("truncated block", e) }
+          codec match {
+            case CodecLz4 =>
+              val n = decodeLz4(b) // may replace `raw`
+              cursor.reset(raw, n)
+            case CodecZlib =>
+              if (inflater == null) inflater = new Inflater() else inflater.reset()
+              cursor.reset(new InflaterInputStream(new ByteArrayInputStream(blob, 0, b.len),
+                inflater, math.max(1, math.min(b.len, 1 << 16))))
+            case _ => cursor.reset(blob, b.len)
+          }
           java.util.Arrays.fill(prev, 0) // delta resets per block
           remaining = b.recCount
         }
       }
       remaining > 0
+    }
+
+    /** Check and decode the LZ4 block in `blob` into `raw`; its length. */
+    private def decodeLz4(b: BlockMeta): Int = {
+      val head = ByteBuffer.wrap(blob)
+      val rawLen = head.getInt(0)
+      val most = math.min(b.recCount * maxRecordBytes(meta.dim), MaxBlockRawBytes.toLong)
+      if (rawLen < 0 || rawLen > most)
+        throw malformed(s"LZ4 block of ${b.recCount} records claims $rawLen raw bytes, " +
+          s"outside 0..$most")
+      raw = atLeast(raw, rawLen)
+      val n =
+        try lz4.safeDecompressor().decompress(blob, 8, b.len - 8, raw, 0, rawLen)
+        catch { case e: RuntimeException => throw malformed("corrupt LZ4 block", e) }
+      if (n != rawLen) throw malformed(s"LZ4 block decoded to $n bytes, its head says $rawLen")
+      if (xxh32.hash(raw, 0, rawLen, ChecksumSeed) != head.getInt(4))
+        throw malformed("LZ4 block checksum mismatch")
+      rawLen
     }
 
     override def hasNext: Boolean = remaining > 0 || ensureBlock()
@@ -799,14 +949,14 @@ object GdxCodec {
 
     override def close(): Unit = {
       publishDecoded()
-      if (blockInflater != null) { blockInflater.end(); blockInflater = null }
+      if (inflater != null) { inflater.end(); inflater = null }
       base.close()
       fin.close()
     }
   }
 
-  /** Caps reads at `limit` bytes so the inflater never crosses into the
-    * next symbol's blob.
+  /** Caps reads at `limit` bytes so a section read never crosses into
+    * the next symbol's blob.
     */
   private final class BoundedInputStream(in: InputStream, limit: Long) extends InputStream {
     private var remaining = limit

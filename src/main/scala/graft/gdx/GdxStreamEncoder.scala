@@ -15,9 +15,9 @@ import scala.collection.mutable
   * texts + one block) (the UEL dictionary, which the GDX format
   * genuinely requires a pre-pass for), independent of record count.
   *
-  * Constraint handled: the v2 section layout puts the set-text pool and
+  * Constraint handled: the section layout puts the set-text pool and
   * the block index FIRST, but texts and block metas are only known once
-  * streaming ends. Blocks therefore spill (already deflated) to a temp;
+  * streaming ends. Blocks therefore spill (already compressed) to a temp;
   * finish() writes pool + block index to the shard, then stream-copies
   * the spilled blocks. Disk cost: one extra sequential pass.
   *
@@ -103,24 +103,10 @@ final class GdxStreamEncoder(finalPath: String, name: String, typ: Int, dim: Int
       val out = new DataOutputStream(
         new BufferedOutputStream(new FileOutputStream(inProgress), 1 << 16))
       try {
-        out.write(GdxCodec.Magic3)
-        out.writeUTF(producer)
-        out.writeBoolean(compress)
-        GdxCodec.writeVarInt(out, uels.size)
-        uels.foreach(out.writeUTF)
-        GdxCodec.writeAcronyms(out, acronyms)
-        GdxCodec.writeVarInt(out, 1) // one symbol per shard
-        out.writeUTF(name)
-        out.writeUTF(explText)
-        out.writeByte(typ)
-        out.writeByte(dim)
-        GdxCodec.writeVarInt(out, userInfo)
-        val doms = if (domains.size == dim) domains else Seq.fill(dim)("*")
-        doms.foreach(out.writeUTF)
-        GdxCodec.writeVarInt(out, count)
-        GdxCodec.writeVarInt(out, dataLen.toInt)
-        hdrBuf.writeTo(out)
-        copyTo(tmpRecords, out)
+        GdxCodec.writeFile(out, producer, compress, uels, acronyms,
+            Seq(GdxSymbol(name, typ, dim, explText, userInfo, domains))) { _ =>
+          GdxCodec.Section(count, dataLen.toInt, o => { hdrBuf.writeTo(o); copyTo(tmpRecords, o) })
+        }
       } finally out.close()
       // idempotent epoch re-run overwrites its own shard ATOMICALLY:
       // a window with no file at finalPath would make a committedOnly

@@ -30,8 +30,10 @@ object GdxOps extends QueryModule {
     * v3: codec v3 per-dim zone maps (round 13) — content identical but
     * the container format changed, and gdx_sliced_scan_dim2's skip
     * path should exercise v3 files, not stale v2 leftovers.
+    * v4: codec v4 LZ4 blocks — content identical, but the gdx_* keys
+    * should read v4 fixtures, not v3 leftovers.
     */
-  private val fixtureVersion = 3
+  private val fixtureVersion = 4
 
   /** Fixture dir keyed on basename PLUS a content fingerprint
     * (size+mtime of the source parquet dirs, the TokenizerOps.corpusKey

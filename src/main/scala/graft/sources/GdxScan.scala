@@ -388,12 +388,12 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   // blob entirely (header-only read).
   private val shardCanMatch = dimFilters.valuesIterator.forall(_.nonEmpty)
 
-  // streaming decode: records inflate one at a time — task memory is
-  // O(UEL table + block index), never O(shard records). ALL pushed
-  // per-dim index sets ride into the stream, where the block zone maps
-  // skip non-matching blocks WITHOUT inflating them (dim_1
+  // streaming decode: one block in memory at a time — task memory is
+  // O(UEL table + block index + one block), never O(shard records). ALL
+  // pushed per-dim index sets ride into the stream, where the block
+  // zone maps skip non-matching blocks WITHOUT reading them (dim_1
   // range-exactly on sorted layouts — a one-label slice decodes ~one
-  // block; dims 2+ parquet-stats-style on v3 files); `keepKeys` below
+  // block; dims 2+ parquet-stats-style on v3/v4 files); `keepKeys` below
   // still re-checks per record, so the skip is a pure superset pass.
   private val stream: GdxCodec.GdxRecordStream =
     if (shardCanMatch) GdxCodec.openRecordStream(path, header, meta, dimFilters)

@@ -125,7 +125,7 @@ class GdxAcronymBlockSpec extends AnyFunSuite {
     (0 until 500).foreach(i => enc.add(Array(f"k$i%03d"), Array(i.toDouble), None))
     enc.finish()
     val h = GdxCodec.readHeader(path)
-    assert(h.version == 3 && h.acronyms == Vector(GdxAcronym(10, "high", "hi")))
+    assert(h.version == 4 && h.acronyms == Vector(GdxAcronym(10, "high", "hi")))
     val uelIdx = h.uels.indexWhere(_ == "k400")
     val s = GdxCodec.openRecordStream(path, h, h.metas.head, Map(0 -> Set(uelIdx)))
     val hits = s.toVector
@@ -231,6 +231,105 @@ class GdxAcronymBlockSpec extends AnyFunSuite {
     val s2 = GdxCodec.openRecordStream(path, h, h.metas.head, Map(1 -> Set(0)))
     assert(s2.toVector.size == 4)
     s2.close()
+  }
+
+  test("v3 files (per-dim zone maps, zlib or raw blobs) remain readable and dim_2-skippable") {
+    // hand-assembled v3 bytes: no writer emits v3 anymore, so read
+    // compat is pinned here the way the v2 test above pins v2
+    def deflate(raw: Array[Byte]): Array[Byte] = {
+      val d = new java.util.zip.Deflater()
+      d.setInput(raw); d.finish()
+      val out = new java.io.ByteArrayOutputStream()
+      val chunk = new Array[Byte](64)
+      while (!d.finished()) out.write(chunk, 0, d.deflate(chunk))
+      d.end()
+      out.toByteArray
+    }
+    for (compressed <- Seq(true, false)) {
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
+      def byte(v: Int): Unit = buf += v.toByte
+      def utf(s: String): Unit = {
+        byte(s.length >> 8); byte(s.length & 0xff); s.foreach(c => byte(c.toInt))
+      }
+      def varint(v: Int): Unit = {
+        var x = v
+        while ((x & ~0x7f) != 0) { byte((x & 0x7f) | 0x80); x >>>= 7 }
+        byte(x)
+      }
+      def dbl(v: Double): Unit = {
+        val bits = java.lang.Double.doubleToLongBits(v)
+        (7 to 0 by -1).foreach(i => byte(((bits >>> (8 * i)) & 0xff).toInt))
+      }
+      /** `body`'s bytes, taken out of `buf`. */
+      def bytesOf(body: => Unit): Array[Byte] = {
+        val mark = buf.length
+        body
+        val out = buf.slice(mark, buf.length).toArray
+        buf.remove(mark, buf.length - mark)
+        out
+      }
+      def blob(body: => Unit): Array[Byte] = {
+        val raw = bytesOf(body)
+        if (compressed) deflate(raw) else raw
+      }
+      /** One symbol: catalog entry, then its section (pool, block
+        * index with a (min,max) pair per dim, blobs).
+        */
+      def symbol(name: String, typ: Int, dim: Int, records: Int, pool: Seq[String],
+          blocks: Seq[(Int, Seq[(Int, Int)], Array[Byte])]): Unit = {
+        utf(name); utf(""); byte(typ); byte(dim); varint(0)
+        (0 until dim).foreach(_ => utf("*"))
+        varint(records)
+        val section = bytesOf {
+          varint(pool.size); pool.foreach(utf)
+          varint(blocks.size)
+          blocks.foreach { case (n, zone, bytes) =>
+            varint(n); zone.foreach { case (lo, hi) => varint(lo); varint(hi) }; varint(bytes.length)
+          }
+          blocks.foreach { case (_, _, bytes) => buf ++= bytes }
+        }
+        varint(section.length)
+        buf ++= section
+      }
+      "GRFTGDX3".foreach(c => byte(c.toInt))
+      utf("hand-assembled-v3")
+      byte(if (compressed) 1 else 0)
+      varint(6); (0 until 6).foreach(i => utf(s"u$i"))
+      varint(1); varint(10); utf("high"); utf("hi") // acronym table
+      varint(2) // two symbols
+      // 2-dim parameter, 3 blocks of 2 delta-encoded records each
+      val b1 = blob { byte(0); varint(0); varint(1); dbl(0.5); byte(1); varint(2); dbl(1.5) }
+      val b2 = blob { byte(0); varint(1); varint(3); dbl(2.5); byte(1); varint(4); dbl(3.5) }
+      val b3 = blob { byte(0); varint(2); varint(1); dbl(4.5); byte(1); varint(2); dbl(5.5) }
+      symbol("p", SymbolType.Parameter, 2, 6, Nil, Seq(
+        (2, Seq(0 -> 0, 1 -> 2), b1), (2, Seq(1 -> 1, 3 -> 4), b2), (2, Seq(2 -> 2, 1 -> 2), b3)))
+      // 1-dim set with a text pool
+      val sb = blob { byte(0); varint(0); varint(1); byte(0); varint(3); varint(0); byte(0); varint(5); varint(2) }
+      symbol("s", SymbolType.Set, 1, 3, Seq("alpha", "beta"), Seq((3, Seq(0 -> 5), sb)))
+      val path = tmp(s"v3compat-$compressed.gdx")
+      Files.write(java.nio.file.Paths.get(path), buf.toArray)
+
+      val h = GdxCodec.readHeader(path)
+      assert(h.version == 3 && h.acronyms == Vector(GdxAcronym(10, "high", "hi")))
+      val c = GdxCodec.read(path)
+      assert(c.symbol("p").get.records == Vector(
+        GdxRecord(Array(0, 1), Array(0.5)), GdxRecord(Array(0, 2), Array(1.5)),
+        GdxRecord(Array(1, 3), Array(2.5)), GdxRecord(Array(1, 4), Array(3.5)),
+        GdxRecord(Array(2, 1), Array(4.5)), GdxRecord(Array(2, 2), Array(5.5))),
+        s"compressed=$compressed")
+      assert(c.symbol("s").get.records == Vector(
+        GdxRecord(Array(0), Array.empty, Some("alpha")), GdxRecord(Array(3), Array.empty),
+        GdxRecord(Array(5), Array.empty, Some("beta"))))
+      // zone maps: u4 on dim_2 decodes block 2 only, u0 on dim_1 block 1 only
+      val pMeta = h.metas.find(_.name == "p").get
+      val s2 = GdxCodec.openRecordStream(path, h, pMeta, Map(1 -> Set(4)))
+      assert(s2.toVector.filter(_.keys(1) == 4).map(_.values(0)) == Vector(3.5))
+      assert(s2.decoded == 2, s"compressed=$compressed")
+      s2.close()
+      val s1 = GdxCodec.openRecordStream(path, h, pMeta, Map(0 -> Set(0)))
+      assert(s1.toVector.map(_.values(0)) == Vector(0.5, 1.5) && s1.decoded == 2)
+      s1.close()
+    }
   }
 
   test("write rejects duplicate acronym indices") {

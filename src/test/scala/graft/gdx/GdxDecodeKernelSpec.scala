@@ -116,7 +116,8 @@ class GdxDecodeKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("every truncation prefix of a multi-block v3 shard decodes or throws an IOException") {
+  /** Three symbols (set with texts, parameter, variable) in 4-record blocks. */
+  private def threeSymbols(): GdxContainer = {
     val b = new GdxBuilder()
     b.addSymbol("s", SymbolType.Set, 2, (0 until 11).map(i =>
       (Seq(s"a${i % 4}", s"b$i"), Array.empty[Double], if (i % 2 == 0) Some(s"text $i") else None)))
@@ -124,9 +125,28 @@ class GdxDecodeKernelSpec extends AnyFunSuite {
       (Seq(s"a$i"), Array(i * 1.5), None)))
     b.addSymbol("v", SymbolType.Variable, 2, (0 until 9).map(i =>
       (Seq(s"a$i", s"b${i % 3}"), Array(i.toDouble, 0.5, 0.0, 10.0, 1.0), None)))
+    b.result()
+  }
+
+  /** Decode every symbol on the eager path, which must give `want`,
+    * then on the lazy one.
+    */
+  private def decodeBothWays(path: String, want: GdxContainer): Unit = {
+    assert(GdxCodec.read(path) == want)
+    val h = GdxCodec.readHeader(path)
+    h.metas.foreach { m =>
+      val s = GdxCodec.openRecordStream(path, h, m)
+      try {
+        val keys = new Array[Int](m.dim)
+        while (s.hasNext) { s.nextKeysInto(keys); s.skipValues() }
+      } finally s.close()
+    }
+  }
+
+  test("every truncation prefix of a multi-block v3 shard decodes or throws an IOException") {
     for (compress <- Seq(true, false)) {
       val full = tmp(s"full-$compress.gdx")
-      GdxCodec.write(b.result(), full, compress, blockSize = 4)
+      GdxCodec.write(threeSymbols(), full, compress, blockSize = 4)
       val bytes = Files.readAllBytes(Paths.get(full))
       val want = GdxCodec.read(full)
       val cut = tmp(s"cut-$compress.gdx")
@@ -134,18 +154,7 @@ class GdxDecodeKernelSpec extends AnyFunSuite {
         Files.write(Paths.get(cut), java.util.Arrays.copyOf(bytes, n))
         // a prefix that decodes at all must decode to the original
         // records: reading past the end may never invent data
-        def decodeBothWays(): Unit = {
-          assert(GdxCodec.read(cut) == want)
-          val h = GdxCodec.readHeader(cut)
-          h.metas.foreach { m =>
-            val s = GdxCodec.openRecordStream(cut, h, m)
-            try {
-              val keys = new Array[Int](m.dim)
-              while (s.hasNext) { s.nextKeysInto(keys); s.skipValues() }
-            } finally s.close()
-          }
-        }
-        try decodeBothWays()
+        try decodeBothWays(cut, want)
         catch {
           case _: IOException => ()
           case e: Throwable =>
@@ -153,6 +162,126 @@ class GdxDecodeKernelSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  /** (symbol name, first byte, length) of every block blob in `path`:
+    * the blobs end each symbol's data section, back to back.
+    */
+  private def blobsOf(path: String): Seq[(String, Int, Int)] = {
+    val h = GdxCodec.readHeader(path)
+    h.metas.flatMap { m =>
+      val in = new java.io.DataInputStream(new ByteArrayInputStream(
+        Files.readAllBytes(Paths.get(path)), m.offset.toInt, m.dataLen))
+      val lens = GdxCodec.readSectionHeader(in, m.dim, h.version)._2.map(_.len)
+      val ends = lens.scanLeft(m.offset.toInt + m.dataLen - lens.sum)(_ + _)
+      lens.indices.map(i => (m.name, ends(i), lens(i)))
+    }
+  }
+
+  private def assertNames(e: IOException, path: String, sym: String): Unit =
+    assert(String.valueOf(e.getMessage).contains(path) &&
+      String.valueOf(e.getMessage).contains(s"symbol $sym"), e.getMessage)
+
+  test("every byte flip in an LZ4 block blob throws an IOException naming file and symbol, or decodes exactly") {
+    val full = tmp("fuzz.gdx")
+    GdxCodec.write(threeSymbols(), full, blockSize = 4)
+    val bytes = Files.readAllBytes(Paths.get(full))
+    val want = GdxCodec.read(full)
+    val blobs = blobsOf(full)
+    assert(GdxCodec.readHeader(full).codec == GdxCodec.CodecLz4 && blobs.size == 10)
+    val cut = tmp("flipped.gdx")
+    var caught = 0
+    for ((sym, start, len) <- blobs; at <- start until start + len; mask <- Seq(0x01, 0x80, 0xff)) {
+      val patched = bytes.clone()
+      patched(at) = (patched(at) ^ mask).toByte
+      Files.write(Paths.get(cut), patched)
+      try decodeBothWays(cut, want)
+      catch {
+        case e: IOException => assertNames(e, cut, sym); caught += 1
+        case e: Throwable => fail(s"flip $mask at $at in a block of $sym threw $e, not an IOException")
+      }
+    }
+    // only a flip that leaves the decoded bytes equal (say, a match
+    // offset onto an identical copy) may decode; nearly all must throw
+    assert(caught > blobs.map(_._3).sum * 3 * 9 / 10, s"$caught flips caught")
+  }
+
+  test("hostile rawLen values and an unknown codec byte are rejected naming file and symbol") {
+    val full = tmp("hostile.gdx")
+    GdxCodec.write(threeSymbols(), full, blockSize = 4)
+    val bytes = Files.readAllBytes(Paths.get(full))
+    val (sym, start, _) = blobsOf(full).find(_._1 == "v").get
+    val widest = 4 * GdxCodec.maxRecordBytes(2).toInt
+    for (rawLen <- Seq(-1, Int.MinValue, widest + 1, GdxCodec.MaxBlockRawBytes + 1)) {
+      val patched = bytes.clone()
+      java.nio.ByteBuffer.wrap(patched).putInt(start, rawLen)
+      val q = tmp(s"rawlen$rawLen.gdx")
+      Files.write(Paths.get(q), patched)
+      val e = intercept[IOException](GdxCodec.read(q))
+      assertNames(e, q, sym)
+      assert(e.getMessage.contains(s"claims $rawLen raw bytes"), e.getMessage)
+    }
+    // the fixed cap binds once recCount × widest record passes it; the
+    // blob past the head is never looked at
+    def oneBlock(recCount: Int, indexLen: Int, blob: Array[Byte]): String = {
+      val sec = new ByteArrayOutputStream()
+      val d = new DataOutputStream(sec)
+      GdxCodec.writeSectionHeader(d, Nil,
+        Seq(GdxCodec.BlockMeta(recCount, Vector(0), Vector(0), indexLen)))
+      d.write(blob)
+      val q = tmp("assembled.gdx")
+      val out = new DataOutputStream(new java.io.FileOutputStream(q))
+      try GdxCodec.writeFile(out, "t", compress = true, Vector("u0"), Nil,
+          Seq(GdxSymbol("hostile_p", SymbolType.Parameter, 1))) { _ =>
+        GdxCodec.Section(recCount, sec.size, sec.writeTo)
+      } finally out.close()
+      q
+    }
+    val overCap = java.nio.ByteBuffer.allocate(10).putInt(GdxCodec.MaxBlockRawBytes + 1).array()
+    val capped = oneBlock(1000000, overCap.length, overCap)
+    val e = intercept[IOException](GdxCodec.read(capped))
+    assertNames(e, capped, "hostile_p")
+    assert(e.getMessage.contains(s"outside 0..${GdxCodec.MaxBlockRawBytes}"), e.getMessage)
+    // a blob shorter than its 8-byte head, and one longer than its section
+    val short = oneBlock(1, 5, new Array[Byte](5))
+    assertNames(intercept[IOException](GdxCodec.read(short)), short, "hostile_p")
+    val long = oneBlock(1, 40, new Array[Byte](20))
+    val overrun = intercept[IOException](GdxCodec.read(long))
+    assertNames(overrun, long, "hostile_p")
+    assert(overrun.getMessage.contains("overruns"), overrun.getMessage)
+
+    // the codec byte follows the magic and the producer UTF
+    val codecAt = GdxCodec.Magic4.length + 2 + GdxCodec.readHeader(full).producer.length
+    assert(bytes(codecAt) == GdxCodec.CodecLz4)
+    for (codec <- Seq(2, 0x7f, 0xff)) {
+      val patched = bytes.clone()
+      patched(codecAt) = codec.toByte
+      val q = tmp(s"codec$codec.gdx")
+      Files.write(Paths.get(q), patched)
+      val h = GdxCodec.readHeader(q)
+      assert(h.codec == codec)
+      val e = intercept[IOException](GdxCodec.openRecordStream(q, h, h.metas.head))
+      assertNames(e, q, h.metas.head.name)
+      assert(e.getMessage.contains(s"unknown block codec $codec"), e.getMessage)
+    }
+  }
+
+  test("the writer cuts a block before its raw bytes pass the cap, whatever blockSize") {
+    val p = tmp("cut.gdx")
+    val enc = new GdxStreamEncoder(p, "v", SymbolType.Variable, 0, blockSize = Int.MaxValue)
+    // a 0-dim variable record is 41 raw bytes: firstChanged + 5 doubles
+    val perBlock = GdxCodec.MaxBlockRawBytes / 41
+    val n = perBlock + 1000
+    (0 until n).foreach(i => enc.add(Array.empty, Array(i.toDouble, 0.0, 0.0, 1.0, 1.0), None))
+    enc.finish()
+    val h = GdxCodec.readHeader(p)
+    val m = h.metas.head
+    val in = new java.io.DataInputStream(new ByteArrayInputStream(
+      Files.readAllBytes(Paths.get(p)), m.offset.toInt, m.dataLen))
+    assert(GdxCodec.readSectionHeader(in, 0, h.version)._2.map(_.recCount) == Vector(perBlock, 1000))
+    val s = GdxCodec.openRecordStream(p, h, m)
+    try assert(s.zipWithIndex.forall { case (r, i) => r.values(0) == i } && s.decoded == n)
+    finally s.close()
   }
 
   test("decodedRecords is published once per block and on close, and stays exact") {
