@@ -597,6 +597,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         "bloom_contains"),
       (es: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
+    // small pushed-label GDX slices run on the driver, with no Spark job
+    ext.injectPlannerStrategy(s => new graft.sources.GdxDriverScan(s))
   }
 }
 

@@ -923,7 +923,12 @@ final case class GdxFile(spark: SparkSession, path: String) {
     *               which the connector pushes into the GDX decoder AND
     *               prunes shards against the manifest label ranges (a
     *               literal label plans ONE InputPartition out of O(10⁵)
-    *               shards); globs with wildcards apply post-scan.
+    *               shards); globs with wildcards apply post-scan. Such a
+    *               slice runs on the driver, with no Spark job, when it
+    *               plans at most `defaultParallelism` shards whose zone
+    *               maps keep at most [[graft.sources.GdxScan.DriverBudget]]
+    *               records (16 blocks, about 16 ms of decode against the
+    *               13–45 ms a job costs); see [[graft.sources.GdxDriverScan]].
     * @param reshape pivot the last dimension to columns (gdxpy's 2-D
     *               Series→DataFrame reshape).
     */

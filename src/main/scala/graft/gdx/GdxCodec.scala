@@ -695,7 +695,7 @@ object GdxCodec {
     */
   def openRecordStream(path: String, header: Header, meta: SymbolMeta,
       dimAllowed: Map[Int, Set[Int]] = Map.empty): GdxRecordStream =
-    new GdxRecordStream(path, header.codec, header.version, meta, dimAllowed)
+    new GdxRecordStream(path, header.codec, header.version, header.uels.length, meta, dimAllowed)
 
   /** Read a v2–v4 section header: the text pool and the block index.
     * v2 carries dim_1 (min,max) only; dims 2+ degrade to full range.
@@ -724,7 +724,7 @@ object GdxCodec {
   }
 
   final class GdxRecordStream private[GdxCodec] (path: String, codec: Int,
-      version: Int, meta: SymbolMeta, dimAllowed: Map[Int, Set[Int]])
+      version: Int, uelCount: Int, meta: SymbolMeta, dimAllowed: Map[Int, Set[Int]])
       extends Iterator[GdxRecord] with java.io.Closeable {
     private val fin = new FileInputStream(path)
     /** Records this stream actually decoded (observability: block skip). */
@@ -744,10 +744,13 @@ object GdxCodec {
     // `base` is the section stream: for v2–v4 the buffered raw bytes
     // that blocks are read (or skipped) from, for v1 the record source
     // itself. v1 has no block index: `blocks` is empty and `remaining`
-    // covers the whole symbol. `blobBytes` is what the section holds
-    // after its header, on disk, which every block length is checked
-    // against before anything is allocated for it.
-    private val (base, texts, blocks, blobBytes) =
+    // covers the whole symbol. A v2–v4 block index must account for its
+    // section exactly, before anything is allocated for a block: its
+    // record counts sum to the catalog's, its lengths to the bytes the
+    // section holds after its header, on disk. A damaged count or length
+    // in the index, or a truncated section, is then rejected at open,
+    // even when the scan would skip the block it describes.
+    private val (base, texts, blocks) =
       try {
         if (codec != CodecNone && codec != CodecLz4 && codec != CodecZlib)
           throw malformed(s"unknown block codec $codec")
@@ -765,14 +768,23 @@ object GdxCodec {
           val din = new DataInputStream(counted)
           val (ts, bs) = readSectionHeader(din, meta.dim, version)
           val onDisk = math.min(meta.dataLen.toLong, fin.getChannel.size() - meta.offset)
-          (din, ts, bs, onDisk - counted.count)
+          val blobBytes = onDisk - counted.count
+          val lens = bs.iterator.map(_.len.toLong).sum
+          if (lens > blobBytes)
+            throw malformed(s"block index overruns its section: blocks of $lens bytes, $blobBytes on disk")
+          if (lens < blobBytes)
+            throw malformed(s"block index leaves ${blobBytes - lens} of its section's bytes unread")
+          val recs = bs.iterator.map(_.recCount.toLong).sum
+          if (recs != meta.records)
+            throw malformed(s"blocks hold $recs records, the catalog says ${meta.records}")
+          (din, ts, bs)
         } else {
           // v1: one deflate stream for the whole symbol, pool inside
           val src = if (codec == CodecZlib) new InflaterInputStream(bounded) else bounded
           cursor.reset(src)
           val pool = new DataInputStream(cursor.asStream)
           val ts = Vector.fill(readVarInt(pool))(pool.readUTF())
-          (new DataInputStream(src), ts, Vector.empty[BlockMeta], 0L)
+          (new DataInputStream(src), ts, Vector.empty[BlockMeta])
         }
       } catch {
         case e: Throwable => fin.close(); throw e
@@ -780,7 +792,6 @@ object GdxCodec {
     private val prev = new Array[Int](meta.dim)
     private var blockIdx = 0
     private var remaining = if (version >= 2) 0 else meta.records
-    private var blobLeft = blobBytes
     // reused across blocks: the blob as read, and an LZ4 block decoded
     private var blob = new Array[Byte](0)
     private var raw = new Array[Byte](0)
@@ -794,6 +805,14 @@ object GdxCodec {
         d >= meta.dim ||
           allowed.exists(k => k >= b.mins(d) && k <= b.maxs(d))
       }
+
+    /** Records in the blocks the zone maps keep: what a full drain
+      * decodes (v1 has no block index, so all of its records). Reads
+      * nothing; the block index is in memory once the stream is open.
+      */
+    def matchingRecords: Long =
+      if (version < 2) meta.records
+      else blocks.iterator.filter(blockMatches).map(_.recCount.toLong).sum
 
     private def publishDecoded(): Unit = if (decoded != published) {
       decodedRecords.add(decoded - published)
@@ -809,9 +828,6 @@ object GdxCodec {
       while (remaining == 0 && blockIdx < blocks.length) {
         val b = blocks(blockIdx)
         blockIdx += 1
-        if (b.len > blobLeft)
-          throw malformed(s"block of ${b.len} bytes overruns the $blobLeft bytes left in its section")
-        blobLeft -= b.len
         if (!blockMatches(b)) {
           var toSkip = b.len.toLong
           while (toSkip > 0) {
@@ -894,12 +910,26 @@ object GdxCodec {
       if (first > meta.dim)
         throw new java.io.IOException(
           s"gdx: corrupt record in ${meta.name}: first changed dim $first > ${meta.dim}")
+      // every key must index the UEL table and every text the pool: the
+      // readers index both unchecked. Keys a record keeps from the block
+      // start are 0, valid only if the table is not empty.
+      if (first > 0 && uelCount == 0)
+        throw malformed(s"record keeps UEL index 0 of an empty UEL table")
       var i = first
-      while (i < meta.dim) { prev(i) = cursor.varInt(); i += 1 }
+      while (i < meta.dim) {
+        val k = cursor.varInt()
+        if (k < 0 || k >= uelCount)
+          throw malformed(s"record key $k outside the UEL table ($uelCount labels)")
+        prev(i) = k
+        i += 1
+      }
       System.arraycopy(prev, 0, keys, 0, meta.dim)
       var t = 0
       meta.typ match {
-        case SymbolType.Set | SymbolType.Alias => t = cursor.varInt()
+        case SymbolType.Set | SymbolType.Alias =>
+          t = cursor.varInt()
+          if (t < 0 || t > texts.length)
+            throw malformed(s"record text $t outside the text pool (${texts.length} texts)")
         case _ => ()
       }
       remaining -= 1

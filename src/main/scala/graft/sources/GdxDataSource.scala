@@ -113,30 +113,30 @@ object GdxTable {
     * is what makes the sink exactly-once for batch consumers. A
     * committed-but-missing file is corruption and fails loudly.
     * Directories without a manifest (hand-assembled, or a sink before
-    * its first epoch commit) fall back to listing.
+    * its first epoch commit) fall back to listing. Each shard comes with
+    * its manifest entry, when it has one.
     */
-  def committedShardsOf(rawPath: String): Seq[String] = {
+  def committedShards(rawPath: String): Seq[(String, Option[GdxManifest.Entry])] = {
     val path = localPath(rawPath)
     val f = new java.io.File(path)
-    if (!f.isDirectory) return Seq(path)
-    GdxManifest.files(path) match {
-      case None => shardsOf(path)
-      case Some(names) =>
-        names.sorted.map { n =>
-          val s = new java.io.File(f, n)
+    if (!f.isDirectory) return Seq(path -> None)
+    GdxManifest.entries(path) match {
+      case None => shardsOf(path).map(_ -> None)
+      case Some(es) =>
+        es.sortBy(_.file).map { e =>
+          val s = new java.io.File(f, e.file)
           require(s.isFile,
-            s"gdx: manifest records shard '$n' but the file is missing at $path " +
+            s"gdx: manifest records shard '${e.file}' but the file is missing at $path " +
               "(committed data lost or manifest corrupted)")
-          s.getPath
+          s.getPath -> Some(e)
         }
     }
   }
 
-  /** Per-shard lowercased dim_1 label ranges from _manifest.json, if the
-    * path is a sharded directory written by this connector. Keyed by
-    * shard file name; shards absent from the map have no range info and
-    * must always be scanned. Delegates to [[GdxManifest.ranges]] — the
-    * one manifest parser — so membership and ranges can never drift.
+  def committedShardsOf(rawPath: String): Seq[String] = committedShards(rawPath).map(_._1)
+
+  /** Per-shard lowercased dim_1 label ranges from _manifest.json, keyed
+    * by shard file name (see [[GdxManifest.ranges]]).
     */
   def shardRangesOf(rawPath: String): Map[String, (String, String)] =
     GdxManifest.ranges(localPath(rawPath))

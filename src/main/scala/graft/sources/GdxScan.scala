@@ -91,11 +91,20 @@ class GdxScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
   override def build(): Scan = new GdxScan(fullSchema, required, dimFilters, options)
 }
 
+/** A GDX symbol (or catalog view) scan. It plans one partition per
+  * committed shard that manifest pruning keeps, once per scan. A scan
+  * that pushes a label filter, plans at most `defaultParallelism`
+  * partitions and keeps at most [[GdxScan.DriverBudget]] records in its
+  * zone maps runs on the driver with no Spark job ([[GdxDriverScan]],
+  * through [[driverCores]]); every other scan runs in tasks, through
+  * [[createReaderFactory]].
+  */
 class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabelFilter],
     options: CaseInsensitiveStringMap) extends Scan with Batch {
 
   private val path = GdxTable.localPath(options.get("path"))
   private val symbol = Option(options.get("symbol")).getOrElse("")
+  private val raw = options.getOrDefault("specialValues", "map") == "raw"
   // re-validated HERE, not only in schemaFor: a user-supplied schema
   // (supportsExternalMetadata) skips schema inference entirely, and a
   // typo'd mode ("RAW") would otherwise silently degrade to lossy map
@@ -112,20 +121,22 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GdxMicroBatchStream(path, symbol, fullSchema, required, pushed,
-      raw = options.getOrDefault("specialValues", "map") == "raw",
+    new GdxMicroBatchStream(path, symbol, fullSchema, required, pushed, raw,
       committedOnly = options.getBoolean("committedOnly", false))
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** Planned once per scan, from one manifest read, and shared by the
+    * driver-venue size check and BatchScanExec: the partitions, and the
+    * records the planned shards' manifest entries declare (None unless
+    * every planned shard has a `records` entry).
+    */
+  private lazy val planned: (Array[InputPartition], Option[Long]) = {
     // batch membership honors the manifest (exactly-once vs in-flight
     // streaming epochs); un-manifested dirs fall back to listing
-    val shards = GdxTable.committedShardsOf(path)
-    if (symbol == GdxTable.CatalogSymbol)
-      Array(GdxCatalogPartition(shards))
-    else if (symbol == GdxTable.UelSymbol)
-      Array(GdxUelPartition(shards))
-    else if (symbol == GdxTable.AcronymSymbol)
-      Array(GdxAcronymPartition(shards))
+    val shards = GdxTable.committedShards(path)
+    val paths = shards.map(_._1)
+    if (symbol == GdxTable.CatalogSymbol) (Array(GdxCatalogPartition(paths)), None)
+    else if (symbol == GdxTable.UelSymbol) (Array(GdxUelPartition(paths)), None)
+    else if (symbol == GdxTable.AcronymSymbol) (Array(GdxAcronymPartition(paths)), None)
     else {
       // empty symbol means "the dataset's first symbol" — resolve the
       // NAME once at plan time (from the same first shard schemaFor
@@ -134,12 +145,17 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
       // then errors loudly in its reader instead of mixing rows
       val resolved =
         if (symbol.nonEmpty) symbol
-        else shards.headOption.map { s0 =>
+        else paths.headOption.map { s0 =>
           GdxTable.resolveSymbol(GdxCodec.readHeader(s0), "", s0).name
         }.getOrElse(symbol)
-      prunedByManifest(shards).map(s => GdxInputPartition(s, resolved)).toArray
+      val kept = prunedByManifest(shards)
+      val records = kept.map(_._2.flatMap(_.records))
+      (kept.map(s => GdxInputPartition(s._1, resolved): InputPartition).toArray,
+        Option.when(records.forall(_.isDefined))(records.flatten.sum))
     }
   }
+
+  override def planInputPartitions(): Array[InputPartition] = planned._1
 
   /** Driver-side shard pruning: pushed dim_1 equality/IN labels are
     * checked against the manifest's per-shard [lo, hi] label ranges —
@@ -148,7 +164,8 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
     * without opening a single shard header. Shards lacking range info
     * are always kept.
     */
-  private def prunedByManifest(shards: Seq[String]): Seq[String] = {
+  private def prunedByManifest(shards: Seq[(String, Option[GdxManifest.Entry])])
+      : Seq[(String, Option[GdxManifest.Entry])] = {
     val labels: Set[String] = pushed.collect {
       case DimLabelFilter(0, ls) => ls
     }.foldLeft(Option.empty[Set[String]]) {
@@ -171,19 +188,53 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
     // deployment; the decoder itself is locale-robust either way.)
     val lang = java.util.Locale.getDefault.getLanguage
     if (lang == "tr" || lang == "az" || lang == "lt") return shards
-    val ranges = GdxTable.shardRangesOf(path)
-    if (ranges.isEmpty) return shards
-    shards.filter { s =>
-      ranges.get(new java.io.File(s).getName) match {
+    shards.filter { case (_, e) =>
+      e.flatMap(_.range) match {
         case Some((lo, hi)) => labels.exists(l => l >= lo && l <= hi)
         case None => true
       }
     }
   }
 
+  /** The open decode cores of this scan when it may run on the driver
+    * ([[GdxDriverScan]]): it pushes at least one label filter, plans at
+    * most `maxPartitions` symbol partitions, and the blocks its zone
+    * maps keep hold at most [[GdxScan.DriverBudget]] records. None
+    * otherwise, with every core it opened closed again.
+    *
+    * The budget is counted cheaply. The planned shards' manifest
+    * `records` bound the kept blocks from above (a writer's commit
+    * records its shard's count, an adopted shard the sum over its
+    * symbols); only when their sum passes the budget is each shard's
+    * block index counted, shard by shard, and the count stops at the
+    * first shard that takes it past the budget. An over-budget scan
+    * such as a label recurring in every block therefore costs about one
+    * header read before it falls back.
+    */
+  private[sources] def driverCores(maxPartitions: Int): Option[Seq[GdxSymbolDecode]] = {
+    val parts = planInputPartitions()
+    val shards = parts.collect { case p: GdxInputPartition => p }
+    if (pushed.isEmpty || parts.length > maxPartitions || shards.length != parts.length)
+      return None
+    val counted = !planned._2.exists(_ <= GdxScan.DriverBudget)
+    val cores = scala.collection.mutable.ArrayBuffer.empty[GdxSymbolDecode]
+    var kept = 0L
+    try
+      shards.iterator.takeWhile(_ => kept <= GdxScan.DriverBudget).foreach { p =>
+        cores += new GdxSymbolDecode(p.shardPath, p.symbol, pushed, raw)
+        if (counted) kept += cores.last.matchingRecords
+      }
+    catch { case e: Throwable => cores.foreach(_.close()); throw e }
+    if (kept <= GdxScan.DriverBudget) Some(cores.toSeq)
+    else { cores.foreach(_.close()); None }
+  }
+
+  /** A row reader over a core from [[driverCores]]; closing it closes the core. */
+  private[sources] def rowReader(core: GdxSymbolDecode): PartitionReader[InternalRow] =
+    new GdxSymbolReader(core, required)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new GdxReaderFactory(fullSchema, required, pushed, symbol,
-      raw = options.getOrDefault("specialValues", "map") == "raw",
+    new GdxReaderFactory(required, pushed, raw,
       // vectorized by default; option("vectorized","false") keeps the
       // row path reachable (debug/bisect escape hatch, and the A/B
       // handle the SCALE.md throughput numbers were measured with)
@@ -193,13 +244,21 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
     s"GdxScan(path=$path, symbol=$symbol, pushed=${pushed.mkString(",")})"
 }
 
+object GdxScan {
+  /** Records a scan may decode on the driver: 16 blocks of
+    * [[GdxCodec.DefaultBlockSize]]. Decoding one 4096-record block takes
+    * about 1 ms, while the Spark job a distributed read launches costs
+    * 13–45 ms on a 4-vCPU host, so 16 blocks stay well under one job.
+    */
+  val DriverBudget: Long = 16L * GdxCodec.DefaultBlockSize
+}
+
 case class GdxInputPartition(shardPath: String, symbol: String) extends InputPartition
 case class GdxCatalogPartition(shardPaths: Seq[String]) extends InputPartition
 case class GdxUelPartition(shardPaths: Seq[String]) extends InputPartition
 case class GdxAcronymPartition(shardPaths: Seq[String]) extends InputPartition
 
-class GdxReaderFactory(fullSchema: StructType, required: StructType,
-    pushed: Seq[DimLabelFilter], symbol: String,
+class GdxReaderFactory(required: StructType, pushed: Seq[DimLabelFilter],
     raw: Boolean = false, vectorized: Boolean = true)
     extends PartitionReaderFactory {
 
@@ -209,7 +268,7 @@ class GdxReaderFactory(fullSchema: StructType, required: StructType,
       case GdxUelPartition(shards) => new GdxUelReader(shards, required)
       case GdxAcronymPartition(shards) => new GdxAcronymReader(shards, required)
       case GdxInputPartition(shard, sym) =>
-        new GdxSymbolReader(shard, sym, fullSchema, required, pushed, raw)
+        new GdxSymbolReader(new GdxSymbolDecode(shard, sym, pushed, raw), required)
     }
 
   // vectorized path for symbol record scans (the data-sized reads —
@@ -223,7 +282,7 @@ class GdxReaderFactory(fullSchema: StructType, required: StructType,
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     partition match {
       case GdxInputPartition(shard, sym) =>
-        new GdxSymbolColumnarReader(shard, sym, required, pushed, raw)
+        new GdxSymbolColumnarReader(new GdxSymbolDecode(shard, sym, pushed, raw), required)
       case other => throw new IllegalStateException(
         s"columnar read requested for non-symbol partition $other")
     }
@@ -452,6 +511,14 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
 
   def textOf(t: Int): String = stream.textAt(t)
 
+  /** Records in the blocks this shard's zone maps keep (0 if the shard
+    * cannot match); see [[GdxCodec.GdxRecordStream.matchingRecords]].
+    */
+  def matchingRecords: Long = if (stream == null) 0L else stream.matchingRecords
+
+  /** Records decoded so far. */
+  def decoded: Long = if (stream == null) 0L else stream.decoded
+
   /** Stored value arity of this symbol (0 set/alias, 1 parameter, 5). */
   val valueArity: Int = meta.typ match {
     case SymbolType.Set | SymbolType.Alias => 0
@@ -507,11 +574,9 @@ private[sources] object GdxSymbolDecode {
   }
 }
 
-class GdxSymbolReader(path: String, symbol: String, fullSchema: StructType,
-    required: StructType, pushed: Seq[DimLabelFilter],
-    raw: Boolean = false) extends PartitionReader[InternalRow] {
+class GdxSymbolReader private[sources] (core: GdxSymbolDecode, required: StructType)
+    extends PartitionReader[InternalRow] {
 
-  private val core = new GdxSymbolDecode(path, symbol, pushed, raw)
   private val header = core.header
   private val meta = core.meta
   private var cur: GdxRecord = _
@@ -569,15 +634,13 @@ class GdxSymbolReader(path: String, symbol: String, fullSchema: StructType,
   * reader: block skipping, pushed-filter residual, special-value
   * mapping all shared.
   */
-class GdxSymbolColumnarReader(path: String, symbol: String,
-    required: StructType, pushed: Seq[DimLabelFilter], raw: Boolean,
-    batchSize: Int = GdxCodec.DefaultBlockSize)
+class GdxSymbolColumnarReader private[sources] (core: GdxSymbolDecode,
+    required: StructType, batchSize: Int = GdxCodec.DefaultBlockSize)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
   import org.apache.spark.sql.execution.vectorized.{Dictionary, OnHeapColumnVector, WritableColumnVector}
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-  private val core = new GdxSymbolDecode(path, symbol, pushed, raw)
   private val vectors: Array[OnHeapColumnVector] =
     OnHeapColumnVector.allocateColumns(batchSize, required)
   private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))

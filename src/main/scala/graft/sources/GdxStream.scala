@@ -152,7 +152,7 @@ class GdxMicroBatchStream(path: String, symbol: String, fullSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GdxReaderFactory(fullSchema, required, pushed, symbol, raw)
+    new GdxReaderFactory(required, pushed, raw)
 
   override def commit(end: Offset): Unit = ()
 

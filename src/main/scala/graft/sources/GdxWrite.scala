@@ -160,39 +160,42 @@ object GdxManifest {
   private[sources] def js(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
   private[sources] def unjs(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
 
-  /** Committed shard file names, when `path` is a manifested dataset. */
-  def files(path: String): Option[Seq[String]] = {
+  /** A committed shard: its file name, and its `records` and lowercased
+    * dim_1 label range when the entry has them.
+    */
+  final case class Entry(file: String, records: Option[Long], range: Option[(String, String)])
+
+  // fields matched per FIELD (not one positional entry regex): a quoted
+  // value can never contain an unescaped quote, so "lo":" cannot occur
+  // inside another field's value, and entries stay parseable if fields
+  // are reordered or added — the same tolerance entryRx gives file names
+  private val loRx = """"lo":"((?:[^"\\]|\\.)*)"""".r
+  private val hiRx = """"hi":"((?:[^"\\]|\\.)*)"""".r
+  private val recordsRx = """"records":([0-9]+)""".r
+
+  /** The entries of a manifested dataset (None without a manifest): the
+    * one parser of the file, so membership, ranges and record counts
+    * cannot drift.
+    */
+  def entries(path: String): Option[Seq[Entry]] = {
     val mf = new File(path, "_manifest.json")
     if (!mf.isFile) None
     else Some(entryRx.findAllMatchIn(new String(Files.readAllBytes(mf.toPath),
-      StandardCharsets.UTF_8)).map(m => unjs(m.group(1))).toSeq)
+      StandardCharsets.UTF_8)).map { m =>
+      def field(rx: scala.util.matching.Regex) = rx.findFirstMatchIn(m.matched).map(_.group(1))
+      Entry(unjs(m.group(1)), field(recordsRx).map(_.toLong),
+        for (lo <- field(loRx); hi <- field(hiRx)) yield (unjs(lo), unjs(hi)))
+    }.toSeq)
   }
 
-  // lo/hi matched per FIELD (not one positional entry regex): a quoted
-  // value can never contain an unescaped quote, so the literal "lo":"
-  // cannot occur inside another field's value, and entries stay
-  // parseable if fields are ever reordered or new ones added — the
-  // same tolerance entryRx gives file names
-  private val loRx = """"lo":"((?:[^"\\]|\\.)*)"""".r
-  private val hiRx = """"hi":"((?:[^"\\]|\\.)*)"""".r
+  /** Committed shard file names, when `path` is a manifested dataset. */
+  def files(path: String): Option[Seq[String]] = entries(path).map(_.map(_.file))
 
   /** Per-shard lowercased dim_1 [lo, hi] label ranges, keyed by shard
-    * file name. Parsed with the SAME tolerant entry scanner [[files]]
-    * uses — one parser for the manifest, so a format evolution cannot
-    * silently disable range pruning while membership keeps working.
-    * Shards without range fields are simply absent (never pruned).
+    * file name; shards without range fields are absent (never pruned).
     */
-  def ranges(path: String): Map[String, (String, String)] = {
-    val mf = new File(path, "_manifest.json")
-    if (!mf.isFile) return Map.empty
-    val txt = new String(Files.readAllBytes(mf.toPath), StandardCharsets.UTF_8)
-    entryRx.findAllMatchIn(txt).flatMap { m =>
-      for {
-        lo <- loRx.findFirstMatchIn(m.matched)
-        hi <- hiRx.findFirstMatchIn(m.matched)
-      } yield unjs(m.group(1)) -> (unjs(lo.group(1)), unjs(hi.group(1)))
-    }.toMap
-  }
+  def ranges(path: String): Map[String, (String, String)] =
+    entries(path).getOrElse(Nil).flatMap(e => e.range.map(e.file -> _)).toMap
 
   def entryJson(c: GdxShardCommit): String = {
     val range = (c.lo, c.hi) match {

@@ -266,6 +266,30 @@ class GdxDecodeKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("a key outside the UEL table or a text outside the pool, patched into a raw block, is rejected naming file and symbol") {
+    val b = new GdxBuilder()
+    b.addSymbol("p", SymbolType.Parameter, 1, (0 until 5).map(i => (Seq(s"u$i"), Array(i.toDouble), None)))
+    b.addSymbol("s", SymbolType.Set, 1, (0 until 3).map(i => (Seq(s"u$i"), Array.empty[Double], Some(s"text $i"))))
+    val full = tmp("keys.gdx")
+    GdxCodec.write(b.result(), full, compress = false)
+    assert(GdxCodec.readHeader(full).codec == GdxCodec.CodecNone)
+    val bytes = Files.readAllBytes(Paths.get(full))
+    val blobs = blobsOf(full)
+    // a record is firstChanged, then one key varint per dim, then (sets
+    // only) a text varint; 0x7f is a one-byte varint past both tables
+    for ((sym, at, why) <- Seq(("p", 1, "outside the UEL table"), ("s", 2, "outside the text pool"))) {
+      val start = blobs.find(_._1 == sym).get._2
+      val patched = bytes.clone()
+      assert(patched(start + at) < 5, s"$sym: byte $at is not a small index")
+      patched(start + at) = 0x7f
+      val q = tmp(s"patched-$sym.gdx")
+      Files.write(Paths.get(q), patched)
+      val e = intercept[IOException](GdxCodec.read(q))
+      assertNames(e, q, sym)
+      assert(e.getMessage.contains(why), e.getMessage)
+    }
+  }
+
   test("the writer cuts a block before its raw bytes pass the cap, whatever blockSize") {
     val p = tmp("cut.gdx")
     val enc = new GdxStreamEncoder(p, "v", SymbolType.Variable, 0, blockSize = Int.MaxValue)
