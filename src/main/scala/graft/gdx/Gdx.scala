@@ -925,9 +925,11 @@ final case class GdxFile(spark: SparkSession, path: String) {
     *               literal label plans ONE InputPartition out of O(10⁵)
     *               shards); globs with wildcards apply post-scan. Such a
     *               slice runs on the driver, with no Spark job, when it
-    *               plans at most `defaultParallelism` shards whose zone
-    *               maps keep at most [[graft.sources.GdxScan.DriverBudget]]
-    *               records (16 blocks, about 16 ms of decode against the
+    *               plans at most one shard per driver core (and at most
+    *               `defaultParallelism`) and each shard's zone maps keep
+    *               at most [[graft.sources.GdxScan.DriverBudget]] records (64
+    *               blocks: the shards decode concurrently, one thread
+    *               each, at ~0.26 ms a block, so about 16 ms against the
     *               13–45 ms a job costs); see [[graft.sources.GdxDriverScan]].
     * @param reshape pivot the last dimension to columns (gdxpy's 2-D
     *               Series→DataFrame reshape).

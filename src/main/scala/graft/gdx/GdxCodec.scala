@@ -966,16 +966,21 @@ object GdxCodec {
 
     override def next(): GdxRecord = {
       val keys = new Array[Int](meta.dim)
-      val t = nextInto(keys, scratchVals)
+      record(keys, nextInto(keys, scratchVals), scratchVals)
+    }
+
+    /** The record [[nextKeysInto]] and [[readValuesInto]] decoded into
+      * `keys` (taken as is), text index `t` and `values` (copied).
+      */
+    def record(keys: Array[Int], t: Int, values: Array[Double]): GdxRecord =
       meta.typ match {
         case SymbolType.Set | SymbolType.Alias =>
           GdxRecord(keys, Array.empty, if (t == 0) None else Some(texts(t - 1)))
         case SymbolType.Parameter =>
-          GdxRecord(keys, Array(scratchVals(0)))
+          GdxRecord(keys, Array(values(0)))
         case _ =>
-          GdxRecord(keys, java.util.Arrays.copyOf(scratchVals, 5))
+          GdxRecord(keys, java.util.Arrays.copyOf(values, 5))
       }
-    }
 
     override def close(): Unit = {
       publishDecoded()

@@ -94,10 +94,10 @@ class GdxScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
 /** A GDX symbol (or catalog view) scan. It plans one partition per
   * committed shard that manifest pruning keeps, once per scan. A scan
   * that pushes a label filter, plans at most `defaultParallelism`
-  * partitions and keeps at most [[GdxScan.DriverBudget]] records in its
-  * zone maps runs on the driver with no Spark job ([[GdxDriverScan]],
-  * through [[driverCores]]); every other scan runs in tasks, through
-  * [[createReaderFactory]].
+  * partitions and keeps at most [[GdxScan.DriverBudget]] records in each
+  * shard's zone maps runs on the driver with no Spark job
+  * ([[GdxDriverScan]], through [[driverCores]]); every other scan runs in
+  * tasks, through [[createReaderFactory]].
   */
 class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabelFilter],
     options: CaseInsensitiveStringMap) extends Scan with Batch {
@@ -125,18 +125,17 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
       committedOnly = options.getBoolean("committedOnly", false))
 
   /** Planned once per scan, from one manifest read, and shared by the
-    * driver-venue size check and BatchScanExec: the partitions, and the
-    * records the planned shards' manifest entries declare (None unless
-    * every planned shard has a `records` entry).
+    * driver-venue size check and BatchScanExec: the partitions, and per
+    * symbol partition the records its shard's manifest entry declares.
     */
-  private lazy val planned: (Array[InputPartition], Option[Long]) = {
+  private lazy val planned: (Array[InputPartition], Seq[Option[Long]]) = {
     // batch membership honors the manifest (exactly-once vs in-flight
     // streaming epochs); un-manifested dirs fall back to listing
     val shards = GdxTable.committedShards(path)
     val paths = shards.map(_._1)
-    if (symbol == GdxTable.CatalogSymbol) (Array(GdxCatalogPartition(paths)), None)
-    else if (symbol == GdxTable.UelSymbol) (Array(GdxUelPartition(paths)), None)
-    else if (symbol == GdxTable.AcronymSymbol) (Array(GdxAcronymPartition(paths)), None)
+    if (symbol == GdxTable.CatalogSymbol) (Array(GdxCatalogPartition(paths)), Nil)
+    else if (symbol == GdxTable.UelSymbol) (Array(GdxUelPartition(paths)), Nil)
+    else if (symbol == GdxTable.AcronymSymbol) (Array(GdxAcronymPartition(paths)), Nil)
     else {
       // empty symbol means "the dataset's first symbol" — resolve the
       // NAME once at plan time (from the same first shard schemaFor
@@ -149,9 +148,8 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
           GdxTable.resolveSymbol(GdxCodec.readHeader(s0), "", s0).name
         }.getOrElse(symbol)
       val kept = prunedByManifest(shards)
-      val records = kept.map(_._2.flatMap(_.records))
       (kept.map(s => GdxInputPartition(s._1, resolved): InputPartition).toArray,
-        Option.when(records.forall(_.isDefined))(records.flatten.sum))
+        kept.map(_._2.flatMap(_.records)))
     }
   }
 
@@ -196,38 +194,45 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
     }
   }
 
-  /** The open decode cores of this scan when it may run on the driver
-    * ([[GdxDriverScan]]): it pushes at least one label filter, plans at
-    * most `maxPartitions` symbol partitions, and the blocks its zone
-    * maps keep hold at most [[GdxScan.DriverBudget]] records. None
-    * otherwise, with every core it opened closed again.
+  /** The open decode cores of this scan, in shard order, when it may run
+    * on the driver ([[GdxDriverScan]]): it pushes at least one label
+    * filter, plans at most `maxPartitions` symbol partitions, and the
+    * blocks each shard's zone maps keep hold at most
+    * [[GdxScan.DriverBudget]] records. None otherwise, with every core it
+    * opened closed again.
     *
-    * The budget is counted cheaply. The planned shards' manifest
-    * `records` bound the kept blocks from above (a writer's commit
-    * records its shard's count, an adopted shard the sum over its
-    * symbols); only when their sum passes the budget is each shard's
-    * block index counted, shard by shard, and the count stops at the
-    * first shard that takes it past the budget. An over-budget scan
-    * such as a label recurring in every block therefore costs about one
-    * header read before it falls back.
+    * The budget is checked cheaply. A shard's manifest `records` bound
+    * its kept blocks from above (a writer's commit records its shard's
+    * count, an adopted shard the sum over its symbols); only a shard
+    * whose entry is over the budget, or missing, has its block index
+    * counted, and the check stops at the first shard over the budget. A
+    * label recurring in every block of an over-budget shard therefore
+    * costs the header reads up to that shard before the scan falls back.
     */
   private[sources] def driverCores(maxPartitions: Int): Option[Seq[GdxSymbolDecode]] = {
-    val parts = planInputPartitions()
+    val (parts, records) = planned
     val shards = parts.collect { case p: GdxInputPartition => p }
-    if (pushed.isEmpty || parts.length > maxPartitions || shards.length != parts.length)
+    if (overBudget || pushed.isEmpty || parts.length > maxPartitions || shards.length != parts.length)
       return None
-    val counted = !planned._2.exists(_ <= GdxScan.DriverBudget)
     val cores = scala.collection.mutable.ArrayBuffer.empty[GdxSymbolDecode]
-    var kept = 0L
-    try
-      shards.iterator.takeWhile(_ => kept <= GdxScan.DriverBudget).foreach { p =>
+    var fits = true
+    try {
+      val it = shards.iterator.zip(records.iterator)
+      while (fits && it.hasNext) {
+        val (p, declared) = it.next()
         cores += new GdxSymbolDecode(p.shardPath, p.symbol, pushed, raw)
-        if (counted) kept += cores.last.matchingRecords
+        fits = declared.exists(_ <= GdxScan.DriverBudget) ||
+          cores.last.matchingRecords <= GdxScan.DriverBudget
       }
-    catch { case e: Throwable => cores.foreach(_.close()); throw e }
-    if (kept <= GdxScan.DriverBudget) Some(cores.toSeq)
-    else { cores.foreach(_.close()); None }
+    } catch { case e: Throwable => cores.foreach(_.close()); throw e }
+    if (fits) Some(cores.toSeq)
+    else { overBudget = true; cores.foreach(_.close()); None }
   }
+
+  // set once a budget check fails: an action's limit plans this scan
+  // twice (under the limit, then under Spark's CollectLimitExec), and a
+  // second check would read the same block indexes again
+  @volatile private var overBudget = false
 
   /** A row reader over a core from [[driverCores]]; closing it closes the core. */
   private[sources] def rowReader(core: GdxSymbolDecode): PartitionReader[InternalRow] =
@@ -245,12 +250,26 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
 }
 
 object GdxScan {
-  /** Records a scan may decode on the driver: 16 blocks of
-    * [[GdxCodec.DefaultBlockSize]]. Decoding one 4096-record block takes
-    * about 1 ms, while the Spark job a distributed read launches costs
-    * 13–45 ms on a 4-vCPU host, so 16 blocks stay well under one job.
+  /** Records one shard may keep in its zone maps for the scan to run on
+    * the driver: 64 blocks of [[GdxCodec.DefaultBlockSize]]. The driver
+    * decodes its shards concurrently, one thread per core
+    * ([[GdxDriverScan.maxShards]]), so the budget is per core: v4 decodes
+    * ~15–16 M records/s on one core, ~0.26 ms per 4096-record block, and
+    * 64 blocks take ~16 ms.
+    *
+    * Measured at the boundary on a 4-vCPU host (`local[4]`, one `dim_2`
+    * label present in every block, collect, median of 15 runs, two runs
+    * per venue), driver venue vs a Spark job:
+    *  - 1/32 of the records kept, as gdx_io's recurring labels: at 64
+    *    blocks a shard 54–56 vs 72–81 ms on one shard and 71–75 vs
+    *    94–105 ms on four; the driver still wins at 128 blocks;
+    *  - 7/8 of the records kept, one shard: 192–257 vs 257–285 ms at 64
+    *    blocks, 509–558 vs 522–618 ms at 128;
+    *  - 7/8 kept, four shards: the job wins by 6–16% at 32, 64 and 128
+    *    blocks alike (797–961 vs 713–826 ms at 64), so a smaller budget
+    *    does not close that gap.
     */
-  val DriverBudget: Long = 16L * GdxCodec.DefaultBlockSize
+  val DriverBudget: Long = 64L * GdxCodec.DefaultBlockSize
 }
 
 case class GdxInputPartition(shardPath: String, symbol: String) extends InputPartition
@@ -457,8 +476,6 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   private val stream: GdxCodec.GdxRecordStream =
     if (shardCanMatch) GdxCodec.openRecordStream(path, header, meta, dimFilters)
     else null
-  private val records: Iterator[GdxRecord] =
-    if (stream == null) Iterator.empty else stream
 
   def firstVal(r: GdxRecord): Double =
     if (r.values.nonEmpty) r.values(0) else 0.0
@@ -471,13 +488,17 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   def mapValue(v: Double): Double =
     if (raw) v else SpecialValues.toDouble(v)
 
-  /** Next record passing the residual per-record filter; null at end. */
+  // the row reader's keys and values before a record is kept
+  private val rowKeys = new Array[Int](meta.dim)
+  private val rowVals = new Array[Double](5)
+
+  /** Next record passing the residual per-record filter; null at end.
+    * The row twin of [[nextKeptInto]]: keys decode first, and only a
+    * kept record has its values read and a [[GdxRecord]] built.
+    */
   def nextKept(): GdxRecord = {
-    while (records.hasNext) {
-      val r = records.next()
-      if (keepKeys(r.keys)) return r
-    }
-    null
+    val t = nextKeptInto(rowKeys, rowVals)
+    if (t < 0) null else stream.record(rowKeys.clone(), t, rowVals)
   }
 
   /** Flyweight twin of [[nextKept]] for the columnar reader: decodes

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,12 +66,21 @@ class GdxDriverScanSpec extends AnyFunSuite {
     col("id").cast("double").as("value"))
   private lazy val small: String = writeSharded(smallSrc, 4)
 
-  // 70,000 records: every 4096-record block holds every dim_2 label
-  private lazy val bigSrc: DataFrame = spark.range(70000).select(
+  // 280,000 records in one shard, over the per-shard budget: every
+  // 4096-record block holds every dim_2 label
+  private lazy val bigSrc: DataFrame = spark.range(280000).select(
     format_string("b%05d", (col("id") / 10).cast("int")).as("dim_1"),
+    concat(lit("c"), (col("id") % 40).cast("string")).as("dim_2"),
+    col("id").cast("double").as("value"))
+  private lazy val big: String = writeSharded(bigSrc, 1)
+
+  // 70,000 records in 4 shards, each under the per-shard budget: every
+  // 4096-record block holds every dim_2 label
+  private lazy val wideSrc: DataFrame = spark.range(70000).select(
+    format_string("w%05d", (col("id") / 10).cast("int")).as("dim_1"),
     concat(lit("c"), (col("id") % 10).cast("string")).as("dim_2"),
     col("id").cast("double").as("value"))
-  private lazy val big: String = writeSharded(bigSrc, 4)
+  private lazy val wide: String = writeSharded(wideSrc, 4)
 
   /** `slice` runs no job and returns the rows of `cond` over `source`. */
   private def assertDriverSlice(slice: => DataFrame, source: DataFrame, cond: Column): Unit = {
@@ -80,6 +90,11 @@ class GdxDriverScanSpec extends AnyFunSuite {
     assert(jobs == 0, s"$cond ran $jobs jobs")
     assert(rowsOf(got) == want, s"$cond")
   }
+
+  /** The GDX scan `df` plans. */
+  private def gdxScanOf(df: DataFrame): GdxScan =
+    df.queryExecution.optimizedPlan.collectFirst { case r: DataSourceV2ScanRelation => r.scan }
+      .get.asInstanceOf[GdxScan]
 
   /** A local frame holding `df`'s rows, for filters evaluated by Spark
     * over the same data without the GDX reader.
@@ -94,7 +109,7 @@ class GdxDriverScanSpec extends AnyFunSuite {
     assert(sliceJobs == 0)
     assert(rowsOf(slice) == rowsOf(bigSrc.filter(label).collect()) && slice.length == 10)
 
-    // c3 recurs in every block of every shard: 70,000 records kept
+    // c3 recurs in every block of the one shard: 280,000 records kept
     val recurring = col("dim_2") === "c3"
     val (over, overJobs) = withJobs(Gdx.symbol(spark, big, "p").filter(recurring).collect())
     assert(overJobs > 0)
@@ -192,13 +207,80 @@ class GdxDriverScanSpec extends AnyFunSuite {
     val (first, firstJobs) = withJobs(df.first())
     assert(firstJobs == 0 && want.contains(first.toString))
     // isEmpty takes through a limit node over the driver scan's rows
-    assert(!df.isEmpty)
+    val (empty, emptyJobs) = withJobs(df.isEmpty)
+    assert(!empty && emptyJobs == 0)
 
     // a label outside every shard's range plans no partition at all
     val none = Gdx.symbol(spark, small, "p").filter(col("dim_1") === "zzz")
     val (noRows, noJobs) = withJobs(none.collect())
     assert(noJobs == 0 && noRows.isEmpty)
-    assert(none.isEmpty && none.count() == 0 && none.rdd.getNumPartitions == 0)
+    val (noneEmpty, noneEmptyJobs) = withJobs(none.isEmpty)
+    assert(noneEmpty && noneEmptyJobs == 0)
+    assert(none.count() == 0 && none.rdd.getNumPartitions == 0)
+  }
+
+  test("a recurring-label slice over shards each under the budget runs no job, rows in shard order") {
+    wide
+    val c3 = col("dim_2") === "c3"
+    val shards = GdxTable.committedShardsOf(wide)
+    assert(shards.length == 4 && shards.length <= spark.sparkContext.defaultParallelism)
+    // one thread decoding the shards in turn, in their stored order
+    val want = shards.flatMap { s =>
+      val h = GdxCodec.readHeader(s)
+      GdxCodec.readSymbolRecords(s, h, h.metas.head).map(r => r.keys.toSeq.map(h.uels(_)) :+ r.values(0))
+        .filter(_(1) == "c3").map(Row.fromSeq(_).toString)
+    }
+    val declared = GdxManifest.entries(wide).get.flatMap(_.records)
+    assert(declared.length == 4 && declared.forall(_ <= GdxScan.DriverBudget) && declared.sum > 65536,
+      s"fixture: more than 65,536 records in all, each shard under the budget: $declared")
+    assertDriverSlice(Gdx.symbol(spark, wide, "p").filter(c3), wideSrc, c3)
+    val (got, jobs) = withJobs(Gdx.symbol(spark, wide, "p").filter(c3).collect())
+    assert(jobs == 0 && got.map(_.toString).toSeq == want)
+  }
+
+  test("a damaged second shard fails the driver slice at planning with its IOException; no descriptor leaks") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd")
+    val c3 = col("dim_2") === "c3"
+    for ((damage, cut) <- Seq("truncated" -> true, "block flipped" -> false)) {
+      val dir = writeSharded(smallSrc, 4)
+      val second = Paths.get(GdxTable.committedShardsOf(dir)(1))
+      val bytes = Files.readAllBytes(second)
+      // a cut section fails as its core opens; a flip in the last block's
+      // LZ4 bytes fails its checksum as a pool thread decodes it
+      if (cut) Files.write(second, java.util.Arrays.copyOf(bytes, bytes.length * 2 / 3))
+      else { bytes(bytes.length - 1) = (bytes(bytes.length - 1) ^ 0x01).toByte; Files.write(second, bytes) }
+      def plan(): java.io.IOException =
+        intercept[java.io.IOException](Gdx.symbol(spark, dir, "p").filter(c3).queryExecution.executedPlan)
+      val first = plan()
+      assert(first.getMessage.contains(second.toString), s"$damage: ${first.getMessage}")
+      val before = fds.list().length
+      for (_ <- 1 to 10) plan()
+      val after = fds.list().length
+      assert(after <= before, s"$damage: $before descriptors before 10 failed slices, $after after")
+    }
+  }
+
+  test("a slice planning more shards than the driver has cores keeps the distributed path") {
+    val cores = Runtime.getRuntime.availableProcessors
+    // a cluster's defaultParallelism counts every executor core
+    assert(GdxDriverScan.maxShards(cores * 64) == cores)
+    assert(GdxDriverScan.maxShards(1) == 1)
+    val dir = writeSharded(smallSrc, cores + 1)
+    val scan = gdxScanOf(Gdx.symbol(spark, dir, "p").filter(col("dim_2") === "c3"))
+    assert(scan.planInputPartitions().length > cores)
+    assert(scan.driverCores(GdxDriverScan.maxShards(cores * 64)).isEmpty)
+  }
+
+  test("an over-budget slice checks its budget once per plan") {
+    val dir = s"${tmpDir()}/p"
+    Files.createDirectories(Paths.get(dir))
+    Files.list(Paths.get(big)).iterator.asScala.foreach(f => Files.copy(f, Paths.get(dir).resolve(f.getFileName)))
+    val scan = gdxScanOf(Gdx.symbol(spark, dir, "p").filter(col("dim_2") === "c3"))
+    assert(scan.driverCores(4).isEmpty)
+    // a second check would fail opening the emptied shard
+    GdxTable.committedShardsOf(dir).foreach(s => Files.write(Paths.get(s), Array.emptyByteArray))
+    assert(scan.driverCores(4).isEmpty)
   }
 
   test("explain still names GdxScan and the pushed filter") {
