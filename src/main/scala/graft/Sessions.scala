@@ -34,22 +34,21 @@ object Sessions {
     s
   }
 
-  /** Drop every persisted RDD block still registered with the block
-    * manager — the localCheckpoint residue of iterative operators
-    * (connected components, the minhash band table). Each query frees
-    * its intermediate rounds itself, but the final checkpoint of a
-    * returned frame can only be released after the result is consumed;
-    * Bench and Verify call this between queries so a ~100-query session
-    * never accumulates dead blocks (measured: dedup_cluster_canonical
-    * drifted to ~2.6× its isolated time before this cleanup).
+  /** Drop the checkpoint blocks still registered with the block
+    * manager — the final checkpoint of a frame an iterative operator
+    * returned, and the one-shot localCheckpoints of query builders (the
+    * minhash band table). Each iterative operator frees its
+    * intermediate rounds itself ([[Checkpoints]]), but a returned
+    * frame's blocks can only go once the result is consumed; Bench and
+    * Verify call this between queries so a ~100-query session never
+    * accumulates dead blocks (measured: dedup_cluster_canonical drifted
+    * to ~2.6× its isolated time before this cleanup). Only checkpoint
+    * RDDs are freed: a caller's own `cache()` keeps its blocks.
     *
-    * CONTRACT: single-query-at-a-time. This frees EVERY persistent RDD
-    * in the context; a localCheckpointed frame has truncated lineage,
-    * so calling this while another query on the shared session is
-    * mid-flight would drop blocks it cannot recompute. Bench/Verify
-    * run queries sequentially, which is the only pattern this supports
-    * (same assumption inside connectedComponents' per-round frees).
+    * Call it between queries, not during one: a localCheckpointed
+    * frame has truncated lineage, so calling this while another query
+    * on the shared session is mid-flight would drop blocks it cannot
+    * recompute.
     */
-  def releaseCheckpoints(s: SparkSession): Unit =
-    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  def releaseCheckpoints(s: SparkSession): Unit = Checkpoints.releaseAll(s)
 }

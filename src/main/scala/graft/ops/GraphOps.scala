@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, T}
+import graft.{Checkpoints, QueryModule, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -352,7 +352,7 @@ object GraphOps extends QueryModule {
          |FROM hub$iters h JOIN auth$iters a ON a.vid = h.vid
          |ORDER BY c_custkey""".stripMargin
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val verts = rc.pin("verts",
       T(s, d, "customer").select(col("c_custkey").as("vid")))
     val e0 = leadEdges(s, d, withN2 = true, maxGap = None)
@@ -392,7 +392,7 @@ object GraphOps extends QueryModule {
       hub = hraw.select(col("vid"),
         gridFix(col("hraw") / lit(obsH.get("s").asInstanceOf[Double])).as("hub"))
     }
-    Seq("verts", "edges").foreach(rc.release)
+    rc.release("verts", "edges")
     hub.join(auth, Seq("vid"))
       .select(col("vid").as("c_custkey"), col("hub"), col("auth").as("authority"))
       .orderBy("c_custkey") // one row per vertex = input-sized
@@ -401,13 +401,13 @@ object GraphOps extends QueryModule {
   /** Seed-restart PageRank over an explicit edge frame — LlmOps
     * [[graft.ops.LlmOps.pageRank]] with the restart vector s (and the
     * dangling teleport) concentrated on `isSeed` vertices. Same
-    * per-round checkpoint-and-free discipline via [[RoundCheckpoints]];
+    * per-round checkpoint-and-free discipline via [[Checkpoints]];
     * same ε-shifted 1e-6 fixpoint grid per round.
     */
   private[ops] def personalizedPageRank(vertices0: DataFrame, edges: DataFrame,
       isSeed: org.apache.spark.sql.Column, iters: Int,
       damping: Double = 0.85): DataFrame = {
-    val rc = new RoundCheckpoints(vertices0.sparkSession.sparkContext)
+    val rc = new Checkpoints
     val vertices = rc.pin("verts", vertices0.withColumn("seed", isSeed))
     val nSeeds = vertices.filter(col("seed")).count()
     require(nSeeds > 0, "personalizedPageRank: empty seed set")
@@ -456,7 +456,7 @@ object GraphOps extends QueryModule {
         .observe(obs, sum(when(col("dang"), col("rank"))).as("dm")))
       dmass = quantized(obs.get("dm"))
     }
-    Seq("verts", "edges", "deg", "withdeg", "vbase").foreach(rc.release)
+    rc.release("verts", "edges", "deg", "withdeg", "vbase")
     // the final round's blocks back the returned frame's lineage;
     // the harness frees them via Sessions.releaseCheckpoints
     ranks.select("vid", "rank")
@@ -558,72 +558,6 @@ object GraphOps extends QueryModule {
       .reportSorted("nk", "degree")
   }
 
-  /** Exact connected components (min component label per vertex +
-    * component size) on the gap-gated chain graph. The DuckDB oracle
-    * is a RECURSIVE CTE computing the min reachable label — a
-    * semantics-level spec of CC that shares no code shape with the
-    * pointer-jumping loop, so a hash match is strong evidence the
-    * iterative plan converged to the true components.
-    */
-  /** Pointer-jumping min-label connected components over an explicit
-    * `(a, b)` edge frame: per round every vertex takes the min of its
-    * own label, its neighbors' labels, and its LABEL'S label (the
-    * jump — label chains halve each round), so rounds ≈ log₂(diameter)
-    * where plain propagation needs diameter rounds. Returns `(id,
-    * comp)` for every vertex of `nodes`. Same checkpoint-and-free
-    * discipline as LlmOps.connectedComponents / PageRank; returns-on-
-    * convergence or throws (a half-converged labeling silently splits
-    * components — never worth returning).
-    */
-  /** ONE copy of the PageRank/CC checkpoint-and-free discipline shared
-    * by the iterative graph runners (pointerJumpCC, label propagation):
-    * each `cycle` localCheckpoints the new round frame (eager — blocks
-    * exist before anything is freed) and then releases the PREVIOUS
-    * round's blocks under the same tag; `pin` checkpoints a frame that
-    * lives for the whole run (the edge table); `release` drops a tag
-    * explicitly (error paths, end-of-run). Same single-query-at-a-time
-    * contract as Sessions.releaseCheckpoints — the persisted-set diff
-    * would capture a CONCURRENT query's blocks on a shared context.
-    */
-  private final class RoundCheckpoints(sc: org.apache.spark.SparkContext) {
-    private def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    private def free(ids: Set[Int]): Unit = ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    private var held = Map.empty[String, Set[Int]]
-    /** Per-round checkpoint + free-previous. `sever` additionally
-      * rebuilds the frame over the checkpointed rows to DROP the
-      * carried Catalyst stats (r14): localCheckpoint's LogicalRDD
-      * preserves the origin plan's sizeInBytes, and join-stats
-      * estimation MULTIPLIES child sizes — an operator that cycles a
-      * frame joined against ITSELF multiplies the stat's bit length
-      * every round, and past ~25 compounded rounds the planner sits in
-      * million-digit BigInteger multiplications (measured as a >15 min
-      * hang in graph_mst_boruvka's nested CC). Severing restarts from
-      * default stats (AQE re-sizes joins from runtime statistics, so
-      * the lost estimate costs nothing) at the price of a Row
-      * conversion on the cycled frame — so it is opt-in: required for
-      * [[pointerJumpCC]] whose iteration count is data-dependent and
-      * whose labels frame self-joins; the fixed-small-round operators
-      * (PageRank/LPA/HITS/…) keep the conversion-free path.
-      */
-    def cycle(tag: String, df: DataFrame, sever: Boolean = false): DataFrame = {
-      val pre = persisted
-      val out = df.localCheckpoint()
-      free(held.getOrElse(tag, Set.empty))
-      held += tag -> (persisted -- pre)
-      if (sever) df.sparkSession.createDataFrame(out.rdd, out.schema) else out
-    }
-    def pin(tag: String, df: DataFrame): DataFrame = {
-      val pre = persisted
-      val out = df.localCheckpoint()
-      held += tag -> (held.getOrElse(tag, Set.empty) ++ (persisted -- pre))
-      out
-    }
-    def release(tag: String): Unit = {
-      free(held.getOrElse(tag, Set.empty)); held -= tag
-    }
-  }
-
   /** Symmetrized, pinned edge frame — the shared first step of every
     * iterative runner here. Pinned HASH-PARTITIONED BY `src` (r18):
     * localCheckpoint preserves the physical partitioning, so every
@@ -636,14 +570,26 @@ object GraphOps extends QueryModule {
     * so "join labels on dst, group by src" ≡ "join labels on src,
     * group by dst" row-for-row.
     */
-  private def pinnedSym(rc: RoundCheckpoints, edges: DataFrame): DataFrame =
+  private def pinnedSym(rc: Checkpoints, edges: DataFrame): DataFrame =
     rc.pin("sym", edges.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(edges.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("src")))
 
+  /** Pointer-jumping min-label connected components over an explicit
+    * `(a, b)` edge frame: per round every vertex takes the min of its
+    * own label, its neighbors' labels, and its LABEL'S label (the
+    * jump — label chains halve each round), so rounds ≈ log₂(diameter)
+    * where plain propagation needs diameter rounds. Returns `(id,
+    * comp)` for every vertex of `nodes`. Round checkpoints go through
+    * `rc` (tags `sym`, `labels`): a caller that runs the CC repeatedly
+    * passes its own runtime, so each call's first round frees the
+    * previous call's labels. Returns-on-convergence or throws (a
+    * half-converged labeling silently splits components — never worth
+    * returning).
+    */
   private[ops] def pointerJumpCC(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 24, init: Option[DataFrame] = None): DataFrame = {
-    val rc = new RoundCheckpoints(nodes.sparkSession.sparkContext)
+      maxIter: Int = 24, init: Option[DataFrame] = None,
+      rc: Checkpoints = new Checkpoints): DataFrame = {
     val sym = pinnedSym(rc, edges)
     // optional warm start (id, lbl) — lbl must be a min-over-vertex-ids
     // label (Boruvka reuses the previous round's components so the CC
@@ -738,7 +684,7 @@ object GraphOps extends QueryModule {
       |SELECT nk, a, b, w
       |FROM (SELECT * FROM mst_intra UNION ALL SELECT * FROM mst_inter) t
       |ORDER BY a, b""".stripMargin) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val w = Window.partitionBy("nk").orderBy("id")
     val blk = T(s, d, "customer")
       .select(col("c_custkey").as("id"), col("c_nationkey").as("nk"))
@@ -806,15 +752,16 @@ object GraphOps extends QueryModule {
         // r19: use the CC result directly — pointerJumpCC's returned
         // frame is already backed by its final round's checkpoint, so
         // the outer rc.cycle("comp", …) was a REDUNDANT second full
-        // checkpoint job + row copy per round (its blocks are freed
-        // with everything else by Sessions.releaseCheckpoints).
+        // checkpoint job + row copy per round. The CC cycles its labels
+        // under this runtime, so its first round frees the superseded
+        // comp once the next labels are materialized.
         comp = pointerJumpCC(verts, mst.select("a", "b"),
-          init = Some(comp.select(col("id"), col("comp").as("lbl"))))
+          init = Some(comp.select(col("id"), col("comp").as("lbl"))), rc = rc)
         rounds += 1
       }
     }
-    rc.release("cand")
-    rc.release("wedges")
+    // only the mst checkpoint backs the returned frame
+    rc.release("cand", "wedges", "verts", "labels")
     val nation = T(s, d, "customer")
       .select(col("c_custkey").as("a"), col("c_nationkey").as("nk"))
     mst.join(nation, Seq("a"))
@@ -822,6 +769,13 @@ object GraphOps extends QueryModule {
       .orderBy("a", "b") // forest = vertex-sized output
   }
 
+  /** Exact connected components (min component label per vertex +
+    * component size) on the gap-gated chain graph. The DuckDB oracle
+    * is a RECURSIVE CTE computing the min reachable label — a
+    * semantics-level spec of CC that shares no code shape with the
+    * pointer-jumping loop, so a hash match is strong evidence the
+    * iterative plan converged to the true components.
+    */
   q("graph_connected_components",
     """WITH RECURSIVE c AS (SELECT c_custkey AS id, c_nationkey AS nk FROM customer),
       |l AS (SELECT nk, id, lead(id, 1) OVER (PARTITION BY nk ORDER BY id) AS n1
@@ -1105,7 +1059,7 @@ object GraphOps extends QueryModule {
          |  ON sz.lbl = l.lbl
          |ORDER BY id""".stripMargin
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val sym = pinnedSym(rc, blockEdges(s, d))
     val verts = T(s, d, "customer").select(col("c_custkey").as("id"))
     val labels = lpaLabels(rc, sym, verts)
@@ -1123,7 +1077,7 @@ object GraphOps extends QueryModule {
     * desynchronize detector and refiner. Leaves the final labels
     * checkpointed under rc tag "labels".
     */
-  private def lpaLabels(rc: RoundCheckpoints, sym: DataFrame,
+  private def lpaLabels(rc: Checkpoints, sym: DataFrame,
       verts: DataFrame): DataFrame = {
     var labels = verts.withColumn("lbl", col("id"))
     for (_ <- 1 to LpaRounds) {
@@ -1278,7 +1232,7 @@ object GraphOps extends QueryModule {
          |     qt
          |ORDER BY id""".stripMargin
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val e = blockEdges(s, d).localCheckpoint()
     val sym = pinnedSym(rc, e)
     // degrees survive rc.release("sym"): the final Q/size stage reads
@@ -1333,8 +1287,7 @@ object GraphOps extends QueryModule {
           when(col("id") % 2 === lit(r % 2) && col("gain") > col("sg"),
             col("nc")).otherwise(col("cm")).as("cm")))
     }
-    rc.release("labels")
-    rc.release("sym")
+    rc.release("labels", "sym")
     // Newman Q of the final partition (the graph_modularity arithmetic)
     val ic = e
       .join(comm.select(col("id").as("a"), col("cm").as("ca")), Seq("a"))
@@ -1423,7 +1376,7 @@ object GraphOps extends QueryModule {
     * frame and the centrality built on it can never disagree.
     */
   private def bfsDistances(s: SparkSession, d: String): DataFrame = {
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val sym = pinnedSym(rc, blockEdges(s, d))
     val lab = bfsDistancesOver(rc, sym, nationSeeds(s, d))
     rc.release("sym")
@@ -1439,7 +1392,7 @@ object GraphOps extends QueryModule {
     * [[bfsDistances]] (graph_bfs_distance / graph_closeness) and
     * [[graph_betweenness]]'s forward pass.
     */
-  private def bfsDistancesOver(rc: RoundCheckpoints, sym: DataFrame,
+  private def bfsDistancesOver(rc: Checkpoints, sym: DataFrame,
       seeds: DataFrame): DataFrame = {
     var lab = seeds.select(col("id"), lit(0L).as("dist"))
     for (_ <- 1 to BfsRounds) {
@@ -1473,7 +1426,7 @@ object GraphOps extends QueryModule {
     * (1.69→2.13 s regression), while here it replaces a whole second
     * pass (5.24→4.6 s win).
     */
-  private def bfsSigmaOver(rc: RoundCheckpoints, sym: DataFrame,
+  private def bfsSigmaOver(rc: Checkpoints, sym: DataFrame,
       seeds: DataFrame): DataFrame = {
     var lab = seeds.select(col("id"), lit(0L).as("dist"), lit(1L).as("sigma"))
     for (l <- 1 to BfsRounds) {
@@ -1663,7 +1616,7 @@ object GraphOps extends QueryModule {
          |FROM allv v JOIN alld d ON d.id = v.id
          |ORDER BY v.id""".stripMargin
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val sym = pinnedSym(rc, blockEdges(s, d))
     // forward (r18): the BFS runner carries the σ recurrence in the
     // SAME frontier frame — (id, dist, sigma) in one checkpointed
@@ -1861,7 +1814,7 @@ object GraphOps extends QueryModule {
     * pin that round 3 is the fixpoint (round-4 output identical).
     */
   private[ops] def kcorePeel(s: SparkSession, d: String, rounds: Int): DataFrame = {
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     var sym = pinnedSym(rc, blockEdges(s, d))
     for (_ <- 1 to rounds) {
       val alive = sym.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -1916,7 +1869,7 @@ object GraphOps extends QueryModule {
     head + rounds +
       s"\nSELECT vid AS c_custkey, x AS katz FROM x$iters ORDER BY c_custkey"
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val verts = rc.pin("verts",
       T(s, d, "customer").select(col("c_custkey").as("vid")))
     val e0 = leadEdges(s, d, withN2 = true, maxGap = None)
@@ -1932,7 +1885,7 @@ object GraphOps extends QueryModule {
           (floor((lit(1.0) + lit(0.125) * coalesce(col("in_sum"), lit(0.0)))
             * 1e6 + lit(0.5000005)) / 1e6).as("x")))
     }
-    Seq("verts", "edges").foreach(rc.release)
+    rc.release("verts", "edges")
     x.select(col("vid").as("c_custkey"), col("x").as("katz"))
       .orderBy("c_custkey") // one row per vertex = input-sized
   }
@@ -1989,7 +1942,7 @@ object GraphOps extends QueryModule {
     head + rounds +
       s"\nSELECT vid AS c_custkey, x AS eig FROM x$iters ORDER BY c_custkey"
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val verts = rc.pin("verts",
       T(s, d, "customer").select(col("c_custkey").as("vid")))
     val sym = pinnedSym(rc, blockEdges(s, d))
@@ -2007,7 +1960,7 @@ object GraphOps extends QueryModule {
           (floor(((coalesce(col("s"), lit(0.0)) * col("vcnt")) / col("tot"))
             * 1e6 + lit(0.5000005)) / 1e6).as("x")))
     }
-    Seq("verts", "sym").foreach(rc.release)
+    rc.release("verts", "sym")
     x.select(col("vid").as("c_custkey"), col("x").as("eig"))
       .orderBy("c_custkey") // one row per vertex = input-sized
   }
@@ -2061,7 +2014,7 @@ object GraphOps extends QueryModule {
          |FROM sup_e2 s JOIN e2 ON e2.a = s.a AND e2.b = s.b
          |ORDER BY s.a, s.b""".stripMargin
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     var e = rc.cycle("e", blockEdges(s, d))
     var sup: DataFrame = null
     for (_ <- 1 to 2) {
@@ -2133,7 +2086,7 @@ object GraphOps extends QueryModule {
     head + rounds +
       s"\nSELECT start AS c_custkey, path, cur AS end_id FROM w$steps ORDER BY c_custkey"
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val sym = pinnedSym(rc, blockEdges(s, d))
     var w = rc.cycle("w", T(s, d, "customer")
       .select(col("c_custkey").as("start"), col("c_custkey").as("cur"),
@@ -2205,7 +2158,7 @@ object GraphOps extends QueryModule {
          |SELECT id, CAST(min(dist) AS BIGINT) AS dist
          |FROM reach GROUP BY id ORDER BY id""".stripMargin
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val sym = rc.pin("wsym", pinnedSym(rc, blockEdges(s, d))
       .withColumn("w", (col("src") + col("dst")) % 7 + 1))
     var lab = nationSeeds(s, d).select(col("id"), lit(0L).as("dist"))
@@ -2216,7 +2169,7 @@ object GraphOps extends QueryModule {
       lab = rc.cycle("sssp", lab.unionByName(prop)
         .groupBy("id").agg(min("dist").as("dist")))
     }
-    Seq("sym", "wsym").foreach(rc.release)
+    rc.release("sym", "wsym")
     lab.select(col("id"), col("dist").cast("long").as("dist"))
       .orderBy("id") // one row per reached vertex = input-sized
   }
@@ -2277,7 +2230,7 @@ object GraphOps extends QueryModule {
          |       CAST(sz.scc_size AS BIGINT) AS scc_size
          |FROM scc JOIN sz USING (scc_id) ORDER BY id""".stripMargin
   }) { (s, d) =>
-    val rc = new RoundCheckpoints(s.sparkContext)
+    val rc = new Checkpoints
     val w = Window.partitionBy("nk", "b").orderBy("id")
     val blk = T(s, d, "customer")
       .select(col("c_custkey").as("id"), col("c_nationkey").as("nk"))

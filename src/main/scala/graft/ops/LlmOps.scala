@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, T}
+import graft.{Checkpoints, QueryModule, T}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -150,21 +150,22 @@ object LlmOps extends QueryModule {
 
   /** Band table from an ALREADY-COMPUTED (doc_id, hs) frame — lets a
     * caller that also needs the raw shingles (the verify stage) run
-    * the shingle pipeline exactly once for both consumers.
+    * the shingle pipeline exactly once for both consumers. The table's
+    * checkpoint is pinned under `ck` (tag `bands`): a streaming batch
+    * passes its own runtime so the table is freed with the batch.
     */
-  def minhashBandsFromHashes(sh: DataFrame): DataFrame = {
+  def minhashBandsFromHashes(sh: DataFrame, ck: Checkpoints = new Checkpoints): DataFrame = {
     val k = 12
     val sigs = sh
       .select(col("doc_id") +:
         (0 until k).map(i =>
           array_min(transform(col("hs"),
             h => (lit(affineA(i)) * h + lit(affineB(i))) % lit(MinhashP))).as(s"m$i")): _*)
-    sigs.select(col("doc_id"), explode(array((0 until 4).map { b =>
+    ck.pin("bands", sigs.select(col("doc_id"), explode(array((0 until 4).map { b =>
       struct(lit(b).as("band"),
         concat_ws("_", (0 until 3).map(r => col(s"m${b * 3 + r}")): _*).as("sig"))
     }: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig")))
   }
 
   /** Same, over any (doc_id, text) DataFrame. */
@@ -493,31 +494,26 @@ object LlmOps extends QueryModule {
     * diameter 1–2; a drifting chain of borderline pairs is the only
     * shape that approaches the cap — raise it explicitly there).
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 32): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 32,
+      ck: Checkpoints = new Checkpoints): DataFrame = {
     // localCheckpoint blocks outlive the query unless freed: across a
     // long session (the bench runs ~100 queries × 3 reps in one JVM)
     // the per-round blocks accumulated in the block manager and the
-    // in-bench time drifted to ~2.6× the isolated time. Track the
-    // persistent-RDD ids each checkpoint creates and free every
-    // round's blocks as soon as the next round's checkpoint (which
+    // in-bench time drifted to ~2.6× the isolated time. Every round's
+    // blocks are freed as soon as the next round's checkpoint (which
     // re-materializes all still-needed state) exists. Only the FINAL
-    // round's blocks — they back the returned frame's truncated
-    // lineage — survive this call; Bench/Verify clear those between
-    // queries via releaseCheckpoints().
-    val sc = edges.sparkSession.sparkContext
-    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def free(ids: Set[Int]): Unit = ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    val pre0 = persisted
+    // round's blocks (tag `cc.labels`) — they back the returned
+    // frame's truncated lineage — survive this call; Bench/Verify
+    // clear those between queries via releaseCheckpoints(), and a
+    // caller passing its own `ck` frees them with the rest of its run.
+    //
     // materialize the edge list once: every propagation round joins
     // against it, and without this the upstream candidate pipeline
     // (e.g. the whole Jaccard computation) would re-execute per round
     val obsE = org.apache.spark.sql.Observation()
-    val symRaw = edges.select(col("a").as("src"), col("b").as("dst"))
+    val symRaw = ck.pin("cc.sym", edges.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(edges.select(col("b").as("src"), col("a").as("dst")))
-      .observe(obsE, count(lit(1)).as("n"))
-      .localCheckpoint()
-    val symIds = persisted -- pre0
+      .observe(obsE, count(lit(1)).as("n")))
     // adapt iteration parallelism to the materialized edge count (free —
     // the count rides the checkpoint materialization as an observed
     // metric, r18: was a separate count job): near-dup pair graphs are
@@ -533,7 +529,6 @@ object LlmOps extends QueryModule {
     var labels = nodes.withColumn("lbl", col("id"))
     var iter = 0
     var converged = false
-    var prevIds = Set.empty[Int]
     while (iter < maxIter && !converged) {
       // One round = neighbor labels unioned with own labels into ONE
       // min-aggregation (r18: was join + groupBy + left-join — the
@@ -551,19 +546,15 @@ object LlmOps extends QueryModule {
       // iterative-algorithm failure at scale) and materializes the
       // round's labels once for both the convergence check and round
       // N+1. The changed-label count rides that materialization as an
-      // observed metric — no extra count job per round.
+      // observed metric — no extra count job per round. Round N's
+      // blocks are dead once round N+1 is materialized (localCheckpoint
+      // is eager): the cycle frees them now, not at session end.
       val obs = org.apache.spark.sql.Observation()
-      val pre = persisted
-      val next = nbr.unionByName(own)
+      val next = ck.cycle("cc.labels", nbr.unionByName(own)
         .groupBy("id").agg(min("v").as("lbl"), max("own").as("old"))
         .observe(obs, sum(when(col("lbl") =!= col("old"), 1L)
           .otherwise(0L)).as("chg"))
-        .select("id", "lbl")
-        .localCheckpoint()
-      // round N's blocks are dead once round N+1 is materialized
-      // (localCheckpoint is eager): free them now, not at session end
-      free(prevIds)
-      prevIds = persisted -- pre
+        .select("id", "lbl"))
       // sum() over an empty frame observes null — treat as converged
       val changed = Option(obs.get("chg")).map(_.asInstanceOf[Long]).getOrElse(0L)
       labels = next
@@ -575,15 +566,14 @@ object LlmOps extends QueryModule {
       // a caller that catches and retries with a larger maxIter must not
       // accumulate pinned checkpoint blocks per failed attempt (the
       // block-manager drift this function's frees exist to prevent)
-      free(prevIds)
-      free(symIds)
+      ck.release("cc.labels", "cc.sym")
       throw new IllegalArgumentException(
         s"connectedComponents: not converged after $maxIter rounds — the pair " +
           "graph's diameter exceeds maxIter; raise it rather than use split labels")
     }
     // the edge list is only joined inside the loop; the final labels
     // checkpoint no longer references it
-    free(symIds)
+    ck.release("cc.sym")
     labels
   }
 
@@ -2224,7 +2214,10 @@ object LlmOps extends QueryModule {
     */
   private[ops] def nnDescentFrom(emb: DataFrame, seed: DataFrame, k: Int,
       rounds: Int): DataFrame = {
-    var edges = seed.localCheckpoint()
+    // one tag cycles the seed and every round: round N's edges are
+    // dead once round N+1's are materialized
+    val ck = new Checkpoints
+    var edges = ck.cycle("edges", seed)
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nbr").asc)
     var out: DataFrame = null
     for (_ <- 1 to rounds) {
@@ -2244,12 +2237,9 @@ object LlmOps extends QueryModule {
       // dedup (a pair scores identically wherever it appears) then re-rank
       val all = scored.unionByName(edges)
         .groupBy("qid", "nbr").agg(max("cos").as("cos"))
-      val prev = edges
-      out = all.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .localCheckpoint()
+      out = ck.cycle("edges", all.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k))
       edges = out.select("qid", "nbr", "cos")
-      prev.unpersist(false)
     }
     out
   }
@@ -5302,30 +5292,24 @@ object LlmOps extends QueryModule {
     */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int,
       damping: Double = 0.85): DataFrame = {
-    // localCheckpoint blocks outlive Dataset.unpersist (it only clears
-    // CacheManager entries) — track persistent-RDD ids and free each
-    // round's blocks once the next checkpoint exists, exactly the
-    // connectedComponents discipline above. Only the final ranks
-    // blocks survive; the harness clears those via releaseCheckpoints.
-    val sc = vertices.sparkSession.sparkContext
-    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def free(ids: Set[Int]): Unit = ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    // each round's blocks are freed once the next checkpoint exists,
+    // exactly the connectedComponents discipline above. Only the final
+    // ranks blocks survive; the harness clears those via
+    // releaseCheckpoints.
+    val ck = new Checkpoints
     val n = vertices.count()
-    val pre0 = persisted
     // checkpoint the EDGE FRAME first: everything per-round derives
     // from it, so an uncheckpointed edge lineage (e.g. a whole kNN
     // build) would re-execute every iteration. Edges are restricted to
     // the vertex frame on BOTH endpoints — an out-of-set dst would
     // silently lose its contribution and break the mass-conservation
     // contract the spec pins.
-    val e = edges
+    val e = ck.pin("pr.fixed", edges
       .join(vertices.select(col("vid").as("src")), Seq("src"), "left_semi")
-      .join(vertices.select(col("vid").as("dst")), Seq("dst"), "left_semi")
-      .localCheckpoint()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
+      .join(vertices.select(col("vid").as("dst")), Seq("dst"), "left_semi"))
+    val outdeg = ck.pin("pr.fixed", e.groupBy("src").agg(count(lit(1)).as("deg")))
     // (src, dst, deg) resolved once — re-used every round
-    val withDeg = e.join(outdeg, Seq("src")).localCheckpoint()
+    val withDeg = ck.pin("pr.fixed", e.join(outdeg, Seq("src")))
     // dangling mass rides each round's checkpoint as an Observation
     // metric (r18, guide §2.4/§1.5): the old per-round
     // crossJoin(broadcast(semi-join + agg)) paid a broadcast-build job
@@ -5336,45 +5320,36 @@ object LlmOps extends QueryModule {
     // arithmetic: same shuffled double sum (the ε-shifted 1e-6 grid
     // absorbs partition-order ulps exactly as before),
     // java.lang.Math.floor == Catalyst floor on doubles.
-    val vbase = vertices
+    val vbase = ck.pin("pr.fixed", vertices
       .join(vertices.join(outdeg, col("vid") === col("src"), "left_anti")
         .select(col("vid"), lit(true).as("dang")), Seq("vid"), "left")
-      .select(col("vid"), coalesce(col("dang"), lit(false)).as("dang"))
-      .localCheckpoint()
-    val fixedIds = persisted -- pre0
+      .select(col("vid"), coalesce(col("dang"), lit(false)).as("dang")))
     def quantized(raw: Any): Double =
       math.floor((raw match {
         case null => 0.0
         case d: java.lang.Double => d.doubleValue()
       }) * 1e6 + 0.5000005) / 1e6
-    val preRanks = persisted
     val obs0 = org.apache.spark.sql.Observation()
-    var ranks = vbase.select(col("vid"), col("dang"), lit(1.0).as("rank"))
-      .observe(obs0, sum(when(col("dang"), col("rank"))).as("dm"))
-      .localCheckpoint()
-    var ranksIds = persisted -- preRanks
+    var ranks = ck.cycle("pr.ranks", vbase.select(col("vid"), col("dang"), lit(1.0).as("rank"))
+      .observe(obs0, sum(when(col("dang"), col("rank"))).as("dm")))
     var dmass = quantized(obs0.get("dm"))
     for (_ <- 1 to iters) {
       val contribs = withDeg
         .join(ranks.select("vid", "rank"), col("src") === col("vid"))
         .select(col("dst"), (col("rank") / col("deg")).as("c"))
         .groupBy("dst").agg(sum("c").as("in_sum"))
-      val prevIds = ranksIds
-      val pre = persisted
+      // the new checkpoint carries all still-needed state
       val obs = org.apache.spark.sql.Observation()
-      ranks = vbase
+      ranks = ck.cycle("pr.ranks", vbase
         .join(contribs, col("vid") === col("dst"), "left")
         .select(col("vid"), col("dang"),
           (floor((lit(1 - damping) +
             lit(damping) * (coalesce(col("in_sum"), lit(0.0)) + lit(dmass) / n))
             * 1e6 + lit(0.5000005)) / 1e6).as("rank"))
-        .observe(obs, sum(when(col("dang"), col("rank"))).as("dm"))
-        .localCheckpoint()
-      ranksIds = persisted -- pre
+        .observe(obs, sum(when(col("dang"), col("rank"))).as("dm")))
       dmass = quantized(obs.get("dm"))
-      free(prevIds) // the new checkpoint carries all still-needed state
     }
-    free(fixedIds) // edge/degree/dangling frames are dead once ranks exist
+    ck.release("pr.fixed") // edge/degree/dangling frames are dead once ranks exist
     ranks.select("vid", "rank")
   }
 

@@ -97,74 +97,85 @@ object StreamOps {
     * bands — duplicate index rows make candidates repeat, never
     * change a keep decision (Jaccard is set-based); a transactional
     * table format would remove even that.
+    *
+    * `emit` must consume its frame inside the call (collect it, write
+    * it): each batch's checkpoints, the emitted frame's included, are
+    * freed when the batch body returns, so a long-running stream holds
+    * no blocks from earlier batches.
     */
   def corpusNearDup(docs: DataFrame, indexDir: String, tau: Double = 0.5)
       (emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.LlmOps
     docs.writeStream.outputMode("append").foreachBatch { (batch: DataFrame, _: Long) =>
       val s = batch.sparkSession
-      val bandsDir = s"$indexDir/bands"
-      val shDir = s"$indexDir/shingles"
-      // existence via the Hadoop FS of the PATH (not java.io.File): a
-      // driver-local check on an hdfs://-or-s3a:// index would read
-      // "absent" every batch — probing silently disabled while appends
-      // still grow the index, total loss of dedup with no error
-      def readIf(dir: String, schema: String): DataFrame = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) s.read.parquet(dir)
-        else s.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(schema))
-      }
-      val sh = LlmOps.shingleHashes(batch)
-        .withColumn("hs", array_distinct(col("hs"))).localCheckpoint()
-      val bands = LlmOps.minhashBandsFromHashes(sh)
-      val corpusBands = readIf(bandsDir, "doc_id BIGINT, band INT, sig STRING")
-      val corpusSh = readIf(shDir, "doc_id BIGINT, hs ARRAY<BIGINT>")
-      // exact-Jaccard verify of banded candidates, shared by the
-      // corpus probe and the in-batch self-probe below
-      def verified(cand: DataFrame, rightSh: DataFrame): DataFrame = cand
-        .join(sh.select(col("doc_id").as("bd"), col("hs").as("xa")), Seq("bd"))
-        .join(rightSh.select(col("doc_id").as("cd"), col("hs").as("xb")), Seq("cd"))
-        .withColumn("i", size(array_intersect(col("xa"), col("xb"))))
-        .withColumn("j", round(col("i") * lit(1.0) /
-          (size(col("xa")) + size(col("xb")) - col("i")), 6))
-        .filter(col("j") >= tau)
-      val cand = bands.select(col("band"), col("sig"), col("doc_id").as("bd"))
-        .join(corpusBands.select(col("band"), col("sig"), col("doc_id").as("cd")),
-          Seq("band", "sig"))
-        .select("bd", "cd").distinct()
-      val droppedVsCorpus = verified(cand, corpusSh)
-        .select(col("bd").as("doc_id")).distinct()
-      // IN-BATCH near-dups (a backlog's first trigger delivers a doc
-      // and its near-dup together — neither is in the index yet): the
-      // corpus survivors self-probe, min doc_id of a verified pair
-      // wins, so exactly one representative is kept and indexed
-      val survivorBands = bands.join(droppedVsCorpus, Seq("doc_id"), "left_anti")
-      val selfCand = survivorBands.select(col("band"), col("sig"), col("doc_id").as("bd"))
-        .join(survivorBands.select(col("band"), col("sig"), col("doc_id").as("cd")),
-          Seq("band", "sig"))
-        .filter(col("bd") > col("cd")) // bd drops, cd (lower id) represents
-        .select("bd", "cd").distinct()
-      val droppedInBatch = verified(selfCand, sh)
-        .select(col("bd").as("doc_id")).distinct()
-      val dropped = droppedVsCorpus.unionByName(droppedInBatch).distinct()
-      val kept = batch.join(dropped, Seq("doc_id"), "left_anti").localCheckpoint()
-      emit(kept)
-      val keptIds = kept.select("doc_id")
-      sh.join(keptIds, Seq("doc_id")).write.mode("append").parquet(shDir)
-      bands.join(keptIds, Seq("doc_id")).write.mode("append").parquet(bandsDir)
+      val ck = new graft.Checkpoints
+      try {
+        val bandsDir = s"$indexDir/bands"
+        val shDir = s"$indexDir/shingles"
+        // existence via the Hadoop FS of the PATH (not java.io.File): a
+        // driver-local check on an hdfs://-or-s3a:// index would read
+        // "absent" every batch — probing silently disabled while appends
+        // still grow the index, total loss of dedup with no error
+        def readIf(dir: String, schema: String): DataFrame = {
+          val p = new org.apache.hadoop.fs.Path(dir)
+          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+          if (fs.exists(p)) s.read.parquet(dir)
+          else s.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            org.apache.spark.sql.types.StructType.fromDDL(schema))
+        }
+        val sh = ck.pin("batch", LlmOps.shingleHashes(batch)
+          .withColumn("hs", array_distinct(col("hs"))))
+        val bands = LlmOps.minhashBandsFromHashes(sh, ck)
+        val corpusBands = readIf(bandsDir, "doc_id BIGINT, band INT, sig STRING")
+        val corpusSh = readIf(shDir, "doc_id BIGINT, hs ARRAY<BIGINT>")
+        // exact-Jaccard verify of banded candidates, shared by the
+        // corpus probe and the in-batch self-probe below
+        def verified(cand: DataFrame, rightSh: DataFrame): DataFrame = cand
+          .join(sh.select(col("doc_id").as("bd"), col("hs").as("xa")), Seq("bd"))
+          .join(rightSh.select(col("doc_id").as("cd"), col("hs").as("xb")), Seq("cd"))
+          .withColumn("i", size(array_intersect(col("xa"), col("xb"))))
+          .withColumn("j", round(col("i") * lit(1.0) /
+            (size(col("xa")) + size(col("xb")) - col("i")), 6))
+          .filter(col("j") >= tau)
+        val cand = bands.select(col("band"), col("sig"), col("doc_id").as("bd"))
+          .join(corpusBands.select(col("band"), col("sig"), col("doc_id").as("cd")),
+            Seq("band", "sig"))
+          .select("bd", "cd").distinct()
+        val droppedVsCorpus = verified(cand, corpusSh)
+          .select(col("bd").as("doc_id")).distinct()
+        // IN-BATCH near-dups (a backlog's first trigger delivers a doc
+        // and its near-dup together — neither is in the index yet): the
+        // corpus survivors self-probe, min doc_id of a verified pair
+        // wins, so exactly one representative is kept and indexed
+        val survivorBands = bands.join(droppedVsCorpus, Seq("doc_id"), "left_anti")
+        val selfCand = survivorBands.select(col("band"), col("sig"), col("doc_id").as("bd"))
+          .join(survivorBands.select(col("band"), col("sig"), col("doc_id").as("cd")),
+            Seq("band", "sig"))
+          .filter(col("bd") > col("cd")) // bd drops, cd (lower id) represents
+          .select("bd", "cd").distinct()
+        val droppedInBatch = verified(selfCand, sh)
+          .select(col("bd").as("doc_id")).distinct()
+        val dropped = droppedVsCorpus.unionByName(droppedInBatch).distinct()
+        val kept = ck.pin("batch", batch.join(dropped, Seq("doc_id"), "left_anti"))
+        emit(kept)
+        val keptIds = kept.select("doc_id")
+        sh.join(keptIds, Seq("doc_id")).write.mode("append").parquet(shDir)
+        bands.join(keptIds, Seq("doc_id")).write.mode("append").parquet(bandsDir)
+      } finally ck.releaseAll()
     }.start()
   }
 
   /** Seed the near-dup index with a standing corpus (batch side). */
   def seedNearDupIndex(corpus: DataFrame, indexDir: String): Unit = {
     import graft.ops.LlmOps
-    val sh = LlmOps.shingleHashes(corpus)
-      .withColumn("hs", array_distinct(col("hs"))).localCheckpoint()
-    sh.write.mode("overwrite").parquet(s"$indexDir/shingles")
-    LlmOps.minhashBandsFromHashes(sh).write.mode("overwrite").parquet(s"$indexDir/bands")
+    val ck = new graft.Checkpoints
+    try {
+      val sh = ck.pin("sh", LlmOps.shingleHashes(corpus)
+        .withColumn("hs", array_distinct(col("hs"))))
+      sh.write.mode("overwrite").parquet(s"$indexDir/shingles")
+      LlmOps.minhashBandsFromHashes(sh, ck).write.mode("overwrite").parquet(s"$indexDir/bands")
+    } finally ck.releaseAll()
   }
 
   /** Continuous-ingest SemDeDup — the streaming twin of the registered
@@ -202,6 +213,10 @@ object StreamOps {
     * its probe, batch-mate entries verify into the same component
     * they were in, and duplicate index rows never change a min/
     * distinct-shaped decision (the corpusNearDup caveat).
+    *
+    * As in `corpusNearDup`, `emit` must consume its frame inside the
+    * call: the batch's checkpoints, the CC's included, are freed when
+    * the batch body returns.
     */
   def corpusSemDedup(vecs: DataFrame, indexDir: String, tau: Double = 0.45,
       nPlanes: Int = 6, nTables: Int = 6)
@@ -209,70 +224,70 @@ object StreamOps {
     import graft.ops.LlmOps
     vecs.writeStream.outputMode("append").foreachBatch { (batch0: DataFrame, _: Long) =>
       val s = batch0.sparkSession
-      val embDir = s"$indexDir/reps"
-      val bkDir = s"$indexDir/buckets"
-      def readIf(dir: String, schema: String): DataFrame = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) s.read.parquet(dir)
-        else s.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(schema))
-      }
-      // (1) exact collapse: one payload-keyed window, min id is rep
-      val wEmb = Window.partitionBy("embedding")
-      val member = batch0.select("vec_id", "embedding")
-        .withColumn("rep", min("vec_id").over(wEmb))
-        .localCheckpoint()
-      val reps = member.filter(col("vec_id") === col("rep"))
-        .select("vec_id", "embedding")
-      // (2) cross-batch probe of the standing index
-      val bk = LlmOps.multiLshBucketsOf(reps, nPlanes, nTables).localCheckpoint()
-      val idxBk = readIf(bkDir,
-        "vec_id BIGINT, tbl INT, bucket STRING, canonical BIGINT")
-      val idxEmb = readIf(embDir,
-        "vec_id BIGINT, embedding ARRAY<FLOAT>, canonical BIGINT")
-      val idxMatch = bk.select(col("tbl"), col("bucket"), col("vec_id").as("a"))
-        .join(idxBk.select(col("tbl"), col("bucket"), col("vec_id").as("b")),
-          Seq("tbl", "bucket"))
-        .filter(col("a") =!= col("b")) // replay guard: own entry is no match
-        .select("a", "b").distinct()
-        .join(reps.select(col("vec_id").as("a"), col("embedding").as("ea")), Seq("a"))
-        .join(idxEmb.select(col("vec_id").as("b"), col("embedding").as("eb"),
-          col("canonical").as("bc")), Seq("b"))
-        .filter(round(graft.functions.vec.cosine(col("ea"), col("eb")), 6) >= tau)
-        .groupBy(col("a").as("vec_id")).agg(min("bc").as("idxCanon"))
-      // (3) in-batch clustering of reps (verified pairs -> CC)
-      val pairs = LlmOps.multiLshCandidatesOf(reps, nPlanes, nTables)
-        .join(reps.select(col("vec_id").as("a"), col("embedding").as("ea")), Seq("a"))
-        .join(reps.select(col("vec_id").as("b"), col("embedding").as("eb")), Seq("b"))
-        .filter(round(graft.functions.vec.cosine(col("ea"), col("eb")), 6) >= tau)
-        .select("a", "b")
-      val cc = LlmOps.connectedComponents(pairs)
-      val lbl = reps.select("vec_id")
-        .join(cc.select(col("id").as("vec_id"), col("lbl")), Seq("vec_id"), "left")
-        .withColumn("lbl", coalesce(col("lbl"), col("vec_id")))
-      val canonOfComp = lbl.join(idxMatch, Seq("vec_id"), "left")
-        .groupBy("lbl").agg(min("idxCanon").as("minIdx"))
-        .select(col("lbl"), when(col("minIdx").isNull, col("lbl"))
-          .otherwise(least(col("lbl"), col("minIdx"))).as("canonical"))
-      val repCanon = lbl.join(canonOfComp, Seq("lbl"))
-        .select(col("vec_id").as("rep"), col("canonical"))
-        .localCheckpoint()
-      // (4) corpus-shaped decisions: members inherit the rep's canonical
-      val out = member.select("vec_id", "rep").join(repCanon, Seq("rep"))
-        .select(col("vec_id"), col("canonical"),
-          (col("vec_id") === col("canonical")).as("keep"))
-        .localCheckpoint()
-      emit(out)
-      // (5) grow the index: every rep, labeled — dropped reps included
-      val repOut = reps
-        .join(repCanon.withColumnRenamed("rep", "vec_id"), Seq("vec_id"))
-      repOut.select("vec_id", "embedding", "canonical")
-        .write.mode("append").parquet(embDir)
-      bk.join(repOut.select("vec_id", "canonical"), Seq("vec_id"))
-        .select("vec_id", "tbl", "bucket", "canonical")
-        .write.mode("append").parquet(bkDir)
+      val ck = new graft.Checkpoints
+      try {
+        val embDir = s"$indexDir/reps"
+        val bkDir = s"$indexDir/buckets"
+        def readIf(dir: String, schema: String): DataFrame = {
+          val p = new org.apache.hadoop.fs.Path(dir)
+          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+          if (fs.exists(p)) s.read.parquet(dir)
+          else s.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            org.apache.spark.sql.types.StructType.fromDDL(schema))
+        }
+        // (1) exact collapse: one payload-keyed window, min id is rep
+        val wEmb = Window.partitionBy("embedding")
+        val member = ck.pin("batch", batch0.select("vec_id", "embedding")
+          .withColumn("rep", min("vec_id").over(wEmb)))
+        val reps = member.filter(col("vec_id") === col("rep"))
+          .select("vec_id", "embedding")
+        // (2) cross-batch probe of the standing index
+        val bk = ck.pin("batch", LlmOps.multiLshBucketsOf(reps, nPlanes, nTables))
+        val idxBk = readIf(bkDir,
+          "vec_id BIGINT, tbl INT, bucket STRING, canonical BIGINT")
+        val idxEmb = readIf(embDir,
+          "vec_id BIGINT, embedding ARRAY<FLOAT>, canonical BIGINT")
+        val idxMatch = bk.select(col("tbl"), col("bucket"), col("vec_id").as("a"))
+          .join(idxBk.select(col("tbl"), col("bucket"), col("vec_id").as("b")),
+            Seq("tbl", "bucket"))
+          .filter(col("a") =!= col("b")) // replay guard: own entry is no match
+          .select("a", "b").distinct()
+          .join(reps.select(col("vec_id").as("a"), col("embedding").as("ea")), Seq("a"))
+          .join(idxEmb.select(col("vec_id").as("b"), col("embedding").as("eb"),
+            col("canonical").as("bc")), Seq("b"))
+          .filter(round(graft.functions.vec.cosine(col("ea"), col("eb")), 6) >= tau)
+          .groupBy(col("a").as("vec_id")).agg(min("bc").as("idxCanon"))
+        // (3) in-batch clustering of reps (verified pairs -> CC)
+        val pairs = LlmOps.multiLshCandidatesOf(reps, nPlanes, nTables)
+          .join(reps.select(col("vec_id").as("a"), col("embedding").as("ea")), Seq("a"))
+          .join(reps.select(col("vec_id").as("b"), col("embedding").as("eb")), Seq("b"))
+          .filter(round(graft.functions.vec.cosine(col("ea"), col("eb")), 6) >= tau)
+          .select("a", "b")
+        val cc = LlmOps.connectedComponents(pairs, ck = ck)
+        val lbl = reps.select("vec_id")
+          .join(cc.select(col("id").as("vec_id"), col("lbl")), Seq("vec_id"), "left")
+          .withColumn("lbl", coalesce(col("lbl"), col("vec_id")))
+        val canonOfComp = lbl.join(idxMatch, Seq("vec_id"), "left")
+          .groupBy("lbl").agg(min("idxCanon").as("minIdx"))
+          .select(col("lbl"), when(col("minIdx").isNull, col("lbl"))
+            .otherwise(least(col("lbl"), col("minIdx"))).as("canonical"))
+        val repCanon = ck.pin("batch", lbl.join(canonOfComp, Seq("lbl"))
+          .select(col("vec_id").as("rep"), col("canonical")))
+        // (4) corpus-shaped decisions: members inherit the rep's canonical
+        val out = ck.pin("batch", member.select("vec_id", "rep").join(repCanon, Seq("rep"))
+          .select(col("vec_id"), col("canonical"),
+            (col("vec_id") === col("canonical")).as("keep")))
+        emit(out)
+        // (5) grow the index: every rep, labeled — dropped reps included
+        val repOut = reps
+          .join(repCanon.withColumnRenamed("rep", "vec_id"), Seq("vec_id"))
+        repOut.select("vec_id", "embedding", "canonical")
+          .write.mode("append").parquet(embDir)
+        bk.join(repOut.select("vec_id", "canonical"), Seq("vec_id"))
+          .select("vec_id", "tbl", "bucket", "canonical")
+          .write.mode("append").parquet(bkDir)
+      } finally ck.releaseAll()
     }.start()
   }
 
