@@ -879,8 +879,8 @@ object GdxCodec {
     override def hasNext: Boolean = remaining > 0 || ensureBlock()
 
     /** Decode the next record into CALLER-OWNED arrays — the flyweight
-      * path the columnar reader rides (r14): no per-record GdxRecord /
-      * keys / values allocation. `values` must hold ≥ the symbol's
+      * path (r14): no per-record GdxRecord / keys / values allocation.
+      * `values` must hold ≥ the symbol's
       * value arity (0/1/5; values(0) is zeroed for sets so the
       * special-value flag columns read 0.0, matching [[next]]'s
       * empty-values semantics). Returns the 1-based text-pool index
@@ -966,21 +966,16 @@ object GdxCodec {
 
     override def next(): GdxRecord = {
       val keys = new Array[Int](meta.dim)
-      record(keys, nextInto(keys, scratchVals), scratchVals)
-    }
-
-    /** The record [[nextKeysInto]] and [[readValuesInto]] decoded into
-      * `keys` (taken as is), text index `t` and `values` (copied).
-      */
-    def record(keys: Array[Int], t: Int, values: Array[Double]): GdxRecord =
+      val t = nextInto(keys, scratchVals)
       meta.typ match {
         case SymbolType.Set | SymbolType.Alias =>
           GdxRecord(keys, Array.empty, if (t == 0) None else Some(texts(t - 1)))
         case SymbolType.Parameter =>
-          GdxRecord(keys, Array(values(0)))
+          GdxRecord(keys, Array(scratchVals(0)))
         case _ =>
-          GdxRecord(keys, java.util.Arrays.copyOf(values, 5))
+          GdxRecord(keys, java.util.Arrays.copyOf(scratchVals, 5))
       }
+    }
 
     override def close(): Unit = {
       publishDecoded()

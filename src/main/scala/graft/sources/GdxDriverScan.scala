@@ -22,11 +22,12 @@ import org.apache.spark.sql.internal.SQLConf
   * when [[GdxScan.driverCores]] proves the scan small — at least one
   * pushed label, at most [[GdxDriverScan.maxShards]] planned partitions,
   * at most [[GdxScan.DriverBudget]] records in each shard's kept blocks —
-  * it decodes the scan while planning, one thread per shard, through the
-  * same [[GdxSymbolDecode]] core and row reader the tasks use. Spark's
-  * own filter and projection expressions then run on the decoded rows,
-  * so the result is the rows the distributed plan returns, in shard
-  * order, with the same case and locale semantics. Every other scan, and
+  * it decodes the scan while planning, one thread per shard, through
+  * [[GdxSymbolReader]], the row view of the columnar decode the tasks
+  * use. Spark's own filter and projection expressions then run on the
+  * batches' rows, and each kept row is copied out of its batch, so the
+  * result is the rows the distributed plan returns, in shard order,
+  * with the same case and locale semantics. Every other scan, and
   * any projection or filter that is nondeterministic or holds a
   * subquery, keeps the distributed path. A limit an action puts over
   * such a scan (`isEmpty`, `take`, `first`) is answered from the same

@@ -240,9 +240,9 @@ class GdxScan(fullSchema: StructType, required: StructType, pushed: Seq[DimLabel
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GdxReaderFactory(required, pushed, raw,
-      // vectorized by default; option("vectorized","false") keeps the
-      // row path reachable (debug/bisect escape hatch, and the A/B
-      // handle the SCALE.md throughput numbers were measured with)
+      // vectorized by default; option("vectorized","false") hands Spark
+      // rows instead of batches: the same columnar decode read through
+      // its row view (GdxSymbolReader), for consumers that want rows
       vectorized = options.getBoolean("vectorized", true))
 
   override def description(): String =
@@ -258,16 +258,15 @@ object GdxScan {
     * 64 blocks take ~16 ms.
     *
     * Measured at the boundary on a 4-vCPU host (`local[4]`, one `dim_2`
-    * label present in every block, collect, median of 15 runs, two runs
-    * per venue), driver venue vs a Spark job:
-    *  - 1/32 of the records kept, as gdx_io's recurring labels: at 64
-    *    blocks a shard 54–56 vs 72–81 ms on one shard and 71–75 vs
-    *    94–105 ms on four; the driver still wins at 128 blocks;
-    *  - 7/8 of the records kept, one shard: 192–257 vs 257–285 ms at 64
-    *    blocks, 509–558 vs 522–618 ms at 128;
-    *  - 7/8 kept, four shards: the job wins by 6–16% at 32, 64 and 128
-    *    blocks alike (797–961 vs 713–826 ms at 64), so a smaller budget
-    *    does not close that gap.
+    * label present in every block, collect, median of 15 runs after 5
+    * warm-ups, two rounds with the venue order swapped), driver venue
+    * vs a Spark job, with the driver reading the columnar decode's rows:
+    *  - 1/32 of the records kept, as gdx_io's recurring labels, 64
+    *    blocks a shard: 30–31 vs 55 ms on one shard, 58 vs 75–76 ms on
+    *    four;
+    *  - 7/8 of the records kept, four shards: 528–561 vs 605–609 ms at
+    *    64 blocks; 264–350 vs 318–333 ms at 32, one round each way; at
+    *    128 blocks, past the budget, 979–1003 vs 965–993 ms.
     */
   val DriverBudget: Long = 64L * GdxCodec.DefaultBlockSize
 }
@@ -283,9 +282,9 @@ class GdxReaderFactory(required: StructType, pushed: Seq[DimLabelFilter],
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case GdxCatalogPartition(shards) => new GdxCatalogReader(shards, required)
-      case GdxUelPartition(shards) => new GdxUelReader(shards, required)
-      case GdxAcronymPartition(shards) => new GdxAcronymReader(shards, required)
+      case GdxCatalogPartition(shards) => GdxHeaderReader.catalog(shards, required)
+      case GdxUelPartition(shards) => GdxHeaderReader.uels(shards, required)
+      case GdxAcronymPartition(shards) => GdxHeaderReader.acronyms(shards, required)
       case GdxInputPartition(shard, sym) =>
         new GdxSymbolReader(new GdxSymbolDecode(shard, sym, pushed, raw), required)
     }
@@ -307,57 +306,57 @@ class GdxReaderFactory(required: StructType, pushed: Seq[DimLabelFilter],
     }
 }
 
-/** Emits one row per symbol — the gdx_catalog view. On a sharded
-  * directory the metas of ALL shards are merged (record counts summed
-  * per symbol name) so the catalog reflects the whole dataset, not one
-  * shard; header-only reads, no record blobs touched.
+/** A header-sized view (catalog, UEL table, acronym table): one row per
+  * item, holding exactly the required fields, in order, each from its
+  * view's emitter. Header-only reads, no record blobs touched.
   */
-class GdxCatalogReader(paths: Seq[String], required: StructType)
-    extends PartitionReader[InternalRow] {
-  // merged record count carried as a separate Long: per-shard counts are
-  // Int, but across O(10^5) shards a symbol's total overflows Int
-  private val metas: Iterator[(GdxCodec.SymbolMeta, Long)] = {
-    val all = paths.flatMap(p => GdxCodec.readHeader(p).metas)
-    all.groupBy(_.name.toLowerCase(java.util.Locale.ROOT)).values.map { ms =>
-      (ms.head, ms.map(_.records.toLong).sum)
-    }.toSeq.sortBy(_._1.name).iterator
-  }
-  private var cur: (GdxCodec.SymbolMeta, Long) = _
+private[sources] final class GdxHeaderReader[A](items: Iterator[A], required: StructType,
+    view: String, emitters: Map[String, A => Any]) extends PartitionReader[InternalRow] {
 
-  // honor column pruning: emit exactly the required fields, in order
-  private val emitters: Array[((GdxCodec.SymbolMeta, Long)) => Any] =
-    required.fieldNames.map[((GdxCodec.SymbolMeta, Long)) => Any] {
-      case "name" => m => UTF8String.fromString(m._1.name)
-      case "type" => m => UTF8String.fromString(SymbolType.names.getOrElse(m._1.typ, "unknown"))
-      case "dim" => m => m._1.dim
-      // variable/equation subtype (GMS_VARTYPE/GMS_EQUTYPE class) —
-      // rides the codec's userInfo slot, 0 for sets/parameters
-      case "subtype" => m => m._1.userInfo
-      case "records" => m => m._2
-      case "expl_text" => m => UTF8String.fromString(m._1.explText)
-      case "domains" => m => UTF8String.fromString(m._1.domains.mkString(","))
-      case other => throw new IllegalArgumentException(s"unknown catalog field $other")
-    }
+  private val emit: Array[A => Any] = required.fieldNames.map(f =>
+    emitters.getOrElse(f, throw new IllegalArgumentException(s"unknown $view field $f")))
+  private var cur: A = _
 
-  override def next(): Boolean = { val h = metas.hasNext; if (h) cur = metas.next(); h }
+  override def next(): Boolean = { val h = items.hasNext; if (h) cur = items.next(); h }
 
-  override def get(): InternalRow =
-    new GenericInternalRow(emitters.map(e => e(cur)).toArray[Any])
+  override def get(): InternalRow = new GenericInternalRow(emit.map(e => e(cur)))
 
   override def close(): Unit = ()
 }
 
-/** Emits the UEL (label) dictionary — gdxpy's gdxGetUEL loop view:
-  * one (uel_index, label) row per registered label. Single file: the
-  * file's own table in registration order. Sharded dataset: shards are
-  * merged in sorted path order with case-insensitive first-appearance
-  * dedup and a fresh 1-based index (per-shard indices are local to
-  * each shard's table, so a global view must re-number). Header-only
-  * reads — UEL tables live in the header, no record blobs touched.
-  */
-class GdxUelReader(paths: Seq[String], required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val labels: Iterator[(Int, String)] = {
+private[sources] object GdxHeaderReader {
+
+  /** One row per symbol — the gdx_catalog view. On a sharded directory
+    * the metas of ALL shards are merged (record counts summed per symbol
+    * name) so the catalog reflects the whole dataset, not one shard.
+    */
+  def catalog(paths: Seq[String], required: StructType): PartitionReader[InternalRow] = {
+    // merged record count carried as a separate Long: per-shard counts are
+    // Int, but across O(10^5) shards a symbol's total overflows Int
+    val all = paths.flatMap(p => GdxCodec.readHeader(p).metas)
+    val metas = all.groupBy(_.name.toLowerCase(java.util.Locale.ROOT)).values.map { ms =>
+      (ms.head, ms.map(_.records.toLong).sum)
+    }.toSeq.sortBy(_._1.name)
+    new GdxHeaderReader[(GdxCodec.SymbolMeta, Long)](metas.iterator, required, "catalog", Map(
+      "name" -> (m => UTF8String.fromString(m._1.name)),
+      "type" -> (m => UTF8String.fromString(SymbolType.names.getOrElse(m._1.typ, "unknown"))),
+      "dim" -> (m => m._1.dim),
+      // variable/equation subtype (GMS_VARTYPE/GMS_EQUTYPE class) —
+      // rides the codec's userInfo slot, 0 for sets/parameters
+      "subtype" -> (m => m._1.userInfo),
+      "records" -> (m => m._2),
+      "expl_text" -> (m => UTF8String.fromString(m._1.explText)),
+      "domains" -> (m => UTF8String.fromString(m._1.domains.mkString(",")))))
+  }
+
+  /** The UEL (label) dictionary — gdxpy's gdxGetUEL loop view: one
+    * (uel_index, label) row per registered label. Single file: the
+    * file's own table in registration order. Sharded dataset: shards are
+    * merged in sorted path order with case-insensitive first-appearance
+    * dedup and a fresh 1-based index (per-shard indices are local to
+    * each shard's table, so a global view must re-number).
+    */
+  def uels(paths: Seq[String], required: StructType): PartitionReader[InternalRow] = {
     val seen = scala.collection.mutable.HashSet.empty[String]
     val out = Vector.newBuilder[String]
     paths.sorted.foreach { p =>
@@ -365,43 +364,27 @@ class GdxUelReader(paths: Seq[String], required: StructType)
         if (seen.add(u.toLowerCase(java.util.Locale.ROOT))) out += u
       }
     }
-    out.result().zipWithIndex.map { case (u, i) => (i + 1, u) }.iterator
+    val labels = out.result().zipWithIndex.map { case (u, i) => (i + 1, u) }
+    new GdxHeaderReader[(Int, String)](labels.iterator, required, "uel", Map(
+      "uel_index" -> (u => u._1),
+      "label" -> (u => UTF8String.fromString(u._2))))
   }
-  private var cur: (Int, String) = _
 
-  private val emitters: Array[((Int, String)) => Any] =
-    required.fieldNames.map[((Int, String)) => Any] {
-      case "uel_index" => u => u._1
-      case "label" => u => UTF8String.fromString(u._2)
-      case other => throw new IllegalArgumentException(s"unknown uel field $other")
-    }
-
-  override def next(): Boolean = { val h = labels.hasNext; if (h) cur = labels.next(); h }
-
-  override def get(): InternalRow =
-    new GenericInternalRow(emitters.map(e => e(cur)).toArray[Any])
-
-  override def close(): Unit = ()
-}
-
-/** Emits the acronym table (gdxAcronymCount/gdxAcronymGetInfo view):
-  * one (acr_index, name, text) row per registered acronym. Sharded
-  * datasets merge by index; a shard registering a DIFFERENT name
-  * (case-insensitively — GAMS identifier semantics) under an
-  * already-seen index fails loudly — the EXACT contract
-  * [[graft.gdx.Gdx.merge]] enforces, so a hand-assembled dir is
-  * readable through this view iff it is mergeable: names compare
-  * case-insensitively, explanatory TEXT differences are tolerated
-  * with first-shard-wins (paths iterate sorted, so the pick is
-  * deterministic). A silent first-wins on the NAME would rename
-  * sentinel values; the sharded writer stamps every shard with the
-  * same table, so legitimate data never trips this. Header-only
-  * reads, no record blobs touched.
-  */
-class GdxAcronymReader(paths: Seq[String], required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val acrs: Iterator[graft.gdx.GdxAcronym] = {
-    val seen = scala.collection.mutable.HashMap.empty[Int, graft.gdx.GdxAcronym]
+  /** The acronym table (gdxAcronymCount/gdxAcronymGetInfo view): one
+    * (acr_index, name, text) row per registered acronym. Sharded
+    * datasets merge by index; a shard registering a DIFFERENT name
+    * (case-insensitively — GAMS identifier semantics) under an
+    * already-seen index fails loudly — the EXACT contract
+    * [[graft.gdx.Gdx.merge]] enforces, so a hand-assembled dir is
+    * readable through this view iff it is mergeable: names compare
+    * case-insensitively, explanatory TEXT differences are tolerated
+    * with first-shard-wins (paths iterate sorted, so the pick is
+    * deterministic). A silent first-wins on the NAME would rename
+    * sentinel values; the sharded writer stamps every shard with the
+    * same table, so legitimate data never trips this.
+    */
+  def acronyms(paths: Seq[String], required: StructType): PartitionReader[InternalRow] = {
+    val seen = scala.collection.mutable.HashMap.empty[Int, GdxAcronym]
     paths.sorted.foreach { p =>
       GdxCodec.readHeader(p).acronyms.foreach { a =>
         seen.get(a.index) match {
@@ -414,32 +397,17 @@ class GdxAcronymReader(paths: Seq[String], required: StructType)
         }
       }
     }
-    seen.values.toVector.sortBy(_.index).iterator
+    new GdxHeaderReader[GdxAcronym](seen.values.toVector.sortBy(_.index).iterator, required, "acronym", Map(
+      "acr_index" -> (a => a.index),
+      "name" -> (a => UTF8String.fromString(a.name)),
+      "text" -> (a => UTF8String.fromString(a.text))))
   }
-  private var cur: graft.gdx.GdxAcronym = _
-
-  private val emitters: Array[graft.gdx.GdxAcronym => Any] =
-    required.fieldNames.map[graft.gdx.GdxAcronym => Any] {
-      case "acr_index" => a => a.index
-      case "name" => a => UTF8String.fromString(a.name)
-      case "text" => a => UTF8String.fromString(a.text)
-      case other => throw new IllegalArgumentException(s"unknown acronym field $other")
-    }
-
-  override def next(): Boolean = { val h = acrs.hasNext; if (h) cur = acrs.next(); h }
-
-  override def get(): InternalRow =
-    new GenericInternalRow(emitters.map(e => e(cur)).toArray[Any])
-
-  override def close(): Unit = ()
 }
 
-/** Shared symbol-decode core behind BOTH reader shapes (row-at-a-time
-  * [[GdxSymbolReader]] and vectorized [[GdxSymbolColumnarReader]]):
+/** The symbol-decode core under [[GdxSymbolColumnarReader]] (and so
+  * under its row view [[GdxSymbolReader]] and the driver venue):
   * header + UEL index resolution, pushed-filter translation, the
-  * block-skipping record stream, and the residual per-record check —
-  * one implementation, so the two paths can never drift on pruning or
-  * filter semantics.
+  * block-skipping record stream, and the residual per-record check.
   */
 private[sources] final class GdxSymbolDecode(path: String, symbol: String,
     pushed: Seq[DimLabelFilter], raw: Boolean) {
@@ -473,12 +441,9 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   // range-exactly on sorted layouts — a one-label slice decodes ~one
   // block; dims 2+ parquet-stats-style on v3/v4 files); `keepKeys` below
   // still re-checks per record, so the skip is a pure superset pass.
-  private val stream: GdxCodec.GdxRecordStream =
+  private val stream =
     if (shardCanMatch) GdxCodec.openRecordStream(path, header, meta, dimFilters)
     else null
-
-  def firstVal(r: GdxRecord): Double =
-    if (r.values.nonEmpty) r.values(0) else 0.0
 
   // raw mode: sentinels pass through as their finite 1e300 encodings —
   // the lossless representation the tool suite (merge/diff/dump) uses
@@ -488,20 +453,7 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   def mapValue(v: Double): Double =
     if (raw) v else SpecialValues.toDouble(v)
 
-  // the row reader's keys and values before a record is kept
-  private val rowKeys = new Array[Int](meta.dim)
-  private val rowVals = new Array[Double](5)
-
-  /** Next record passing the residual per-record filter; null at end.
-    * The row twin of [[nextKeptInto]]: keys decode first, and only a
-    * kept record has its values read and a [[GdxRecord]] built.
-    */
-  def nextKept(): GdxRecord = {
-    val t = nextKeptInto(rowKeys, rowVals)
-    if (t < 0) null else stream.record(rowKeys.clone(), t, rowVals)
-  }
-
-  /** Flyweight twin of [[nextKept]] for the columnar reader: decodes
+  /** The next record passing the residual per-record filter, decoded
     * into caller-owned arrays (no per-record allocation), returning the
     * 1-based text-pool index (0 = none) or -1 at stream end. Values
     * materialize lazily (r15): keys decode first, and the value bytes
@@ -533,7 +485,7 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   def textOf(t: Int): String = stream.textAt(t)
 
   /** Records in the blocks this shard's zone maps keep (0 if the shard
-    * cannot match); see [[GdxCodec.GdxRecordStream.matchingRecords]].
+    * cannot match); see the record stream's `matchingRecords`.
     */
   def matchingRecords: Long = if (stream == null) 0L else stream.matchingRecords
 
@@ -595,48 +547,32 @@ private[sources] object GdxSymbolDecode {
   }
 }
 
+/** The row view of [[GdxSymbolColumnarReader]]: the rows of each batch's
+  * `rowIterator()`, so special values, texts and flags are the columnar
+  * fillers' and nothing is built per record. The row it returns is
+  * reused across `next()` calls; Spark puts a projection to unsafe rows
+  * above every row-based DSv2 scan, and [[GdxDriverScan]] projects and
+  * copies each row it keeps.
+  */
 class GdxSymbolReader private[sources] (core: GdxSymbolDecode, required: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val header = core.header
-  private val meta = core.meta
-  private var cur: GdxRecord = _
-  private def firstVal(r: GdxRecord): Double = core.firstVal(r)
-  private def mapValue(v: Double): Double = core.mapValue(v)
+  private val batches = new GdxSymbolColumnarReader(core, required)
+  private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+  private var row: InternalRow = _
 
-  // projection plan: for each required field, a function of the record
-  private val emitters: Array[GdxRecord => Any] = required.fields.map { f =>
-    f.name match {
-      case n if n.startsWith("dim_") =>
-        val i = n.stripPrefix("dim_").toInt - 1
-        (r: GdxRecord) => UTF8String.fromString(header.uels(r.keys(i)))
-      case "text" =>
-        (r: GdxRecord) => r.text.map(UTF8String.fromString).orNull
-      case "value" if meta.typ == SymbolType.Set || meta.typ == SymbolType.Alias =>
-        (_: GdxRecord) => 1.0
-      case "value" =>
-        (r: GdxRecord) => mapValue(r.values(0))
-      case "is_eps" => (r: GdxRecord) => firstVal(r) == SpecialValues.EPS
-      case "is_na" => (r: GdxRecord) => firstVal(r) == SpecialValues.NA
-      case "is_undef" => (r: GdxRecord) => firstVal(r) == SpecialValues.UNDEF
-      case "is_acronym" => (r: GdxRecord) => SpecialValues.isAcronym(firstVal(r))
-      case "acr_index" => (r: GdxRecord) => {
-        val v = firstVal(r)
-        if (SpecialValues.isAcronym(v)) SpecialValues.acronymIndex(v) else 0
-      }
-      case field =>
-        val vi = ValField.names.indexOf(field)
-        require(vi >= 0, s"unknown gdx field $field")
-        (r: GdxRecord) => mapValue(if (vi < r.values.length) r.values(vi) else 0.0)
+  override def next(): Boolean = {
+    if (!rows.hasNext) {
+      if (!batches.next()) return false
+      rows = batches.get().rowIterator()
     }
+    row = rows.next()
+    true
   }
 
-  override def next(): Boolean = { cur = core.nextKept(); cur != null }
+  override def get(): InternalRow = row
 
-  override def get(): InternalRow =
-    new GenericInternalRow(emitters.map(e => e(cur)).toArray[Any])
-
-  override def close(): Unit = core.close()
+  override def close(): Unit = batches.close()
 }
 
 /** Vectorized symbol reader ([[SupportsColumnarReads]] path): decodes
@@ -651,9 +587,8 @@ class GdxSymbolReader private[sources] (core: GdxSymbolDecode, required: StructT
   * UEL id, and `getUTF8String` decodes zero-copy through the
   * `Dictionary` hook — the identical layout the parquet reader gives
   * dictionary-encoded pages, eliminating the per-row label byte copy
-  * the r13 reader paid. Same [[GdxSymbolDecode]] core as the row
-  * reader: block skipping, pushed-filter residual, special-value
-  * mapping all shared.
+  * the r13 reader paid. The only symbol decode: [[GdxSymbolReader]]
+  * and the driver venue read its batches as rows.
   */
 class GdxSymbolColumnarReader private[sources] (core: GdxSymbolDecode,
     required: StructType, batchSize: Int = GdxCodec.DefaultBlockSize)
@@ -702,15 +637,16 @@ class GdxSymbolColumnarReader private[sources] (core: GdxSymbolDecode,
     }
 
   // flyweight record state: the decode fills these caller-owned arrays
-  // (no GdxRecord / keys / values allocation per record)
+  // (no keys / values allocation per record)
   private val recKeys = new Array[Int](math.max(core.meta.dim, 1))
   private val recVals = new Array[Double](5)
   private def firstVal: Double = if (core.valueArity == 0) 0.0 else recVals(0)
   // text-pool bytes encode once per distinct text (pool-sized cache)
   private val textBytes = new scala.collection.mutable.HashMap[Int, Array[Byte]]()
 
-  // per-field vector fillers — the columnar twin of the row emitters;
-  // textIdx is the 1-based text-pool index (0 = none)
+  // per-field vector fillers, the one place special values, texts, set
+  // membership and flags are mapped; t is the 1-based text-pool index
+  // (0 = none)
   private val fillers: Array[(Int, Int, OnHeapColumnVector) => Unit] =
     required.fields.zipWithIndex.map[(Int, Int, OnHeapColumnVector) => Unit] { case (f, c) =>
       f.name match {

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -966,5 +966,55 @@ class GdxSourceSpec extends AnyFunSuite {
       stream.planInputPartitions(GdxManifestOffset(0), GdxShardOffset(Seq("shard-a.gdx")))
     }
     assert(e.getMessage.contains("offset scheme changed"), s"got: ${e.getMessage}")
+  }
+
+  test("option vectorized=false returns the columnar path's rows, in order, for every symbol type and mode") {
+    // two shards holding a set with texts, a parameter carrying EPS, NA,
+    // UNDEF and an acronym, a variable and an equation; both shards hold
+    // every label, so each pushed filter keeps rows in both
+    val dir = tmpDir()
+    for (k <- 0 until 2) {
+      val b = new GdxBuilder()
+      val acr = b.addAcronym("high")
+      val specials = Vector(1.5 + k, SpecialValues.EPS, SpecialValues.NA, SpecialValues.UNDEF, acr, -2.0, 0.0)
+      val keys = for (d1 <- Seq("a", "b", "c"); d2 <- Seq("x", "y", "z")) yield Seq(d1, d2)
+      val kept = keys.zipWithIndex.filter { case (_, i) => (i + k) % 4 != 3 }
+      def vals(i: Int, n: Int) = Array.tabulate(n)(f => specials((i + f) % specials.length))
+      b.addSymbol("s", SymbolType.Set, 2, kept.map { case (ls, i) =>
+        (ls, Array.empty[Double], if (i % 2 == 0) Some(s"text $k.$i") else None) })
+      b.addSymbol("p", SymbolType.Parameter, 2, kept.map { case (ls, i) => (ls, vals(i, 1), None) })
+      b.addSymbol("v", SymbolType.Variable, 2, kept.map { case (ls, i) => (ls, vals(i + k, 5), None) })
+      b.addSymbol("e", SymbolType.Equation, 2, kept.map { case (ls, i) => (ls, vals(i + 2, 5), None) })
+      GdxCodec.write(b.result(), s"$dir/shard-$k.gdx")
+    }
+    // always true, but nondeterministic: a conjunct of the pushed label's
+    // own filter, it keeps the slice on the task-side path instead of
+    // the driver venue
+    val inTasks = rand() * 0.5 < 0.5
+    val filters: Seq[(String, Option[Column])] = Seq(
+      "none" -> None,
+      "dim_1 =" -> Some(col("dim_1") === "b"),
+      "dim_2 IN" -> Some(col("dim_2").isin("x", "z")))
+    for (sym <- Seq("s", "p", "v", "e"); mode <- Seq("map", "columns", "raw");
+        (fname, filter) <- filters) {
+      def read(vectorized: Boolean): DataFrame = {
+        val df = spark.read.format("gdx").option("symbol", sym).option("specialValues", mode)
+          .option("vectorized", vectorized.toString).load(dir)
+        filter.fold(df)(c => df.filter(c && inTasks))
+      }
+      val full = read(vectorized = true)
+      val pruned = Seq("marginal", "is_na").filter(full.columns.contains)
+      for ((proj, cols) <- Seq("full" -> full.columns.toSeq, "pruned" -> pruned)) {
+        val rowDf = read(vectorized = false).select(cols.map(col): _*)
+        val want = read(vectorized = true).select(cols.map(col): _*).collect().map(_.toString).toSeq
+        val got = rowDf.collect().map(_.toString).toSeq
+        val what = s"$sym/$mode/$fname/$proj"
+        assert(want.nonEmpty, s"fixture: $what selects nothing")
+        assert(got == want, what)
+        val plan = rowDf.queryExecution.executedPlan
+        assert(plan.collectFirst { case _: GdxDriverScanExec => () }.isEmpty, s"$what ran on the driver")
+        assert(plan.toString.contains("pushed=dim_") == filter.isDefined, s"$what: pushed filters")
+      }
+    }
   }
 }
