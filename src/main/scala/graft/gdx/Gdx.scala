@@ -666,11 +666,13 @@ object Gdx {
       val df =
         if (sym.typ == "set") symbol(spark, path, sym.name)
         else symbol(spark, path, sym.name, specialValues = "raw")
-      val renamed = dimCols(df).foldLeft(df) { (acc, c) =>
-        acc.withColumn(c, lowered.foldLeft(when(lit(false), col(c))) {
+      val dims = dimCols(df).toSet
+      val renamed = df.select(df.columns.toIndexedSeq.map { c =>
+        if (!dims(c)) col(c)
+        else lowered.foldLeft(when(lit(false), col(c))) {
           case (w, (from, to)) => w.when(lower(col(c)) === from, to)
-        }.otherwise(col(c)))
-      }
+        }.otherwise(col(c)).as(c)
+      }: _*)
       val valCols = renamed.columns.toIndexedSeq
         .filterNot(c => sym.typ == "set" && c == "value")
       renamed.select(valCols.map(col): _*)

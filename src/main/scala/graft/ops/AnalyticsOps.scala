@@ -1020,7 +1020,7 @@ object AnalyticsOps extends QueryModule {
     * Scale shape: group to the distinct-value frame first (counts per
     * value), then average ranks come from ONE pass of
     * [[WindowOps.globalPrefixSums]] over that frame — range-bucket
-    * running sums + O(#partitions) offset broadcast, NO
+    * running sums + O(#partitions) offset lookup, NO
     * single-partition window anywhere, input-sized nothing. Rank sums
     * are exact dyadic halves (≪ 2^53) so both engines sum them
     * exactly; only z is rounded.
@@ -1318,7 +1318,7 @@ object AnalyticsOps extends QueryModule {
     * index (cumulative indicator) come from ONE
     * [[WindowOps.globalPrefixSums]] pass over the (value, event_id)
     * total order — range-bucket + intra-bucket window + O(#partitions)
-    * offset broadcast, no single-partition exchange at any scale. Every
+    * offset lookup, no single-partition exchange at any scale. Every
     * U term is exact BIGINT (U ≤ N·M²+M·N² keeps headroom to ~10⁶×10⁶
     * samples; past that, sample the arms first — the statistic is
     * rank-based, so a uniform subsample is the standard move); T is two
@@ -2127,8 +2127,8 @@ object AnalyticsOps extends QueryModule {
       .select(col("i"), col("m0"), col("mb1").as("m1"),
         col("mc2").as("m2"), col("md3").as("m3"))
       .localCheckpoint()
-    val x = sub.columns.foldLeft(sub)((df, c) => df.withColumnRenamed(c, s"x_$c"))
-    val y = sub.columns.foldLeft(sub)((df, c) => df.withColumnRenamed(c, s"y_$c"))
+    val x = sub.select(sub.columns.toSeq.map(c => col(c).as(s"x_$c")): _*)
+    val y = sub.select(sub.columns.toSeq.map(c => col(c).as(s"y_$c")): _*)
     val d2 = (col("x_m0") - col("y_m0")) * (col("x_m0") - col("y_m0")) +
       (col("x_m1") - col("y_m1")) * (col("x_m1") - col("y_m1")) +
       (col("x_m2") - col("y_m2")) * (col("x_m2") - col("y_m2")) +

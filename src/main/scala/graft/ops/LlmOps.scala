@@ -4003,15 +4003,11 @@ object LlmOps extends QueryModule {
     */
   def langIdOf(docs: DataFrame): DataFrame = {
     val toks = split(col("text"), " ")
-    val scored = langMarkers.toSeq.sortBy(_._1).foldLeft(docs) {
-      case (acc, (lang, ms)) =>
-        acc.withColumn(s"sc_$lang", size(filter(toks, t => t.isin(ms: _*))))
+    val best = langMarkers.toSeq.sortBy(_._1).map { case (l, ms) =>
+      struct(size(filter(toks, t => t.isin(ms: _*))).as("score"), lit(l).as("lang"))
     }
-    val best = langMarkers.keys.toSeq.sorted
-      .map(l => struct(col(s"sc_$l").as("score"), lit(l).as("lang")))
-    scored
-      .withColumn("pred", sort_array(array(best: _*), asc = false)(0).getField("lang"))
-      .drop(langMarkers.keys.toSeq.sorted.map(l => s"sc_$l"): _*)
+    docs.select(col("*"),
+      sort_array(array(best: _*), asc = false)(0).getField("lang").as("pred"))
   }
 
   q("text_lang_id",
@@ -4104,15 +4100,12 @@ object LlmOps extends QueryModule {
     val n1 = greatest(size(chars) - 1, lit(0))
     val bigrams = zip_with(slice(chars, lit(1), n1), slice(chars, lit(2), n1),
       (x, y) => concat(x, y))
-    val scored = langBigrams.toSeq.sortBy(_._1).foldLeft(T(s, d, "documents")) {
-      case (acc, (lang, bs)) =>
-        acc.withColumn(s"sc_$lang", size(filter(bigrams, b => b.isin(bs: _*))))
+    val best = langBigrams.toSeq.sortBy(_._1).map { case (l, bs) =>
+      struct(size(filter(bigrams, b => b.isin(bs: _*))).as("score"), lit(l).as("lang"))
     }
-    val best = langBigrams.keys.toSeq.sorted
-      .map(l => struct(col(s"sc_$l").as("score"), lit(l).as("lang")))
-    scored
-      .withColumn("pred", sort_array(array(best: _*), asc = false)(0).getField("lang"))
-      .select(col("doc_id"), col("lang"), col("pred"))
+    T(s, d, "documents")
+      .select(col("doc_id"), col("lang"),
+        sort_array(array(best: _*), asc = false)(0).getField("lang").as("pred"))
       .orderBy("doc_id") // one row per doc = input-sized
   }
 
@@ -4146,20 +4139,20 @@ object LlmOps extends QueryModule {
     * global ordering by a difficulty/quality score that the packing
     * stage consumes): a TOTAL global rank over (score, doc_id). The
     * naive `row_number() OVER (ORDER BY …)` moves the corpus through
-    * ONE task; this uses the two-pass range-bucket rank (WindowOps
-    * ntile machinery, generalized): range partitions + intra-bucket
-    * rank + an O(#partitions) offset broadcast. No single-partition
-    * exchange at any size.
+    * ONE task; this is the running count of a 1 column from
+    * [[WindowOps.globalPrefixSums]]: range partitions + intra-bucket
+    * running count + an O(#partitions) offset lookup. No
+    * single-partition exchange at any size.
     */
   q("pipeline_curriculum_order",
     """SELECT doc_id,
       |       CAST(row_number() OVER (ORDER BY n_chars, doc_id) AS BIGINT)
       |         AS curriculum_rank
       |FROM documents ORDER BY doc_id""") { (s, d) =>
-    WindowOps.globalRowNumber(
-      T(s, d, "documents").select("doc_id", "n_chars"),
-      Seq(col("n_chars").asc, col("doc_id").asc))
-      .select(col("doc_id"), col("global_rank").as("curriculum_rank"))
+    WindowOps.globalPrefixSums(
+      T(s, d, "documents").select(col("doc_id"), col("n_chars"), lit(1L).as("one")),
+      Seq(col("n_chars").asc, col("doc_id").asc), Seq("one"))
+      .select(col("doc_id"), col("cum_one").as("curriculum_rank"))
       .orderBy("doc_id") // one row per doc = input-sized
   }
 
@@ -4170,8 +4163,8 @@ object LlmOps extends QueryModule {
     * ONE window for the within-source rank (partitioned on source —
     * source-sized sorts, no global exchange), then the interleave
     * position is a TOTAL global rank over (within-rank, source) via
-    * the same two-pass range-bucket machinery as curriculum/epoch
-    * ordering — no single-partition exchange at any size.
+    * [[WindowOps.globalPrefixSums]], as in curriculum/epoch ordering —
+    * no single-partition exchange at any size.
     */
   q("pipeline_interleave_sources",
     """WITH r AS (SELECT doc_id, source,
@@ -4181,10 +4174,10 @@ object LlmOps extends QueryModule {
       |       CAST(row_number() OVER (ORDER BY rn, source) AS BIGINT) AS pos
       |FROM r ORDER BY doc_id""") { (s, d) =>
     val w = Window.partitionBy("source").orderBy("doc_id")
-    val ranked = T(s, d, "documents").select("doc_id", "source")
-      .withColumn("rn", row_number().over(w))
-    WindowOps.globalRowNumber(ranked, Seq(col("rn").asc, col("source").asc))
-      .select(col("doc_id"), col("source"), col("global_rank").as("pos"))
+    val ranked = T(s, d, "documents").select(col("doc_id"), col("source"),
+      row_number().over(w).as("rn"), lit(1L).as("one"))
+    WindowOps.globalPrefixSums(ranked, Seq(col("rn").asc, col("source").asc), Seq("one"))
+      .select(col("doc_id"), col("source"), col("cum_one").as("pos"))
       .orderBy("doc_id") // one row per doc = input-sized
   }
 
@@ -4211,8 +4204,8 @@ object LlmOps extends QueryModule {
   /** Deterministic epoch shuffle — reproducible training order: a
     * hash-keyed global permutation (every re-run, every re-ingestion
     * yields the SAME order, unlike rand()-based shuffles). The rank is
-    * the same two-pass range-bucket machinery as curriculum ordering —
-    * no single-partition exchange. The LCG keeps the key
+    * [[WindowOps.globalPrefixSums]]' running count, as in curriculum
+    * ordering — no single-partition exchange. The LCG keeps the key
     * oracle-expressible; a production corpus with >2³² ids swaps in
     * xxhash64 with no shape change.
     */
@@ -4223,10 +4216,10 @@ object LlmOps extends QueryModule {
       |         AS shuffle_rank
       |FROM documents ORDER BY doc_id""") { (s, d) =>
     val h = pmod(col("doc_id") * lit(1103515245L) + lit(12345L), lit(2147483648L))
-    WindowOps.globalRowNumber(
-      T(s, d, "documents").select("doc_id").withColumn("h", h),
-      Seq(col("h").asc, col("doc_id").asc))
-      .select(col("doc_id"), col("global_rank").as("shuffle_rank"))
+    WindowOps.globalPrefixSums(
+      T(s, d, "documents").select(col("doc_id"), h.as("h"), lit(1L).as("one")),
+      Seq(col("h").asc, col("doc_id").asc), Seq("one"))
+      .select(col("doc_id"), col("cum_one").as("shuffle_rank"))
       .orderBy("doc_id") // one row per doc = input-sized
   }
 
@@ -6506,9 +6499,9 @@ object LlmOps extends QueryModule {
     * (bottom half by (avg_nll, doc_id)), not a score threshold — the
     * rank rides rounded 6dp scores already proven hash-equal across
     * engines, so the cut is integer-deterministic where a raw-double
-    * threshold could ulp-flip boundary docs. The global rank reuses the
-    * two-pass range-bucket machinery (no single-partition exchange);
-    * the half-count comes from a broadcast 1-row aggregate.
+    * threshold could ulp-flip boundary docs. The global rank is
+    * [[WindowOps.globalPrefixSums]]' running count (no single-partition
+    * exchange); the half-count comes from a broadcast 1-row aggregate.
     */
   q("pipeline_perplexity_filter",
     """WITH tk AS (SELECT doc_id, str_split(text, ' ') AS tok FROM documents),
@@ -6540,11 +6533,11 @@ object LlmOps extends QueryModule {
       .groupBy("doc_id")
       .agg(round(-avg(log(col("cb").cast("double") / col("cu"))), 6).as("avg_nll"))
     val half = sc.agg((count(lit(1)) / 2).cast("long").as("half"))
-    WindowOps.globalRowNumber(sc, Seq(col("avg_nll").asc, col("doc_id").asc))
-      .withColumnRenamed("global_rank", "rnk")
+    WindowOps.globalPrefixSums(sc.withColumn("one", lit(1L)),
+        Seq(col("avg_nll").asc, col("doc_id").asc), Seq("one"))
       .crossJoin(broadcast(half))
-      .filter(col("rnk") <= col("half"))
-      .select(col("doc_id"), col("avg_nll"), col("rnk"))
+      .filter(col("cum_one") <= col("half"))
+      .select(col("doc_id"), col("avg_nll"), col("cum_one").as("rnk"))
       .orderBy("doc_id") // surviving half of the corpus = input-sized
   }
 

@@ -1580,11 +1580,11 @@ object RelationalOps extends QueryModule {
     // asc_nulls_last: DuckDB's ASC default ranks NULLs last, Spark's
     // ranks them first — a NULL value would shift every decile
     // boundary by one
-    val boundaries = WindowOps.globalRowNumber(ref,
-        Seq(col("value").asc_nulls_last, col("event_id").asc))
+    val boundaries = WindowOps.globalPrefixSums(ref.withColumn("one", lit(1L)),
+        Seq(col("value").asc_nulls_last, col("event_id").asc), Seq("one"))
       .crossJoin(broadcast(nAgg))
       .filter((1 to 9).map(i =>
-        col("global_rank") === ceil(lit(i) * col("n") / 10.0).cast("long"))
+        col("cum_one") === ceil(lit(i) * col("n") / 10.0).cast("long"))
         .reduce(_ || _))
       .select(col("value").as("bv"))
     def buckets(side: org.apache.spark.sql.DataFrame) =
@@ -1614,7 +1614,7 @@ object RelationalOps extends QueryModule {
     * every observation. The ECDFs come from GLOBAL prefix sums of the
     * two membership indicators over the (value, event_id) total order —
     * [[WindowOps.globalPrefixSums]]: range-bucket + intra-bucket
-    * running sums + O(#partitions) offset broadcast, so unlike the
+    * running sums + O(#partitions) offset lookup, so unlike the
     * textbook single ORDER BY window there is no single-partition
     * exchange at any scale. Every per-row term is a division of exact
     * integers; the max is rounded once.

@@ -9,9 +9,9 @@ import org.apache.spark.sql.expressions.Window
   *
   * All window orderings carry a unique tiebreak column (event_id /
   * p_partkey / c_custkey) so frames are deterministic for the hash oracle.
-  * Scale: windows shuffle once on their partition key; the one global
-  * ranking (win_ntile_percent) uses the two-pass range-bucket rank, so
-  * no operator here ever funnels the table through a single task.
+  * Scale: windows shuffle once on their partition key; global ranks
+  * and running sums go through [[WindowOps.globalPrefixSums]], so no
+  * operator here ever funnels the table through a single task.
   */
 object WindowOps extends QueryModule {
 
@@ -147,106 +147,68 @@ object WindowOps extends QueryModule {
       .orderBy("event_id")
   }
 
-  /** Global ntile/percent_rank WITHOUT the single-partition global
-    * window (`Window.orderBy` with no partition key moves the whole
-    * table through one task — the scale-killer this replaces). Two-pass
-    * range-bucket rank instead:
-    *   1. `repartitionByRange` on the sort key → partition i's keys all
-    *      precede partition j's for i<j; per-partition rank via a window
-    *      PARTITIONED BY the bucket id (max task size = one range
-    *      bucket, never the table).
-    *   2. per-bucket counts (#partitions rows) → driver-side cumulative
-    *      offsets (O(#partitions), like IVF's centroid pull) → broadcast
-    *      join; global rank = bucket offset + intra-bucket rank, from
-    *      which ntile/percent_rank are closed-form arithmetic.
-    * Pass 1 is localCheckpoint'd so the counts action and the final
-    * result share one execution. No Exchange SinglePartition anywhere —
-    * asserted in PlanInvariantsSpec.
-    */
-  /** Pass 1 of the two-pass global rank: range-bucket on the sort key,
-    * intra-bucket row_number partitioned by the bucket id. Exposed
-    * (pre-checkpoint) so PlanInvariantsSpec can assert the plan never
-    * contains a single-partition exchange.
-    */
-  private[ops] def ntileRankedPass1(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val parts = s.sparkContext.defaultParallelism
-    val staged = T(s, d, "customer")
-      .select("c_custkey", "c_acctbal")
-      .repartitionByRange(parts, col("c_acctbal"), col("c_custkey"))
-      .withColumn("pid", spark_partition_id())
-    val wIntra = Window.partitionBy("pid")
-      .orderBy(col("c_acctbal").asc, col("c_custkey").asc)
-    staged.withColumn("ir", row_number().over(wIntra).cast("long"))
-  }
-
-  /** Scale-safe global row_number over `sortCols` (must be a total
-    * order): range-bucket + intra-bucket rank + O(#partitions) offset
-    * broadcast — the ntile machinery generalized, no single-partition
-    * exchange anywhere. Returns df + `global_rank` (1-based).
-    */
-  private[ops] def globalRowNumber(df: org.apache.spark.sql.DataFrame,
-      sortCols: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame = {
-    val s = df.sparkSession
-    val parts = s.sparkContext.defaultParallelism
-    val staged = df.repartitionByRange(parts, sortCols: _*)
-      .withColumn("pid", spark_partition_id())
-    val wIntra = Window.partitionBy("pid").orderBy(sortCols: _*)
-    val ranked = staged.withColumn("ir", row_number().over(wIntra).cast("long"))
-      .localCheckpoint()
-    val cnts = ranked.groupBy("pid").agg(count(lit(1)).as("cnt"))
-      .orderBy("pid").collect()
-    var running = 0L
-    val offsets = cnts.map { r =>
-      val o = running; running += r.getLong(1); (r.getInt(0), o)
-    }
-    val offDf = s.createDataFrame(offsets.toIndexedSeq).toDF("pid", "off")
-    ranked.join(broadcast(offDf), "pid")
-      .withColumn("global_rank", col("off") + col("ir"))
-      .drop("pid", "ir", "off")
-  }
-
   /** Scale-safe global INCLUSIVE prefix sums of `sumCols` (integer
-    * columns) over the total order `sortCols` — [[globalRowNumber]]
-    * generalized from counting rows to summing indicators: range-bucket,
-    * intra-bucket running sums sharing ONE partition sort, then an
-    * O(#partitions) per-column offset broadcast. No single-partition
-    * exchange at any size. Adds `cum_<c>` (long) per requested column.
+    * columns) over the total order `sortCols`, WITHOUT the
+    * single-partition global window (`Window.orderBy` with no partition
+    * key moves the whole table through one task — the scale-killer this
+    * replaces). Two passes:
+    *   1. [[rangeBucketSums]]: `repartitionByRange` on the sort key →
+    *      partition i's keys all precede partition j's for i<j; running
+    *      sums from ONE window PARTITIONED BY the bucket id (max task
+    *      size = one range bucket, never the table).
+    *   2. per-bucket totals (#partitions rows) → driver-side exclusive
+    *      offsets (O(#partitions), like IVF's centroid pull), added by
+    *      a literal-array lookup on the bucket id.
+    * Pass 1 is localCheckpoint'd so the totals action and the final
+    * result share one execution. No Exchange SinglePartition anywhere —
+    * asserted in PlanInvariantsSpec. Returns the input columns, then
+    * `cum_<c>` (long) in `sumCols` order. The global row_number is the
+    * running count of a `one` = 1 column: every caller sorts on a total
+    * order, so the ROWS frame has no tie plateaus.
     */
-  private[ops] def globalPrefixSums(df: org.apache.spark.sql.DataFrame,
-      sortCols: Seq[org.apache.spark.sql.Column],
-      sumCols: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val s = df.sparkSession
-    val parts = s.sparkContext.defaultParallelism
-    val staged = df.repartitionByRange(parts, sortCols: _*)
-      .withColumn("pid", spark_partition_id())
+  private[ops] def globalPrefixSums(df: DataFrame, sortCols: Seq[Column],
+      sumCols: Seq[String]): DataFrame = {
+    val ranked = rangeBucketSums(df, sortCols, sumCols).localCheckpoint()
+    val totals = ranked.groupBy("pid")
+      .agg(sum(col(sumCols.head)).cast("long"),
+        sumCols.tail.map(c => sum(col(c)).cast("long")): _*)
+      .collect()
+    val nPids = totals.map(_.getInt(0) + 1).maxOption.getOrElse(0)
+    val cums = sumCols.zipWithIndex.map { case (c, i) =>
+      val t = new Array[Long](nPids) // empty range buckets hold no rows
+      totals.foreach(r => t(r.getInt(0)) = r.getLong(i + 1))
+      val offsets = t.scanLeft(0L)(_ + _).init
+      (col(s"ic_$c") + element_at(typedLit(offsets), col("pid") + 1)).as(s"cum_$c")
+    }
+    ranked.select(df.columns.toSeq.map(col) ++ cums: _*)
+  }
+
+  /** Pass 1 of [[globalPrefixSums]], before its checkpoint: range-bucket
+    * on the sort key, then the intra-bucket running sum `ic_<c>` of
+    * every `sumCols` column in one projection over one partition sort.
+    */
+  private[ops] def rangeBucketSums(df: DataFrame, sortCols: Seq[Column],
+      sumCols: Seq[String]): DataFrame = {
+    val parts = df.sparkSession.sparkContext.defaultParallelism
     val wIntra = Window.partitionBy("pid").orderBy(sortCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = sumCols.foldLeft(staged) { (acc, c) =>
-      acc.withColumn(s"ic_$c", sum(col(c)).over(wIntra).cast("long"))
-    }.localCheckpoint()
-    val totals = ranked.groupBy("pid")
-      .agg(sum(col(sumCols.head)).cast("long").as(s"t_${sumCols.head}"),
-        sumCols.tail.map(c => sum(col(c)).cast("long").as(s"t_$c")): _*)
-      .orderBy("pid").collect()
-    val running = scala.collection.mutable.Map(sumCols.map(_ -> 0L): _*)
-    val offsets = totals.map { r =>
-      val row = r.getInt(0) +: sumCols.zipWithIndex.map { case (c, i) =>
-        val o = running(c); running(c) += r.getLong(i + 1); o
-      }
-      org.apache.spark.sql.Row(row: _*)
-    }
-    val offSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("pid",
-        org.apache.spark.sql.types.IntegerType) +:
-        sumCols.map(c => org.apache.spark.sql.types.StructField(s"off_$c",
-          org.apache.spark.sql.types.LongType)))
-    val offDf = s.createDataFrame(
-      java.util.Arrays.asList(offsets: _*), offSchema)
-    sumCols.foldLeft(ranked.join(broadcast(offDf), "pid")) { (acc, c) =>
-      acc.withColumn(s"cum_$c", col(s"off_$c") + col(s"ic_$c"))
-        .drop(s"off_$c", s"ic_$c")
-    }.drop("pid")
+    df.repartitionByRange(parts, sortCols: _*)
+      .withColumn("pid", spark_partition_id())
+      .select(col("*") +:
+        sumCols.map(c => sum(col(c)).over(wIntra).cast("long").as(s"ic_$c")): _*)
+  }
+
+  /** ntile(k) from a 1-based global `rank` over `n` rows, closed form:
+    * the first n mod k tiles get ceil(n/k) rows, the rest floor(n/k).
+    */
+  private[ops] def ntileBucket(rank: Column, n: Long, k: Long): Column = {
+    val q0 = n / k
+    val rem = n % k
+    when(lit(rem) > 0 && rank <= lit(rem * (q0 + 1)),
+      floor((rank - 1) / lit(q0 + 1)) + 1)
+      .otherwise(lit(rem) +
+        floor((rank - lit(rem * (q0 + 1)) - 1) / lit(math.max(q0, 1L))) + 1)
+      .cast("int")
   }
 
   q("win_ntile_percent",
@@ -254,32 +216,17 @@ object WindowOps extends QueryModule {
       |       ntile(4) OVER (ORDER BY c_acctbal, c_custkey) AS bucket,
       |       round(percent_rank() OVER (ORDER BY c_acctbal, c_custkey), 6) AS pr
       |FROM customer ORDER BY c_custkey""") { (s, d) =>
-    val ranked = ntileRankedPass1(s, d).localCheckpoint()
-    val cnts = ranked.groupBy("pid").agg(count(lit(1)).as("cnt"))
-      .orderBy("pid").collect()
-    var running = 0L
-    val offsets = cnts.map { r =>
-      val o = running; running += r.getLong(1); (r.getInt(0), o)
-    }
-    val n = running
-    val offDf = s.createDataFrame(offsets.toIndexedSeq).toDF("pid", "off")
-    // ntile(k): first (n mod k) tiles get ceil(n/k) rows — closed form
-    // from the global rank; percent_rank = (rank-1)/(n-1), exact since
-    // the (c_acctbal, c_custkey) order is unique (no tie plateaus).
-    val k = 4L
-    val q0 = n / k
-    val rem = n % k
-    val rank = col("off") + col("ir")
-    val bucket =
-      when(lit(rem) > 0 && rank <= lit(rem * (q0 + 1)),
-        floor((rank - 1) / lit(q0 + 1)) + 1)
-        .otherwise(lit(rem) + floor((rank - lit(rem * (q0 + 1)) - 1) / lit(math.max(q0, 1L))) + 1)
-        .cast("int")
+    val cust = T(s, d, "customer").select("c_custkey", "c_acctbal")
+    val n = cust.count()
+    // percent_rank = (rank-1)/(n-1), exact since the (c_acctbal,
+    // c_custkey) order is unique (no tie plateaus)
+    val rank = col("cum_one")
     val pr =
       if (n <= 1) lit(0.0)
       else round((rank - 1).cast("double") / lit((n - 1).toDouble), 6)
-    ranked.join(broadcast(offDf), "pid")
-      .select(col("c_custkey"), bucket.as("bucket"), pr.as("pr"))
+    globalPrefixSums(cust.withColumn("one", lit(1L)),
+        Seq(col("c_acctbal").asc, col("c_custkey").asc), Seq("one"))
+      .select(col("c_custkey"), ntileBucket(rank, n, 4).as("bucket"), pr.as("pr"))
       .orderBy("c_custkey")
   }
 
@@ -291,11 +238,11 @@ object WindowOps extends QueryModule {
     * arithmetic, rule 6), F = order count, M = lifetime spend in
     * integer cents (exact at any accumulation order), each mapped to a
     * 1–4 quartile via ntile(4) over (metric, custkey). Spark side
-    * reproduces ntile's closed form (first n mod k tiles get
-    * ceil(n/k)) from a DISTRIBUTED global rank — three
-    * [[globalPrefixSums]] passes over the customer-sized aggregate
-    * frame (range-partition + intra-partition running count +
-    * O(#partitions) offset broadcast), NEVER an unpartitioned window:
+    * reproduces ntile's closed form ([[ntileBucket]]) from a
+    * DISTRIBUTED global rank — three [[globalPrefixSums]] passes over
+    * the customer-sized aggregate frame (range-partition +
+    * intra-partition running count + O(#partitions) offset lookup),
+    * NEVER an unpartitioned window:
     * at 100 TB the single-partition ntile sort is the anti-scale
     * move, the rank passes are each one bounded-frame shuffle.
     * rfm_code packs the three digits (444 = best-ish corner by the
@@ -338,23 +285,10 @@ object WindowOps extends QueryModule {
         sum(expr("cast(round(o_totalprice * 100) as bigint)")).cast("long").as("m_cents"))
       .localCheckpoint() // three rank passes + the count read one materialization
     val n = c.count()
-    def seg(df: org.apache.spark.sql.DataFrame, metric: String,
-        alias: String): org.apache.spark.sql.DataFrame = {
-      val ranked = globalPrefixSums(df.withColumn("one", lit(1L)),
-        Seq(col(metric).asc, col("o_custkey").asc), Seq("one"))
-      val rank = col("cum_one")
-      val k = 4L
-      val q0 = n / k
-      val rem = n % k
-      // ntile closed form (the win_ntile_percent device): first rem
-      // tiles get q0+1 rows, the rest q0
-      val bucket =
-        when(lit(rem) > 0 && rank <= lit(rem * (q0 + 1)),
-          floor((rank - 1) / lit(q0 + 1)) + 1)
-          .otherwise(lit(rem) +
-            floor((rank - lit(rem * (q0 + 1)) - 1) / lit(math.max(q0, 1L))) + 1)
-      ranked.withColumn(alias, bucket.cast("int")).drop("one", "cum_one")
-    }
+    def seg(df: DataFrame, metric: String, alias: String): DataFrame =
+      globalPrefixSums(df.withColumn("one", lit(1L)),
+          Seq(col(metric).asc, col("o_custkey").asc), Seq("one"))
+        .select(df.columns.toSeq.map(col) :+ ntileBucket(col("cum_one"), n, 4).as(alias): _*)
     val segd = seg(seg(seg(c, "r_days", "r_seg"), "f", "f_seg"), "m_cents", "m_seg")
     segd.select(col("o_custkey"), col("r_days").cast("long").as("r_days"),
       col("f"), col("m_cents"), col("r_seg"), col("f_seg"), col("m_seg"),

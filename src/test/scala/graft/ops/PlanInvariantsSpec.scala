@@ -117,13 +117,17 @@ class PlanInvariantsSpec extends AnyFunSuite {
   }
 
   test("win_ntile_percent: no single-partition global sort of the input") {
-    // pass 1 (range bucket + per-bucket window) must keep full
-    // parallelism — the old Window.orderBy-with-no-partition plan put
-    // the entire table through one task
-    val p1 = plan(WindowOps.ntileRankedPass1(spark, d))
+    // pass 1 of the shared globalPrefixSums (range bucket + per-bucket
+    // window), over the rank this key runs, must keep full parallelism
+    // — the old Window.orderBy-with-no-partition plan put the entire
+    // table through one task
+    val cust = graft.T(spark, d, "customer")
+      .select(col("c_custkey"), col("c_acctbal"), lit(1L).as("one"))
+    val p1 = plan(WindowOps.rangeBucketSums(cust,
+      Seq(col("c_acctbal").asc, col("c_custkey").asc), Seq("one")))
     assert(p1.contains("rangepartitioning"), s"expected range bucketing in:\n$p1")
     assert(!p1.contains("SinglePartition"), s"pass 1 must not collapse to one partition:\n$p1")
-    // the assembled query (broadcast offsets join + final sort) too
+    // the assembled query (offset lookup + final sort) too
     val p2 = plan(graft.SparkEntry.queries("win_ntile_percent")(spark, d))
     assert(!p2.contains("SinglePartition"), s"no single-partition exchange in:\n$p2")
   }
@@ -421,7 +425,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("dq_drift_ks: the only single-partition exchange is the 1-row totals agg") {
     // the prefix-sum pass itself sits behind globalPrefixSums'
     // localCheckpoint (Scan ExistingRDD below), whose range-bucket shape
-    // win_ntile_percent already pins on the shared machinery — here we
+    // win_ntile_percent pins on the shared rangeBucketSums — here we
     // assert the assembled query never funnels DATA through one task:
     // the single SinglePartition exchange allowed is the (n_a, n_b)
     // global aggregate, which carries exactly two longs
@@ -703,7 +707,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("agg_rfm_segments: quartile ranks never funnel data through one task") {
     // three globalPrefixSums passes over the checkpointed customer
     // aggregate replace the unpartitioned ntile window — the plan must
-    // show the checkpoint + broadcast offset joins and NO SinglePartition
+    // show the checkpoint + offset lookups and NO SinglePartition
     // data exchange at all (even the clock is a 1-row broadcast cross)
     val p = plan(graft.SparkEntry.queries("agg_rfm_segments")(spark, d))
     assert(!p.contains("Exchange SinglePartition"),
