@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -38,10 +39,13 @@ object Bench {
     * elapsed-to-exception as the query's time: an analysis error
     * throws in milliseconds, and min-of-reps would then report a
     * near-zero "speedup" (and poison the stall-gate prior) for a
-    * BROKEN query — breakage reading as improvement.
+    * BROKEN query — breakage reading as improvement. Also returns the
+    * classes Spark compiled during it: a rep whose code is all in the
+    * generated-class cache compiles none.
     */
   private def timeOnce(spark: SparkSession, sfDir: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long) = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     val ok =
       try { fn(spark, sfDir).count(); true }
@@ -53,7 +57,7 @@ object Bench {
     // free localCheckpoint residue between reps so a query's time
     // never includes (or suffers from) another run's dead blocks
     Sessions.releaseCheckpoints(spark)
-    if (ok) t else Double.NaN
+    (if (ok) t else Double.NaN, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
   }
 
   def main(args: Array[String]): Unit = {
@@ -87,8 +91,13 @@ object Bench {
     // between queries run-to-run with GC quiet; a whole 2-pass run was
     // seen uniformly ~1.5× slower), and min-of-3 keeps a stall from
     // misattributing tens of seconds to whatever query it lands on.
+    // The compile counts go to stderr: the first rep pays the key's cold
+    // compiles, a warm rep only what the generated-class cache misses.
     val firstPass = selected.map { case (name, fn) =>
-      (name, fn, (1 to 3).map(_ => timeOnce(spark, sfDir, fn)))
+      val reps = (1 to 3).map(_ => timeOnce(spark, sfDir, fn))
+      System.err.println(s"[bench] compiles $name: first ${reps.head._2}, " +
+        s"warm ${reps.tail.map(_._2).mkString("/")}")
+      (name, fn, reps.map(_._1))
     }
     // A stall that covers a query's whole 3-rep window inflates even the
     // min — the r5 verdict measured ~2.5 s of such noise landing on
@@ -107,7 +116,7 @@ object Bench {
       val suspect = (m > 0.3 && ts.max / m > 1.5) ||
         prior.get(name).exists(p => m > 1.35 * p && m - p > 0.1)
       val best =
-        if (suspect) math.min(m, (1 to 2).map(_ => timeOnce(spark, sfDir, fn)).min)
+        if (suspect) math.min(m, (1 to 2).map(_ => timeOnce(spark, sfDir, fn)._1).min)
         else m
       name -> best
     }.filter { case (name, best) =>

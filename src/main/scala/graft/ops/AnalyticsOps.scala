@@ -1747,10 +1747,12 @@ object AnalyticsOps extends QueryModule {
     * "random" label flips; binomial reassignment at the observed group
     * rate rather than an exact permutation, stated honestly).
     * p = (1 + #{|diff_b| ≥ |diff_obs|})/(B+1) — the add-one
-    * Monte-Carlo estimator. ONE corpus pass computes all 32 replicate
-    * sums as agg columns over grid-snapped values; every comparison is
-    * between deterministic doubles. Degenerate replicates (a side
-    * empty) go NULL and drop from the extreme count on both engines.
+    * Monte-Carlo estimator. ONE corpus pass explodes each event into
+    * its 32 replicate rows and sums the grid-snapped values grouped by
+    * replicate, so the draw ([[Replicates.uniform]]) is one expression
+    * and every comparison is between deterministic doubles. Degenerate
+    * replicates (a side empty) go NULL and drop from the extreme count
+    * on both engines.
     */
   q("agg_permutation_pvalue", {
     val B = 32
@@ -1785,31 +1787,27 @@ object AnalyticsOps extends QueryModule {
       |FROM x""".stripMargin
   }) { (s, d) =>
     val B = 32
-    def uCol(b: Int): org.apache.spark.sql.Column =
-      (pmod(pmod(col("event_id") * lit(131L) + lit(b.toLong), lit(2147483648L))
-        * lit(1103515245L) + lit(12345L), lit(2147483648L))
-        .cast("double") + lit(0.5)) / lit(2147483648.0)
     val e = T(s, d, "events").select(col("event_id"),
       Grid.dy20(col("value")).as("v"),
       when(col("event_type") === "click", 1L).otherwise(0L).as("ic"))
     val t = e.agg(count(lit(1)).cast("long").as("n"), sum("v").as("st"),
       sum("ic").cast("long").as("nc"), sum(col("v") * col("ic")).as("sc"))
       .withColumn("q", col("nc").cast("double") / col("n"))
-    val aggs =
-      (1 to B).flatMap(b => Seq(
-        sum(when(uCol(b) < col("q"), col("v")).otherwise(0.0)).as(s"sa$b"),
-        sum(when(uCol(b) < col("q"), 1L).otherwise(0L)).cast("long").as(s"na$b")))
-    val r = e.crossJoin(broadcast(t))
-      .groupBy("n", "st", "nc", "sc", "q")
-      .agg(aggs.head, aggs.tail: _*)
+    val tot = Seq("n", "st", "nc", "sc")
+    val reps = e.crossJoin(broadcast(t))
+      .withColumn("b", explode(sequence(lit(1), lit(B))))
+      .withColumn("a", Replicates.uniform(col("event_id"), col("b")) < col("q"))
+      .groupBy((tot :+ "b").map(col): _*)
+      .agg(sum(when(col("a"), col("v")).otherwise(0.0)).as("sa"),
+        sum(when(col("a"), 1L).otherwise(0L)).cast("long").as("na"))
     val obs = col("sc") / col("nc") - (col("st") - col("sc")) / (col("n") - col("nc"))
-    val ds = array((1 to B).map(b =>
-      abs(col(s"sa$b") / nullif(col(s"na$b"), lit(0L)) -
-        (col("st") - col(s"sa$b")) / nullif(col("n") - col(s"na$b"), lit(0L)))): _*)
-    r.select(col("n"), col("nc").as("n_click"), round(obs, 6).as("obs_diff"),
-      size(filter(ds, dd => dd >= abs(obs))).cast("long").as("n_extreme"),
-      round((lit(1.0) + size(filter(ds, dd => dd >= abs(obs)))) / lit((B + 1).toDouble), 6)
-        .as("p_value"))
+    val diff = abs(col("sa") / nullif(col("na"), lit(0L)) -
+      (col("st") - col("sa")) / nullif(col("n") - col("na"), lit(0L)))
+    reps.groupBy(tot.map(col): _*)
+      .agg(count(when(diff >= abs(obs), 1)).as("ext"))
+      .select(col("n"), col("nc").as("n_click"), round(obs, 6).as("obs_diff"),
+        col("ext").as("n_extreme"),
+        round((lit(1.0) + col("ext")) / lit((B + 1).toDouble), 6).as("p_value"))
   }
 
   /** Hodges–Lehmann pseudo-median of the daily mean value (SPEC:
@@ -2508,14 +2506,19 @@ object AnalyticsOps extends QueryModule {
     * AUC — "is the gate actually better than coin-flipping" needs the
     * CI, not the point estimate; per-document ~Poisson(1) weights per
     * replicate make all B=32 resampled AUCs computable in ONE corpus
-    * pass). Everything stays EXACT INTEGER per replicate: weights
-    * 0..3 from the deterministic LCG rule, weighted pos/neg masses
-    * per distinct score (one 64-column two-phase agg), weighted
-    * cum-negatives from ONE [[WindowOps.globalPrefixSums]] pass over
-    * all 32 columns, u_b = Σ pos_b·(2·below_b + neg_b) exact BIGINT
-    * (headroom to P·N ≈ 2⁶¹/27 — past that, sample first). The CI is
-    * rank-based over the 32 round-6 replicate AUCs via one in-row
-    * array_sort — no window, no extra shuffle beyond eval_auc_roc's.
+    * pass). Everything stays EXACT INTEGER per replicate: each document
+    * is exploded into replicate rows b = 0..32 — b = 0 weighs it 1 (the
+    * point AUC, n_pos and n_neg), b ≥ 1 by [[Replicates.poissonWeight]]
+    * (0..3) — and weighted pos/neg masses p, q are two sums grouped by
+    * (b, score). ONE [[WindowOps.globalPrefixSums]] pass over (b, score)
+    * with the single sum column q gives cumulative negatives; subtracting
+    * replicate b's starting offset (the per-b totals of q, collected,
+    * applied as a literal lookup) leaves each row its own replicate's
+    * below_b, so u_b = Σ p·(2·below_b + q) stays exact BIGINT with the
+    * per-replicate headroom to P·N ≈ 2⁶¹/27 (past that, sample first).
+    * The CI is rank-based over the 32 round-6 replicate AUCs, one
+    * sort_array over their collect_list. The generated code is narrow:
+    * one weight expression and three sums, not 32 copies of each.
     */
   q("eval_auc_bootstrap", {
     val B = 32
@@ -2569,40 +2572,41 @@ object AnalyticsOps extends QueryModule {
       |FROM srt""".stripMargin
   }) { (s, d) =>
     val B = 32
-    def wtCol(b: Int): org.apache.spark.sql.Column = {
-      val u = (pmod(pmod(col("doc_id") * lit(131L) + lit(b.toLong), lit(2147483648L))
-        * lit(1103515245L) + lit(12345L), lit(2147483648L))
-        .cast("double") + lit(0.5)) / lit(2147483648.0)
-      when(u < 0.367879, 0L).when(u < 0.735759, 1L)
-        .when(u < 0.919699, 2L).otherwise(3L)
-    }
-    val f = scoredDocs(s, d)
-    val gAggs =
-      sum("y").cast("long").as("pos") +:
-        (count(lit(1)) - sum("y")).cast("long").as("neg") +:
-        (1 to B).flatMap(b => Seq(
-          sum(when(col("y") === 1, wtCol(b)).otherwise(0L)).cast("long").as(s"p$b"),
-          sum(when(col("y") === 0, wtCol(b)).otherwise(0L)).cast("long").as(s"q$b")))
-    val g = f.groupBy("s").agg(gAggs.head, gAggs.tail: _*)
-    val cum = WindowOps.globalPrefixSums(g, Seq(col("s").asc),
-      "neg" +: (1 to B).map(b => s"q$b"))
-    val uAggs =
-      sum(col("pos") * (lit(2L) * (col("cum_neg") - col("neg")) + col("neg")))
-        .cast("long").as("u0") +:
-        sum("pos").cast("long").as("p0") +: sum("neg").cast("long").as("n0") +:
-        (1 to B).flatMap(b => Seq(
-          sum(col(s"p$b") * (lit(2L) * (col(s"cum_q$b") - col(s"q$b")) + col(s"q$b")))
-            .cast("long").as(s"u$b"),
-          sum(s"p$b").cast("long").as(s"tp$b"),
-          sum(s"q$b").cast("long").as(s"tq$b")))
-    val u = cum.agg(uAggs.head, uAggs.tail: _*)
-    val aucs = array((1 to B).map(b =>
-      coalesce(round(col(s"u$b") / (lit(2.0) * nullif(col(s"tp$b"), lit(0L)) *
-        nullif(col(s"tq$b"), lit(0L))), 6), lit(0.5))): _*)
-    u.select(col("p0").as("n_pos"), col("n0").as("n_neg"),
-      round(col("u0") / (lit(2.0) * col("p0") * col("n0")), 6).as("auc"),
-      element_at(sort_array(aucs), 2).as("ci_lo"),
-      element_at(sort_array(aucs), 31).as("ci_hi"))
+    // replicate 0 weighs every document 1: the full-sample AUC
+    val w = scoredDocs(s, d)
+      .select(col("doc_id"), col("y"), col("s"), explode(sequence(lit(0), lit(B))).as("b"))
+      .select(col("y"), col("s"), col("b"),
+        Replicates.uniform(col("doc_id"), col("b")).as("u"))
+      .select(col("y"), col("s"), col("b"),
+        when(col("b") === 0, 1L).otherwise(Replicates.poissonWeight(col("u"))).as("w"))
+      .filter(col("w") > 0)
+    val g = w.groupBy("b", "s").agg(
+      sum(col("y") * col("w")).cast("long").as("p"),
+      sum((lit(1L) - col("y")) * col("w")).cast("long").as("q"))
+    val cum = WindowOps.globalPrefixSums(g, Seq(col("b").asc, col("s").asc), Seq("q"))
+    // each replicate's starting offset in the (b, s) order, so `below`
+    // is the replicate's own weighted cum-negatives
+    val tq = new Array[Long](B + 1)
+    cum.groupBy("b").agg(sum("q").cast("long")).collect()
+      .foreach(r => tq(r.getInt(0)) = r.getLong(1))
+    val below = col("cum_q") - col("q") -
+      element_at(typedLit(tq.scanLeft(0L)(_ + _).init), col("b") + 1)
+    val per = cum.groupBy("b").agg(
+      sum(col("p") * (lit(2L) * below + col("q"))).cast("long").as("u"),
+      sum("p").cast("long").as("tp"), sum("q").cast("long").as("tq"))
+    val auc = round(col("u") / (lit(2.0) * nullif(col("tp"), lit(0L)) *
+      nullif(col("tq"), lit(0L))), 6)
+    val full = col("b") === 0
+    // a replicate with no weighted mass has no row: it takes the 0.5
+    // sentinel, like a row whose AUC is NULL
+    val reps = col("reps")
+    per.agg(max(when(full, col("tp"))).as("n_pos"), max(when(full, col("tq"))).as("n_neg"),
+        max(when(full, auc)).as("auc"),
+        collect_list(when(!full, coalesce(auc, lit(0.5)))).as("reps"))
+      .select(col("n_pos"), col("n_neg"), col("auc"),
+        sort_array(concat(reps, array_repeat(lit(0.5), lit(B) - size(reps)))).as("a"))
+      .select(col("n_pos"), col("n_neg"), col("auc"),
+        element_at(col("a"), 2).as("ci_lo"), element_at(col("a"), 31).as("ci_hi"))
   }
 
   /** Average precision / PR-AUC (SPEC: the step-wise AP of TREC /

@@ -1514,16 +1514,9 @@ object RelationalOps extends QueryModule {
       |       max(CASE WHEN rn = 31 THEN m END) AS ci_hi
       |FROM r, full_m GROUP BY full_m.n, full_m.mean""") { (s, d) =>
     val ev = T(s, d, "events").select("event_id", "value")
-    // reduce the (event_id*131 + b) mix below 2^31 before the LCG
-    // multiply — the unreduced product overflows Long (ANSI crash)
-    // once event_id reaches ~6.4e7, well inside the 100 TB contract
-    val u = (pmod(pmod(col("event_id") * lit(131L) + col("b"), lit(2147483648L))
-      * lit(1103515245L) + lit(12345L), lit(2147483648L))
-      .cast("double") + lit(0.5)) / lit(2147483648.0)
-    val wt = when(u < 0.367879, 0).when(u < 0.735759, 1)
-      .when(u < 0.919699, 2).otherwise(3)
     val reps = ev.withColumn("b", explode(sequence(lit(1), lit(32))))
-      .withColumn("wt", wt)
+      .withColumn("u", Replicates.uniform(col("event_id"), col("b")))
+      .withColumn("wt", Replicates.poissonWeight(col("u")))
       .groupBy("b")
       .agg(round(sum(col("wt") * col("value"))
         / nullif(sum(col("wt")).cast("double"), lit(0.0)), 6).as("m"))

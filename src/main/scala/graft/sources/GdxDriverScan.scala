@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression, In
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Project, ReturnAnswer}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.internal.SQLConf
@@ -27,11 +28,12 @@ import org.apache.spark.sql.internal.SQLConf
   * use. Spark's own filter and projection expressions then run on the
   * batches' rows, and each kept row is copied out of its batch, so the
   * result is the rows the distributed plan returns, in shard order,
-  * with the same case and locale semantics. Every other scan, and
-  * any projection or filter that is nondeterministic or holds a
-  * subquery, keeps the distributed path. A limit an action puts over
-  * such a scan (`isEmpty`, `take`, `first`) is answered from the same
-  * rows, with no job either.
+  * with the same case and locale semantics. Every other scan keeps the
+  * distributed path, and so does a scan with a nondeterministic or
+  * subquery-holding projection or filter anywhere in the chain above
+  * it, which Spark would otherwise run as a job over the decoded rows.
+  * A limit an action puts over such a scan (`isEmpty`, `take`, `first`)
+  * is answered from the same rows, with no job either.
   *
   * The rows are read when the query is planned, like a local relation:
   * a frame planned once and collected twice does not re-read its files.
@@ -45,29 +47,45 @@ class GdxDriverScan(spark: SparkSession) extends SparkStrategy {
   }
 
   private def driverScan(plan: LogicalPlan): Option[GdxDriverScanExec] =
-    if (!GdxDriverScan.overGdxScan(plan)) None
-    else plan match {
-      case PhysicalOperation(project, filters, DataSourceV2ScanRelation(_, scan: GdxScan, output, _, _))
-          if (project ++ filters).forall(e => e.deterministic && !SubqueryExpression.hasSubquery(e)) =>
-        scan.driverCores(GdxDriverScan.maxShards(spark.sparkContext.defaultParallelism))
-          .map(GdxDriverScan.decode(scan, _, project, filters, output))
-      case _ => None
+    GdxDriverScan.chainOverGdxScan(plan).flatMap { case (chain, relation) =>
+      if (chain.exists(_.expressions.exists(e => !e.deterministic || SubqueryExpression.hasSubquery(e)))) {
+        // Spark plans the chain below this node next, without it: mark
+        // the scan so that chain keeps the distributed path too, rather
+        // than decode on the driver and then run a job over the rows
+        relation.setTagValue(GdxDriverScan.Distributed, ())
+        None
+      } else if (relation.getTagValue(GdxDriverScan.Distributed).isDefined) None
+      else plan match {
+        case PhysicalOperation(project, filters, DataSourceV2ScanRelation(_, scan: GdxScan, output, _, _)) =>
+          scan.driverCores(GdxDriverScan.maxShards(spark.sparkContext.defaultParallelism))
+            .map(GdxDriverScan.decode(scan, _, project, filters, output))
+        case _ => None
+      }
     }
 }
 
 object GdxDriverScan {
 
-  /** A chain of projections and filters over a GDX scan: the only plans
-    * the strategy can take, checked before any other planning work so
-    * that every other plan costs one walk down its Project/Filter chain.
+  /** A chain of projections and filters over a GDX scan, as its nodes
+    * and the scan relation: the only plans the strategy can take,
+    * checked before any other planning work so that every other plan
+    * costs one walk down its Project/Filter chain.
     */
   @scala.annotation.tailrec
-  private def overGdxScan(plan: LogicalPlan): Boolean = plan match {
-    case Project(_, child) => overGdxScan(child)
-    case Filter(_, child) => overGdxScan(child)
-    case r: DataSourceV2ScanRelation => r.scan.isInstanceOf[GdxScan]
-    case _ => false
+  private def chainOverGdxScan(plan: LogicalPlan, above: List[LogicalPlan] = Nil)
+      : Option[(List[LogicalPlan], DataSourceV2ScanRelation)] = plan match {
+    case p @ Project(_, child) => chainOverGdxScan(child, p :: above)
+    case f @ Filter(_, child) => chainOverGdxScan(child, f :: above)
+    case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GdxScan] => Some((above, r))
+    case _ => None
   }
+
+  /** Set on the scan relation of a chain holding a nondeterministic or
+    * subquery-holding projection or filter. The relation node is shared
+    * with the chain's lower part, which Spark plans next, so that part
+    * declines too.
+    */
+  private val Distributed = TreeNodeTag[Unit]("gdxDistributedScan")
 
   /** Shards a driver scan may plan: at most `defaultParallelism`, and at
     * most one per driver core, so that every shard's decode has a core of

@@ -579,7 +579,8 @@ class AnalyticsSpec extends AnyFunSuite {
         (r.getLong(0), if (r.getString(1) == "en") 1 else 0,
           -2.0 + 0.015 * t + 0.45 * ((ch - t + 1) * 1.0 / t))
       }
-    def wt(id: Long, b: Int): Long = {
+    // replicate 0 weighs every document 1: the full sample
+    def wt(id: Long, b: Int): Long = if (b == 0) 1L else {
       val u = (((id * 131 + b) % 2147483648L) * 1103515245L + 12345L) % 2147483648L
       val x = (u + 0.5) / 2147483648.0
       if (x < 0.367879) 0L else if (x < 0.735759) 1L else if (x < 0.919699) 2L else 3L
@@ -600,6 +601,9 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(math.abs(got.getDouble(3) - reps(1)) < 1e-9, "ci_lo replay")
     assert(math.abs(got.getDouble(4) - reps(30)) < 1e-9, "ci_hi replay")
     assert(got.getDouble(3) <= got.getDouble(4))
+    assert(got.getLong(0) == xs.count(_._2 == 1), "n_pos replay")
+    assert(got.getLong(1) == xs.count(_._2 == 0), "n_neg replay")
+    assert(math.abs(got.getDouble(2) - wAuc(0)) < 1e-9, "full-sample AUC replay")
     // the full-sample AUC matches the unweighted row and the CI is sane:
     // a resampling band should not sit entirely away from the estimate
     val point = SparkEntry.queries("eval_auc_roc")(spark, dir).collect()(0).getDouble(3)

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -91,6 +91,13 @@ class GdxDriverScanSpec extends AnyFunSuite {
     assert(rowsOf(got) == want, s"$cond")
   }
 
+  /** `df` plans a distributed GDX scan and no driver scan. */
+  private def assertJobOnly(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    assert(plan.find(_.isInstanceOf[GdxDriverScanExec]).isEmpty, s"driver scan planned:\n$plan")
+    assert(plan.find(_.isInstanceOf[BatchScanExec]).nonEmpty, s"no BatchScan:\n$plan")
+  }
+
   /** The GDX scan `df` plans. */
   private def gdxScanOf(df: DataFrame): GdxScan =
     df.queryExecution.optimizedPlan.collectFirst { case r: DataSourceV2ScanRelation => r.scan }
@@ -115,14 +122,19 @@ class GdxDriverScanSpec extends AnyFunSuite {
     assert(overJobs > 0)
     assert(rowsOf(over) == rowsOf(bigSrc.filter(recurring).collect()) && over.length == 7000)
 
-    // always true, but not a bare rand() comparison the optimizer folds
-    val (rnd, rndJobs) = withJobs(
-      GdxFile(spark, big).query("p", filt = "B00123").filter(rand() * 0.5 < 0.5).collect())
+    // always true, but not a bare rand() comparison the optimizer folds;
+    // the slice under it is read by the job, not decoded on the driver
+    // first and then filtered by a job over the decoded rows
+    val rndSlice = GdxFile(spark, big).query("p", filt = "B00123").filter(rand() * 0.5 < 0.5)
+    assertJobOnly(rndSlice)
+    val (rnd, rndJobs) = withJobs(rndSlice.collect())
     assert(rndJobs > 0)
     assert(rowsOf(rnd) == rowsOf(slice))
     // the same, with rand() a conjunct of the pushed label's own filter
-    val (mixed, mixedJobs) = withJobs(Gdx.symbol(spark, big, "p")
-      .filter(lower(col("dim_1")) === "b00123" && rand() * 0.5 < 0.5).collect())
+    val mixedSlice = Gdx.symbol(spark, big, "p")
+      .filter(lower(col("dim_1")) === "b00123" && rand() * 0.5 < 0.5)
+    assertJobOnly(mixedSlice)
+    val (mixed, mixedJobs) = withJobs(mixedSlice.collect())
     assert(mixedJobs > 0)
     assert(rowsOf(mixed) == rowsOf(slice))
 
