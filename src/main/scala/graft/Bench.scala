@@ -54,7 +54,7 @@ object Bench {
         false
       }
     val t = (System.nanoTime() - t0) / 1e9
-    // free localCheckpoint residue between reps so a query's time
+    // free the query's checkpoints between reps so a query's time
     // never includes (or suffers from) another run's dead blocks
     Sessions.releaseCheckpoints(spark)
     (if (ok) t else Double.NaN, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)

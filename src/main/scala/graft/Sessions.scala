@@ -63,21 +63,21 @@ object Sessions {
     s
   }
 
-  /** Drop the checkpoint blocks still registered with the block
-    * manager — the final checkpoint of a frame an iterative operator
-    * returned, and the one-shot localCheckpoints of query builders (the
-    * minhash band table). Each iterative operator frees its
+  /** Frees the checkpoints graft operators took on the calling thread
+    * and have not freed yet: the final checkpoint of each frame an
+    * iterative operator returned, and the one-shot checkpoints of query
+    * builders (the minhash band table). Each operator frees its
     * intermediate rounds itself ([[Checkpoints]]), but a returned
     * frame's blocks can only go once the result is consumed; Bench and
-    * Verify call this between queries so a ~100-query session never
+    * Verify call this after each query so a ~100-query session never
     * accumulates dead blocks (measured: dedup_cluster_canonical drifted
-    * to ~2.6× its isolated time before this cleanup). Only checkpoint
-    * RDDs are freed: a caller's own `cache()` keeps its blocks.
+    * to ~2.6× its isolated time before this cleanup).
     *
-    * Call it between queries, not during one: a localCheckpointed
-    * frame has truncated lineage, so calling this while another query
-    * on the shared session is mid-flight would drop blocks it cannot
-    * recompute.
+    * A checkpoint belongs to the thread that took it, so a query running
+    * on another thread of the same session keeps its blocks. A caller's
+    * own checkpoint or `cache()` is never touched. A frame the
+    * calling thread got from an operator must not be read after this:
+    * its lineage is truncated at the freed checkpoint.
     */
-  def releaseCheckpoints(s: SparkSession): Unit = Checkpoints.releaseAll(s)
+  def releaseCheckpoints(s: SparkSession): Unit = Checkpoints.releaseScope(s)
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, T}
+import graft.{Checkpoints, QueryModule, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -713,7 +713,7 @@ object AnalyticsOps extends QueryModule {
       Grid.dy20(col("value")).as("v"),
       when(col("event_type") === "click", Grid.dy20(col("value")))
         .otherwise(lit(0.0)).as("c"))
-      .localCheckpoint() // feeds totals AND the replicate pass
+      .transform(Checkpoints.take) // feeds totals AND the replicate pass
     val t = e.agg(count(lit(1)).cast("long").as("n"),
       sum("v").as("st"), sum("c").as("sc"))
     val th = e.crossJoin(broadcast(t))
@@ -1662,7 +1662,7 @@ object AnalyticsOps extends QueryModule {
     val e = T(s, d, "events").select("event_type", "value")
     // checkpoint: g1 feeds BOTH the per-value totals and the rank join
     val g1 = e.groupBy("value", "event_type").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val g2 = g1.groupBy("value").agg(sum("c").as("nv"))
     val cum = WindowOps.globalPrefixSums(g2, Seq(col("value").asc), Seq("nv"))
     val ar = cum.select(col("value"),
@@ -1719,7 +1719,7 @@ object AnalyticsOps extends QueryModule {
     val dm = T(s, d, "events")
       .groupBy(expr("unix_micros(ts) div 86400000000L").cast("long").as("day"))
       .agg((sum(Grid.dy20(col("value"))) / count(lit(1))).as("m"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val a = dm.select(col("day").as("da"), col("m").as("ma"))
     val b = dm.select(col("day").as("db"), col("m").as("mb"))
     val p = a.join(b, col("db") > col("da"))
@@ -1836,7 +1836,7 @@ object AnalyticsOps extends QueryModule {
     val dm = T(s, d, "events")
       .groupBy(expr("unix_micros(ts) div 86400000000L").cast("long").as("day"))
       .agg((sum(Grid.dy20(col("value"))) / count(lit(1))).as("m"))
-      .localCheckpoint() // feeds the pair join twice + the day count
+      .transform(Checkpoints.take) // feeds the pair join twice + the day count
     val nn = dm.agg(count(lit(1)).cast("long").as("n_days"))
     val a = dm.select(col("day").as("da"), col("m").as("ma"))
     val b = dm.select(col("day").as("db"), col("m").as("mb"))
@@ -1933,7 +1933,7 @@ object AnalyticsOps extends QueryModule {
       (col("m") - lag("m", 1).over(Window.orderBy("day"))).as("delta"))
     val nz = dl.filter(col("delta").isNotNull && col("delta") =!= 0)
       .withColumn("ad", abs(col("delta")))
-      .localCheckpoint() // |days| rows: feeds ranks AND the tie term
+      .transform(Checkpoints.take) // |days| rows: feeds ranks AND the tie term
     val rk = nz
       .withColumn("rn", row_number().over(Window.orderBy(col("ad"), col("day"))))
       .withColumn("r", avg("rn").over(Window.partitionBy("ad")))
@@ -1986,7 +1986,7 @@ object AnalyticsOps extends QueryModule {
     val dm = T(s, d, "events")
       .groupBy(expr("unix_micros(ts) div 86400000000L").cast("long").as("day"))
       .agg((sum(Grid.dy20(col("value"))) / count(lit(1))).as("m"))
-      .localCheckpoint() // feeds the split join THREE ways + the count
+      .transform(Checkpoints.take) // feeds the split join THREE ways + the count
     val nn = dm.agg(count(lit(1)).cast("long").as("n"))
     val t = dm.select(col("day").as("t"))
     val a = dm.select(col("day").as("da"), col("m").as("ma"))
@@ -2049,7 +2049,7 @@ object AnalyticsOps extends QueryModule {
       .groupBy(col("event_type"),
         expr("unix_micros(ts) div 86400000000L").cast("long").as("day"))
       .agg(Grid.dy20(sum(Grid.dy20(col("value"))) / count(lit(1))).as("m"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val st = dm.groupBy("event_type")
       .agg(count(lit(1)).cast("long").as("nd"),
         (sum("m") / count(lit(1))).as("mu"), min("m").as("mn"), max("m").as("mx"))
@@ -2112,10 +2112,10 @@ object AnalyticsOps extends QueryModule {
       .groupBy(expr("unix_micros(ts) div 86400000000L").cast("long").as("day"))
       .agg(Grid.dy20(sum(Grid.dy20(col("value"))) / count(lit(1))).as("m"))
       .withColumn("one", lit(1L))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val idx = WindowOps.globalPrefixSums(dm, Seq(col("day").asc), Seq("one"))
       .select(col("m"), (col("cum_one") - 1).as("i"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     def at(k: Int, tag: String): DataFrame =
       idx.select((col("i") - k).as(s"i$tag"), col("m").as(s"m$tag$k"))
     val sub = idx.select(col("i"), col("m").as("m0"))
@@ -2124,7 +2124,7 @@ object AnalyticsOps extends QueryModule {
       .join(at(3, "d"), col("i") === col("id"))
       .select(col("i"), col("m0"), col("mb1").as("m1"),
         col("mc2").as("m2"), col("md3").as("m3"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val x = sub.select(sub.columns.toSeq.map(c => col(c).as(s"x_$c")): _*)
     val y = sub.select(sub.columns.toSeq.map(c => col(c).as(s"y_$c")): _*)
     val d2 = (col("x_m0") - col("y_m0")) * (col("x_m0") - col("y_m0")) +
@@ -2189,7 +2189,7 @@ object AnalyticsOps extends QueryModule {
       .groupBy(expr("unix_micros(ts) div 86400000000L").cast("long").as("day"))
       .agg(Grid.dy20(sum(Grid.dy20(col("value"))) / count(lit(1))).as("m"))
       .withColumn("one", lit(1L))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val nd = dm.agg(count(lit(1)).cast("long").as("nd"))
     val idx = WindowOps.globalPrefixSums(dm, Seq(col("day").asc), Seq("one"))
       .select(col("m"), (col("cum_one") - 1).as("i"))
@@ -2282,7 +2282,7 @@ object AnalyticsOps extends QueryModule {
       .groupBy(col("event_type"),
         expr("unix_micros(ts) div 86400000000L").cast("long").as("day"))
       .agg(Grid.dy20(sum(Grid.dy20(col("value"))) / count(lit(1))).as("m"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val cnt = dm.groupBy("event_type").agg(count(lit(1)).cast("long").as("nd"))
     val w = Window.partitionBy("event_type").orderBy("day")
     val seg = dm.join(broadcast(cnt.select(col("event_type").as("et"), col("nd"))),
@@ -2290,7 +2290,7 @@ object AnalyticsOps extends QueryModule {
       .withColumn("i", row_number().over(w) - 1)
       .groupBy(col("event_type"), expr(s"cast((i * $L) div nd as bigint)").as("sg"))
       .agg((sum("m") / count(lit(1))).as("paa"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     def pivot(et: String, pfx: String): DataFrame = {
       val cs = (1 to L).map(k =>
         max(when(col("sg") === (k - 1), col("paa"))).as(s"$pfx$k"))
@@ -2352,7 +2352,7 @@ object AnalyticsOps extends QueryModule {
       .groupBy(expr("unix_micros(ts) div 86400000000L").cast("long").as("day"))
       .agg((sum(Grid.dy20(col("value"))) / count(lit(1))).as("m"),
         lit(1L).as("one"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     // time rank: days unique, so prefix count over day order IS the rank
     val rx = WindowOps.globalPrefixSums(dm, Seq(col("day").asc), Seq("one"))
       .select(col("day"), col("m"), (col("cum_one") * 2).as("rx2"))
@@ -2417,7 +2417,7 @@ object AnalyticsOps extends QueryModule {
       sum("y").cast("long").as("pos"),
       (count(lit(1)) - sum("y")).cast("long").as("neg"),
       count(lit(1)).cast("long").as("n"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
 
   private val evalFG =
     """f AS (
@@ -2849,7 +2849,7 @@ object AnalyticsOps extends QueryModule {
       .select(col("y"),
         Grid.dy12(lit(1.0) / (lit(1.0) + exp(-col("s")))).as("p"))
       .withColumn("bin", least(floor(col("p") * 10).cast("int"), lit(9)))
-      .localCheckpoint() // feeds the totals AND the per-bin agg
+      .transform(Checkpoints.take) // feeds the totals AND the per-bin agg
     val tot = b.agg(count(lit(1)).cast("long").as("n"),
       sum("y").cast("long").as("sy"),
       sum((col("p") - col("y")) * (col("p") - col("y"))).as("sse"))
@@ -2902,7 +2902,7 @@ object AnalyticsOps extends QueryModule {
       .select(col("y"),
         Grid.dy12(lit(1.0) / (lit(1.0) + exp(-col("s")))).as("p"))
       .withColumn("bin", least(floor(col("p") * 10).cast("int"), lit(9)))
-      .localCheckpoint() // feeds the total AND the per-bin agg
+      .transform(Checkpoints.take) // feeds the total AND the per-bin agg
     val tot = b.agg(count(lit(1)).cast("long").as("n"))
     val g = b.groupBy("bin").agg(count(lit(1)).cast("long").as("nk"),
       abs(sum("p") / count(lit(1)) -

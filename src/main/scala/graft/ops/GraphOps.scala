@@ -120,7 +120,7 @@ object GraphOps extends QueryModule {
       |            ELSE round(3.0 * coalesce(t.tri, 0) / w.wedges, 6)
       |       END AS transitivity
       |FROM w LEFT JOIN t ON t.nk = w.nk ORDER BY nk""".stripMargin) { (s, d) =>
-    val e = leadEdges(s, d, withN2 = true, maxGap = None).localCheckpoint()
+    val e = Checkpoints.take(leadEdges(s, d, withN2 = true, maxGap = None))
     val tri = orientedTriangleCount(e)
     val deg = e.select(col("nk"), col("a").as("v"))
       .unionByName(e.select(col("nk"), col("b").as("v")))
@@ -457,8 +457,6 @@ object GraphOps extends QueryModule {
       dmass = quantized(obs.get("dm"))
     }
     rc.release("verts", "edges", "deg", "withdeg", "vbase")
-    // the final round's blocks back the returned frame's lineage;
-    // the harness frees them via Sessions.releaseCheckpoints
     ranks.select("vid", "rank")
   }
 
@@ -948,7 +946,7 @@ object GraphOps extends QueryModule {
         .otherwise(raise_error(concat(
           lit("graph_modularity: block id overflows the community key: "),
           col("b").cast("string")))).as("comm"))
-    val e = blockEdges(s, d).localCheckpoint() // three consumers, one build
+    val e = Checkpoints.take(blockEdges(s, d)) // three consumers, one build
     val mt = e.agg(count(lit(1)).cast("double").as("m"))
     val ic = e
       .join(cm.select(col("id").as("a"), col("comm").as("ca")), Seq("a"))
@@ -967,7 +965,7 @@ object GraphOps extends QueryModule {
         dcc.as("degree_sum"),
         (coalesce(col("e_c"), lit(0L)) / col("m")
           - (dcc / (lit(2) * col("m"))) * (dcc / (lit(2) * col("m")))).as("contrib"))
-      .localCheckpoint() // q_total and the report both read it
+      .transform(Checkpoints.take) // q_total and the report both read it
     val qt = rws.agg(sum(Grid.dy20(col("contrib"))).as("q"))
     rws.crossJoin(broadcast(qt))
       .select(col("comm"), col("n_vertices"), col("intra_edges"), col("degree_sum"),
@@ -1233,13 +1231,13 @@ object GraphOps extends QueryModule {
          |ORDER BY id""".stripMargin
   }) { (s, d) =>
     val rc = new Checkpoints
-    val e = blockEdges(s, d).localCheckpoint()
+    val e = Checkpoints.take(blockEdges(s, d))
     val sym = pinnedSym(rc, e)
     // degrees survive rc.release("sym"): the final Q/size stage reads
     // them after the sym checkpoint blocks are freed
     val deg = sym.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("long").as("k"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val mt = e.agg(count(lit(1)).cast("long").as("m"))
     val verts = T(s, d, "customer").select(col("c_custkey").as("id"))
     var comm = lpaLabels(rc, sym, verts)

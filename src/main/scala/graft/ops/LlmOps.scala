@@ -148,25 +148,25 @@ object LlmOps extends QueryModule {
   def minhashBands(docs: DataFrame): DataFrame =
     minhashBandsFromHashes(shingleHashes(docs))
 
+  /** The 12 minhash minima (doc_id, m0..m11) of a (doc_id, hs) frame:
+    * the signature the band table and the calibration key both read.
+    */
+  private def minhashSigs(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id") +:
+      (0 until 12).map(i =>
+        array_min(transform(col("hs"),
+          h => (lit(affineA(i)) * h + lit(affineB(i))) % lit(MinhashP))).as(s"m$i")): _*)
+
   /** Band table from an ALREADY-COMPUTED (doc_id, hs) frame — lets a
     * caller that also needs the raw shingles (the verify stage) run
-    * the shingle pipeline exactly once for both consumers. The table's
-    * checkpoint is pinned under `ck` (tag `bands`): a streaming batch
-    * passes its own runtime so the table is freed with the batch.
+    * the shingle pipeline exactly once for both consumers.
     */
-  def minhashBandsFromHashes(sh: DataFrame, ck: Checkpoints = new Checkpoints): DataFrame = {
-    val k = 12
-    val sigs = sh
-      .select(col("doc_id") +:
-        (0 until k).map(i =>
-          array_min(transform(col("hs"),
-            h => (lit(affineA(i)) * h + lit(affineB(i))) % lit(MinhashP))).as(s"m$i")): _*)
-    ck.pin("bands", sigs.select(col("doc_id"), explode(array((0 until 4).map { b =>
+  def minhashBandsFromHashes(sh: DataFrame): DataFrame =
+    Checkpoints.take(minhashSigs(sh).select(col("doc_id"), explode(array((0 until 4).map { b =>
       struct(lit(b).as("band"),
         concat_ws("_", (0 until 3).map(r => col(s"m${b * 3 + r}")): _*).as("sig"))
     }: _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig")))
-  }
 
   /** Same, over any (doc_id, text) DataFrame. */
   def minhashPairsOf(docs: DataFrame): DataFrame = {
@@ -263,11 +263,8 @@ object LlmOps extends QueryModule {
        |ORDER BY m.a, m.b""".stripMargin
   }) { (s, d) =>
     val docs = T(s, d, "documents").select("doc_id", "text")
-    val sh = shingleHashes(docs).localCheckpoint()
-    val sigs = sh.select(col("doc_id") +:
-      (0 until 12).map(i =>
-        array_min(transform(col("hs"),
-          h => (lit(affineA(i)) * h + lit(affineB(i))) % lit(MinhashP))).as(s"m$i")): _*)
+    val sh = Checkpoints.take(shingleHashes(docs))
+    val sigs = minhashSigs(sh)
     val bands = minhashBandsFromHashes(sh)
     val cand = bands.select(col("band"), col("sig"), col("doc_id").as("a"))
       .join(bands.select(col("band"), col("sig"), col("doc_id").as("b")),
@@ -275,7 +272,7 @@ object LlmOps extends QueryModule {
       .filter(col("a") < col("b"))
       .select("a", "b").distinct()
     val jsh = sh.select(col("doc_id"), explode(col("hs")).as("h"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Checkpoints.take)
     val counts = jsh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = cand
       .join(jsh.select(col("doc_id").as("a"), col("h")), Seq("a"))
@@ -445,7 +442,7 @@ object LlmOps extends QueryModule {
     * |candidates| × shingles-per-doc with candidates bounded by band
     * collisions, never an inverted-index df² blowup. `jsh` feeds three
     * subtrees (counts + both verify sides) — checkpointed so the
-    * shingle pipeline runs once; blocks freed by releaseCheckpoints.
+    * shingle pipeline runs once.
     */
   private[ops] def verifiedJaccardPairs(s: SparkSession, d: String): DataFrame = {
     val docs = T(s, d, "documents").select("doc_id", "text")
@@ -453,7 +450,7 @@ object LlmOps extends QueryModule {
     // the checkpoint is what makes that literal, not aspirational (the
     // old shape re-ran tokenize+hash once for the bands and once for
     // jsh: the dominant map-side cost, paid twice)
-    val sh = shingleHashes(docs).localCheckpoint()
+    val sh = Checkpoints.take(shingleHashes(docs))
     val bands = minhashBandsFromHashes(sh)
     val a = bands.select(col("band"), col("sig"), col("doc_id").as("a"))
     val b = bands.select(col("band"), col("sig"), col("doc_id").as("b"))
@@ -464,7 +461,7 @@ object LlmOps extends QueryModule {
     val jsh = sh
       .select(col("doc_id"), explode(col("hs")).as("h"))
       .distinct()
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val counts = jsh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = cand
       .join(jsh.select(col("doc_id").as("a"), col("h")), Seq("a"))
@@ -494,8 +491,7 @@ object LlmOps extends QueryModule {
     * diameter 1–2; a drifting chain of borderline pairs is the only
     * shape that approaches the cap — raise it explicitly there).
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 32,
-      ck: Checkpoints = new Checkpoints): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 32): DataFrame = {
     // localCheckpoint blocks outlive the query unless freed: across a
     // long session (the bench runs ~100 queries × 3 reps in one JVM)
     // the per-round blocks accumulated in the block manager and the
@@ -503,10 +499,8 @@ object LlmOps extends QueryModule {
     // blocks are freed as soon as the next round's checkpoint (which
     // re-materializes all still-needed state) exists. Only the FINAL
     // round's blocks (tag `cc.labels`) — they back the returned
-    // frame's truncated lineage — survive this call; Bench/Verify
-    // clear those between queries via releaseCheckpoints(), and a
-    // caller passing its own `ck` frees them with the rest of its run.
-    //
+    // frame's truncated lineage — survive this call.
+    val ck = new Checkpoints
     // materialize the edge list once: every propagation round joins
     // against it, and without this the upstream candidate pipeline
     // (e.g. the whole Jaccard computation) would re-execute per round
@@ -1195,7 +1189,7 @@ object LlmOps extends QueryModule {
     val tagged = frame
       .withColumn("_rep", min(col(idCol)).over(wGrpAll))
       .withColumn("_grn", row_number().over(wGrp))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val members = tagged.filter(col("_grn") <= k + 1)
       .groupBy(col("_rep").as("_nrep"))
       .agg(sort_array(collect_list(col(idCol))).as("_mem"))
@@ -1279,7 +1273,7 @@ object LlmOps extends QueryModule {
       .withColumn("pq", graft.functions.vec.pqEncode(col("embedding"), cbFlat, 8, 16))
       .select(col("vec_id") +: col("bucket") +:
         (0 until 8).map(m => element_at(col("pq"), m + 1).as(s"c$m")): _*)
-      .localCheckpoint()
+      .transform(Checkpoints.take)
   }
 
   private[ops] def pqCodebookOf(s: SparkSession, d: String): Array[Array[Array[Double]]] =
@@ -1467,7 +1461,7 @@ object LlmOps extends QueryModule {
         (x, j) => x.cast("double") -
           element_at(centsFlat, col("cell") * dim + j + 1)))
       .withColumn("bucket", col("cell").cast("long"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
   }
 
   /** PQ stage over a (vec_id, bucket, res) residual frame: first-16
@@ -1484,7 +1478,7 @@ object LlmOps extends QueryModule {
       .withColumn("pq", graft.functions.vec.pqEncode(col("res"), cbFlat, 8, 16))
       .select(col("vec_id") +: col("bucket") +:
         (0 until 8).map(m => element_at(col("pq"), m + 1).as(s"c$m")): _*)
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     pqCodeTopK(encoded, cb, topK = 3)
       .select(col("qid"), col("nbr"), col("adot"), col("rn"),
         lit(kOut).as("n_cells"))
@@ -1516,7 +1510,7 @@ object LlmOps extends QueryModule {
           (x, c) => x.cast("double") - c.cast("double")))
         .withColumn("bucket",
           col("cell").cast("long") * lit(1048576L) + col("si"))
-        .localCheckpoint()
+        .transform(Checkpoints.take)
       pqPartTopK(resid, k1)
     }
   } { (s, d) =>
@@ -1696,7 +1690,7 @@ object LlmOps extends QueryModule {
       // degenerate case: argmax instead of top-k).
       .withColumn("_crep",
         min(col("vec_id")).over(Window.partitionBy("cell", "embedding")))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val wCell = Window.partitionBy("cell").orderBy("vec_id")
     val sc = asg1
       .withColumn("si", row_number().over(wCell) - 1)
@@ -1733,7 +1727,7 @@ object LlmOps extends QueryModule {
     val k1 = hierK1(emb.count(), targetCell = 25)
     // checkpoint: the final bucket frame feeds the collapse device's
     // member lists, rep frame and expand
-    val asg2 = hierAssign(emb, k1, targetCell = 25).localCheckpoint()
+    val asg2 = Checkpoints.take(hierAssign(emb, k1, targetCell = 25))
     // duplicate-collapsed in-bucket exact-cosine ranking (r16): a
     // mega-duplicate cluster lands in ONE (cell, si) bucket by
     // construction; the collapse bounds its pair join at one group +
@@ -2397,7 +2391,7 @@ object LlmOps extends QueryModule {
     // probe rides this path
     val wEmb = Window.partitionBy("embedding")
     val member = emb.withColumn("rep", min("vec_id").over(wEmb))
-      .localCheckpoint() // reps + dupEdges both read it; cut the double window
+      .transform(Checkpoints.take) // reps + dupEdges both read it; cut the double window
     val reps = member.filter(col("vec_id") === col("rep"))
       .select(col("vec_id"), col("embedding"))
     // (2) pair graph on reps only + member→rep edges (cos = 1 exact)
@@ -3292,10 +3286,10 @@ object LlmOps extends QueryModule {
         pmod(pmod(col("doc_id"), lit(2147483648L)) * lit(1103515245L)
           + lit(12345L), lit(2147483648L)).%(5).as("fold"),
         when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-      .localCheckpoint() // scored once; three stat consumers below
+      .transform(Checkpoints.take) // scored once; three stat consumers below
     val sf = f.groupBy("source", "fold")
       .agg(count(lit(1)).cast("long").as("n_sf"), sum("y").cast("long").as("p_sf"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val st = sf.groupBy("source")
       .agg(sum("n_sf").cast("long").as("n_s"), sum("p_sf").cast("long").as("p_s"))
     val g = st.agg(sum("n_s").cast("long").as("n"), sum("p_s").cast("long").as("p"))
@@ -3412,7 +3406,7 @@ object LlmOps extends QueryModule {
       .join(docs.select(col("doc_id").as("bk2"), col("text").as("tb")),
         col("bk") === col("bk2"))
       .select(col("a"), col("bk").as("b"), col("ta"), col("tb"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     def uni(c: String): org.apache.spark.sql.Column = split(col(c), " ")
     def bi(c: String): org.apache.spark.sql.Column = expr(
       s"transform(slice(split($c, ' '), 1, greatest(size(split($c, ' ')) - 1, 0)), " +
@@ -3516,7 +3510,7 @@ object LlmOps extends QueryModule {
       .join(docs.select(col("doc_id").as("bk2"), col("text").as("tb")),
         col("bk") === col("bk2"))
       .select(col("a"), col("bk").as("b"), col("ta"), col("tb"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     // ONE tagged explode per side for all three gram sizes (a per-n
     // explode tripled the scan+shuffle volume — char grams are already
     // ~18× BLEU's token volume, so the fusion matters): (a, n, g) →
@@ -3881,7 +3875,7 @@ object LlmOps extends QueryModule {
       .join(docs.select(col("doc_id").as("bk2"), col("text").as("tb")),
         col("bk") === col("bk2"))
       .select(col("a"), col("bk").as("b"), col("ta"), col("tb"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     def bi(c: String): org.apache.spark.sql.Column = expr(
       s"transform(slice(split($c, ' '), 1, greatest(size(split($c, ' ')) - 1, 0)), " +
         s"(t, i) -> concat(t, ' ', element_at(split($c, ' '), i + 2)))")
@@ -4663,7 +4657,7 @@ object LlmOps extends QueryModule {
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("nv"), lit(0L)).as("n_in_vocab"),
         coalesce(col("lw"), lit(0.0)).as("lw"))
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val m = sc.agg((sum("lw") / count(lit(1))).as("mlw"))
     sc.crossJoin(broadcast(m))
       .select(col("doc_id"), col("n_tokens"), col("n_in_vocab"),
@@ -5287,8 +5281,7 @@ object LlmOps extends QueryModule {
       damping: Double = 0.85): DataFrame = {
     // each round's blocks are freed once the next checkpoint exists,
     // exactly the connectedComponents discipline above. Only the final
-    // ranks blocks survive; the harness clears those via
-    // releaseCheckpoints.
+    // ranks blocks survive.
     val ck = new Checkpoints
     val n = vertices.count()
     // checkpoint the EDGE FRAME first: everything per-round derives
@@ -5405,10 +5398,7 @@ object LlmOps extends QueryModule {
   }) { (s, d) =>
     val emb = T(s, d, "embeddings").select("vec_id", "embedding")
     val edges = knnEdges(emb).select(col("qid").as("src"), col("nbr").as("dst"))
-    val ranks = pageRank(emb.select(col("vec_id").as("vid")), edges, iters = 5)
-    // the returned frame rides the final localCheckpoint; the harness
-    // releases it after consumption (Sessions.releaseCheckpoints)
-    ranks
+    pageRank(emb.select(col("vec_id").as("vid")), edges, iters = 5)
       .select(col("vid").as("vec_id"), col("rank").as("pagerank"))
       .orderBy("vec_id")
   }
@@ -6063,7 +6053,7 @@ object LlmOps extends QueryModule {
     // the corpus×probes ground-truth pass is the expensive stage; DCG
     // relevance and IDCG both consume it — materialize it ONCE
     val exact = cosineTopK(s, d, k = 10, probeIds = probeIds)
-      .select("qid", "nbr", "rn").localCheckpoint()
+      .select("qid", "nbr", "rn").transform(Checkpoints.take)
     val b = lshBucketed(s, d, nPlanes = 8)
     val probes = b.filter(col("vec_id").isin(probeIds: _*))
       .select(col("bucket"), col("vec_id").as("qid"), col("embedding").as("qemb"))
@@ -6241,6 +6231,7 @@ object LlmOps extends QueryModule {
     * rounded before each rank (checklist rule 5), ties by cid.
     */
   private[ops] def mmrSelect(cands: DataFrame, k: Int, lam: Double): DataFrame = {
+    val ck = new Checkpoints
     val wq = Window.partitionBy("qid").orderBy(col("rel").desc, col("cid").asc)
     var selected = cands.withColumn("rn", row_number().over(wq))
       .filter(col("rn") === 1)
@@ -6265,7 +6256,7 @@ object LlmOps extends QueryModule {
       val pick = scored.withColumn("rn", row_number().over(wpick)).filter(col("rn") === 1)
         .join(cands.select("qid", "cid", "cemb"), Seq("qid", "cid"))
         .select(col("qid"), col("cid"), col("rel"), col("cemb"), lit(r).as("pick"))
-      selected = selected.unionByName(pick).localCheckpoint()
+      selected = ck.cycle("mmr.selected", selected.unionByName(pick))
     }
     selected
   }
@@ -6342,14 +6333,17 @@ object LlmOps extends QueryModule {
     val probes = all.filter(col("vec_id").isin(0L, 1L, 2L, 3L, 4L))
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
     val wq = Window.partitionBy("qid").orderBy(col("rel").desc, col("cid").asc)
-    val cands = all.crossJoin(broadcast(probes))
+    val ck = new Checkpoints
+    val cands = ck.pin("cands", all.crossJoin(broadcast(probes)) // read every round
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cid"),
         round(graft.functions.vec.cosine(col("embedding"), col("qemb")), 6).as("rel"),
         col("embedding").as("cemb"))
-      .withColumn("rn", row_number().over(wq)).filter(col("rn") <= 20).drop("rn")
-      .localCheckpoint() // reused every round of the greedy loop
-    mmrSelect(cands, k = 5, lam = 0.7)
+      .withColumn("rn", row_number().over(wq)).filter(col("rn") <= 20).drop("rn"))
+    // the picks are checkpointed round by round: none reads cands after
+    val picks = mmrSelect(cands, k = 5, lam = 0.7)
+    ck.release("cands")
+    picks
       .select(col("qid"), col("pick").cast("int").as("pick"), col("cid"), col("rel"))
       .reportSorted("qid", "pick")
   }
@@ -6717,7 +6711,7 @@ object LlmOps extends QueryModule {
       .select(col("source"), explode(expr(
         "transform(sequence(0, greatest(size(tok) - 8, 0)), i -> xxhash64(concat_ws(' ', slice(tok, i + 1, 8))))")).as("g"))
       .distinct()
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     // df-cap: two-phase count (grams is distinct per (g, source), so
     // count(*) = distinct-source count), filter BEFORE the self-join
     val keep = grams.groupBy("g").agg(count(lit(1)).as("ds"))

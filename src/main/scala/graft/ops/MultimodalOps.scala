@@ -4,7 +4,7 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
-import graft.{QueryModule, T}
+import graft.{Checkpoints, QueryModule, T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -2021,8 +2021,8 @@ object MultimodalOps extends QueryModule {
     // scale (verified in PlanInvariantsSpec; the expression-only LSH
     // queries, by contrast, self-heal via ReusedExchange). The frame
     // is |image docs| × (8 B + dim floats + bucket) — tiny next to the
-    // payloads — and Bench/Verify release the blocks between queries.
-    val b = feats.withColumn("bucket", featBucketExpr).localCheckpoint()
+    // payloads.
+    val b = Checkpoints.take(feats.withColumn("bucket", featBucketExpr))
     // duplicate-collapsed in-bucket ranking (r16): duplicate IMAGES
     // are as routine in crawl corpora as duplicate embeddings —
     // identical rasters give identical features, which share a bucket
@@ -2133,7 +2133,7 @@ object MultimodalOps extends QueryModule {
     val ph = phashes(mediaTable(s, d).filter(col("meta.kind") === "image"))
       // object-plan decode stage: materialize once before the self-join
       // (same exchange-reuse defeat as mm_ann_topk)
-      .localCheckpoint()
+      .transform(Checkpoints.take)
     val bands = ph.select(col("doc_id"), col("hi"), col("lo"),
       explode(array((0 until 4).map { t =>
         val bv =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, T}
+import graft.{Checkpoints, QueryModule, T}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -597,7 +597,7 @@ object RelationalOps extends QueryModule {
       .filter(col("event_type").isin("view", "purchase"))
       .select(col("event_type").as("grp"), col("user_id"))
     // ONE register pass feeds A, B, and the union merge
-    val regs = hllRegisters(ev, "user_id", "grp").localCheckpoint()
+    val regs = Checkpoints.take(hllRegisters(ev, "user_id", "grp"))
     val estA = hllEstimate(regs.filter(col("grp") === "view"), "est_view")
       .select("est_view")
     val estB = hllEstimate(regs.filter(col("grp") === "purchase"), "est_purchase")

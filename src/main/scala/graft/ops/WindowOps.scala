@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, T}
+import graft.{Checkpoints, QueryModule, T}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -168,7 +168,7 @@ object WindowOps extends QueryModule {
     */
   private[ops] def globalPrefixSums(df: DataFrame, sortCols: Seq[Column],
       sumCols: Seq[String]): DataFrame = {
-    val ranked = rangeBucketSums(df, sortCols, sumCols).localCheckpoint()
+    val ranked = Checkpoints.take(rangeBucketSums(df, sortCols, sumCols))
     val totals = ranked.groupBy("pid")
       .agg(sum(col(sumCols.head)).cast("long"),
         sumCols.tail.map(c => sum(col(c)).cast("long")): _*)
@@ -283,7 +283,7 @@ object WindowOps extends QueryModule {
           .as("r_days"),
         count(lit(1)).cast("long").as("f"),
         sum(expr("cast(round(o_totalprice * 100) as bigint)")).cast("long").as("m_cents"))
-      .localCheckpoint() // three rank passes + the count read one materialization
+      .transform(Checkpoints.take) // three rank passes + the count read one materialization
     val n = c.count()
     def seg(df: DataFrame, metric: String, alias: String): DataFrame =
       globalPrefixSums(df.withColumn("one", lit(1L)),
@@ -401,7 +401,7 @@ object WindowOps extends QueryModule {
     * common-case plan is checkpoint-scan → project → sort, no join.
     */
   private[graft] def eventPatternMatch(events: DataFrame, cap: Int): DataFrame = {
-    val folded = eventPatternFolded(events, cap).localCheckpoint()
+    val folded = Checkpoints.take(eventPatternFolded(events, cap))
     val need = folded.filter(col("fm").isNull)
       .select(col("user_id"), col("m_start"), col("m_end"))
     val plain = folded.select(col("user_id"), col("seq_len"),

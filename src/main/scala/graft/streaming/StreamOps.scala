@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.Checkpoints
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,8 +110,7 @@ object StreamOps {
     import graft.ops.LlmOps
     docs.writeStream.outputMode("append").foreachBatch { (batch: DataFrame, _: Long) =>
       val s = batch.sparkSession
-      val ck = new graft.Checkpoints
-      try {
+      Checkpoints.scoped {
         val bandsDir = s"$indexDir/bands"
         val shDir = s"$indexDir/shingles"
         // existence via the Hadoop FS of the PATH (not java.io.File): a
@@ -124,9 +125,9 @@ object StreamOps {
             java.util.Collections.emptyList[org.apache.spark.sql.Row](),
             org.apache.spark.sql.types.StructType.fromDDL(schema))
         }
-        val sh = ck.pin("batch", LlmOps.shingleHashes(batch)
+        val sh = Checkpoints.take(LlmOps.shingleHashes(batch)
           .withColumn("hs", array_distinct(col("hs"))))
-        val bands = LlmOps.minhashBandsFromHashes(sh, ck)
+        val bands = LlmOps.minhashBandsFromHashes(sh)
         val corpusBands = readIf(bandsDir, "doc_id BIGINT, band INT, sig STRING")
         val corpusSh = readIf(shDir, "doc_id BIGINT, hs ARRAY<BIGINT>")
         // exact-Jaccard verify of banded candidates, shared by the
@@ -157,25 +158,24 @@ object StreamOps {
         val droppedInBatch = verified(selfCand, sh)
           .select(col("bd").as("doc_id")).distinct()
         val dropped = droppedVsCorpus.unionByName(droppedInBatch).distinct()
-        val kept = ck.pin("batch", batch.join(dropped, Seq("doc_id"), "left_anti"))
+        val kept = Checkpoints.take(batch.join(dropped, Seq("doc_id"), "left_anti"))
         emit(kept)
         val keptIds = kept.select("doc_id")
         sh.join(keptIds, Seq("doc_id")).write.mode("append").parquet(shDir)
         bands.join(keptIds, Seq("doc_id")).write.mode("append").parquet(bandsDir)
-      } finally ck.releaseAll()
+      }
     }.start()
   }
 
   /** Seed the near-dup index with a standing corpus (batch side). */
   def seedNearDupIndex(corpus: DataFrame, indexDir: String): Unit = {
     import graft.ops.LlmOps
-    val ck = new graft.Checkpoints
-    try {
-      val sh = ck.pin("sh", LlmOps.shingleHashes(corpus)
+    Checkpoints.scoped {
+      val sh = Checkpoints.take(LlmOps.shingleHashes(corpus)
         .withColumn("hs", array_distinct(col("hs"))))
       sh.write.mode("overwrite").parquet(s"$indexDir/shingles")
-      LlmOps.minhashBandsFromHashes(sh, ck).write.mode("overwrite").parquet(s"$indexDir/bands")
-    } finally ck.releaseAll()
+      LlmOps.minhashBandsFromHashes(sh).write.mode("overwrite").parquet(s"$indexDir/bands")
+    }
   }
 
   /** Continuous-ingest SemDeDup — the streaming twin of the registered
@@ -224,8 +224,7 @@ object StreamOps {
     import graft.ops.LlmOps
     vecs.writeStream.outputMode("append").foreachBatch { (batch0: DataFrame, _: Long) =>
       val s = batch0.sparkSession
-      val ck = new graft.Checkpoints
-      try {
+      Checkpoints.scoped {
         val embDir = s"$indexDir/reps"
         val bkDir = s"$indexDir/buckets"
         def readIf(dir: String, schema: String): DataFrame = {
@@ -238,12 +237,12 @@ object StreamOps {
         }
         // (1) exact collapse: one payload-keyed window, min id is rep
         val wEmb = Window.partitionBy("embedding")
-        val member = ck.pin("batch", batch0.select("vec_id", "embedding")
+        val member = Checkpoints.take(batch0.select("vec_id", "embedding")
           .withColumn("rep", min("vec_id").over(wEmb)))
         val reps = member.filter(col("vec_id") === col("rep"))
           .select("vec_id", "embedding")
         // (2) cross-batch probe of the standing index
-        val bk = ck.pin("batch", LlmOps.multiLshBucketsOf(reps, nPlanes, nTables))
+        val bk = Checkpoints.take(LlmOps.multiLshBucketsOf(reps, nPlanes, nTables))
         val idxBk = readIf(bkDir,
           "vec_id BIGINT, tbl INT, bucket STRING, canonical BIGINT")
         val idxEmb = readIf(embDir,
@@ -264,7 +263,7 @@ object StreamOps {
           .join(reps.select(col("vec_id").as("b"), col("embedding").as("eb")), Seq("b"))
           .filter(round(graft.functions.vec.cosine(col("ea"), col("eb")), 6) >= tau)
           .select("a", "b")
-        val cc = LlmOps.connectedComponents(pairs, ck = ck)
+        val cc = LlmOps.connectedComponents(pairs)
         val lbl = reps.select("vec_id")
           .join(cc.select(col("id").as("vec_id"), col("lbl")), Seq("vec_id"), "left")
           .withColumn("lbl", coalesce(col("lbl"), col("vec_id")))
@@ -272,10 +271,10 @@ object StreamOps {
           .groupBy("lbl").agg(min("idxCanon").as("minIdx"))
           .select(col("lbl"), when(col("minIdx").isNull, col("lbl"))
             .otherwise(least(col("lbl"), col("minIdx"))).as("canonical"))
-        val repCanon = ck.pin("batch", lbl.join(canonOfComp, Seq("lbl"))
+        val repCanon = Checkpoints.take(lbl.join(canonOfComp, Seq("lbl"))
           .select(col("vec_id").as("rep"), col("canonical")))
         // (4) corpus-shaped decisions: members inherit the rep's canonical
-        val out = ck.pin("batch", member.select("vec_id", "rep").join(repCanon, Seq("rep"))
+        val out = Checkpoints.take(member.select("vec_id", "rep").join(repCanon, Seq("rep"))
           .select(col("vec_id"), col("canonical"),
             (col("vec_id") === col("canonical")).as("keep")))
         emit(out)
@@ -287,7 +286,7 @@ object StreamOps {
         bk.join(repOut.select("vec_id", "canonical"), Seq("vec_id"))
           .select("vec_id", "tbl", "bucket", "canonical")
           .write.mode("append").parquet(bkDir)
-      } finally ck.releaseAll()
+      }
     }.start()
   }
 

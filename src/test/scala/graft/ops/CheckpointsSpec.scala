@@ -1,9 +1,12 @@
 package graft.ops
 
-import java.util.concurrent.{CountDownLatch, Executors}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -17,8 +20,8 @@ import graft.streaming.{Doc, StreamOps, Vec}
 /** Checkpoint block lifetimes ([[graft.Checkpoints]]): an iterative
   * operator leaves persisted only the checkpoints that back the frame
   * it returns, concurrent operators on one session never free each
-  * other's blocks, and the between-queries sweep frees checkpoints
-  * only, never a caller's cache.
+  * other's blocks, and `Sessions.releaseCheckpoints` frees the calling
+  * thread's checkpoints only, never a caller's own cache or checkpoint.
   */
 class CheckpointsSpec extends AnyFunSuite {
 
@@ -55,17 +58,77 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(cached.count() == 1000)
     val cachedIds = persisted -- before
     assert(cachedIds.size == 1)
-    val ckpt = spark.range(10).toDF("y").localCheckpoint()
+    val ckpt = graft.Checkpoints.take(spark.range(10).toDF("y"))
     assert(backing(ckpt).size == 1)
+    val own = spark.range(10).toDF("z").localCheckpoint()
+    val ownIds = backing(own)
+    assert(ownIds.size == 1)
     try {
       graft.Sessions.releaseCheckpoints(spark)
-      assert(cachedIds.subsetOf(persisted), "a caller's cache() must survive the checkpoint sweep")
+      assert(cachedIds.subsetOf(persisted), "a caller's cache() must survive release")
       assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
         cachedIds.contains(i.id) && i.numCachedPartitions > 0), "cached blocks were dropped")
       assert(backing(ckpt).isEmpty, "the checkpoint's blocks must be freed")
+      assert(ownIds.subsetOf(persisted), "a caller's own localCheckpoint() must survive release")
+      assert(own.count() == 10)
       assert(cached.count() == 1000)
-    } finally cached.unpersist(blocking = true)
+    } finally {
+      cached.unpersist(blocking = true)
+      own.queryExecution.logical.collect { case l: LogicalRDD => l.rdd }
+        .foreach(_.unpersist(blocking = true))
+    }
   }
+
+  test("another thread's release leaves a returned frame's checkpoint readable") {
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val sequential = rows(LlmOps.connectedComponents(chain(20)))
+    graft.Sessions.releaseCheckpoints(spark)
+    val built, released = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      // B holds a frame backed by its final labels checkpoint
+      val b = Future {
+        val labels = LlmOps.connectedComponents(chain(20))
+        built.countDown()
+        assert(released.await(10, TimeUnit.MINUTES))
+        try rows(labels) finally graft.Sessions.releaseCheckpoints(spark)
+      }
+      // A runs its own key and releases it while B's frame is unread
+      val a = Future {
+        assert(built.await(10, TimeUnit.MINUTES))
+        try graft.SparkEntry.queries("graph_connected_components")(spark,
+          "/root/testdata/sf0.001").collect()
+        finally {
+          graft.Sessions.releaseCheckpoints(spark)
+          released.countDown()
+        }
+      }
+      assert(Await.result(a, 10.minutes).nonEmpty)
+      assert(Await.result(b, 10.minutes) == sequential)
+    } finally pool.shutdown()
+  }
+
+  test("only graft.Checkpoints takes a checkpoint, and nothing reads the context's persisted set") {
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(f => root.relativize(f).toString -> new String(Files.readAllBytes(f), UTF_8)).toSeq
+    assert(sources.size > 20)
+    assert(sources.filter(_._2.contains("localCheckpoint(")).map(_._1) ==
+      Seq("graft/Checkpoints.scala"))
+    assert(sources.filter(_._2.contains("getPersistentRDDs")).map(_._1).isEmpty)
+  }
+
+  for (key <- Seq("sim_mmr_diversify", "graph_louvain_pass"))
+    test(s"$key leaves only its frame's checkpoints, and release frees them") {
+      val before = persisted
+      val (out, _) = leftBehind(graft.SparkEntry.queries(key)(spark, "/root/testdata/sf0.001"))
+      assert(out.count() > 0)
+      graft.Sessions.releaseCheckpoints(spark)
+      // a subset, not equality: an earlier suite's dropped frame may be
+      // cleaned by the ContextCleaner meanwhile
+      assert(persisted.subsetOf(before), s"$key left ${persisted -- before}")
+    }
 
   test("propagation CC leaves only its final labels checkpoint") {
     val (labels, left) = leftBehind(LlmOps.connectedComponents(chain(20)))
@@ -130,7 +193,10 @@ class CheckpointsSpec extends AnyFunSuite {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val start = new CountDownLatch(1)
-      val runs = keys.map(k => Future { start.await(); k -> rows(k) })
+      val runs = keys.map(k => Future {
+        start.await()
+        try k -> rows(k) finally graft.Sessions.releaseCheckpoints(spark)
+      })
       start.countDown()
       val concurrent = Await.result(Future.sequence(runs), 10.minutes).toMap
       keys.foreach(k => assert(concurrent(k) == sequential(k), s"$k rows differ"))

@@ -558,9 +558,9 @@ class GraphSpec extends AnyFunSuite {
     val edges = intra.unionByName(inter)
     // run the SAME 4-round synchronous loop shape inline (the operator
     // is bound to the customer table; this pins the runner's scaling)
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(edges.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val ck = new graft.Checkpoints
+    val sym = ck.pin("sym", edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(edges.select(col("b").as("src"), col("a").as("dst"))))
     var labels = spark.range(n).select(col("id")).withColumn("lbl", col("id"))
     for (_ <- 1 to 4) {
       val winners = sym
@@ -571,12 +571,11 @@ class GraphSpec extends AnyFunSuite {
           Window.partitionBy("id").orderBy(col("c").desc, col("lbl").asc)))
         .filter(col("rn") === 1)
         .select(col("id"), col("lbl").as("wlbl"))
-      labels = labels.join(winners, Seq("id"), "left")
-        .select(col("id"), coalesce(col("wlbl"), col("lbl")).as("lbl"))
-        .localCheckpoint()
+      labels = ck.cycle("labels", labels.join(winners, Seq("id"), "left")
+        .select(col("id"), coalesce(col("wlbl"), col("lbl")).as("lbl")))
     }
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("n")).collect()
-    graft.Sessions.releaseCheckpoints(spark) // free the probe's residue
+    ck.release("sym", "labels") // free the probe's checkpoints
     val inSix = sizes.filter(_.getLong(1) == 6L).map(_.getLong(1)).sum
     assert(inSix > n * 8 / 10, s"only $inSix of $n vertices in exact 6-communities")
     assert(sizes.map(_.getLong(1)).max <= 12L)
